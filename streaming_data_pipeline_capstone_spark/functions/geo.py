@@ -38,11 +38,16 @@ def wkt_point_lonlat(position: Column | str) -> Column:
     killing the stage on one bad record; at 100 TB that is unacceptable).
     Mirrors ``from_json`` PERMISSIVE semantics.
 
-    Deliberately zero higher-order functions: filter pushdown substitutes
-    this expression into every bbox predicate (4×), and interpreted
-    transform/filter/exists made each duplicated evaluation ~10 µs/row —
-    the native split/element_at/try_cast form is codegen'd and cheap even
-    when Catalyst duplicates it.
+    Filter pushdown and CollapseProject copy this expression into every
+    consumer of lon and lat (30 ``regexp_replace`` nodes in entry point B's
+    plan). A caller that reads the result more than once evaluates it
+    behind a Generate barrier, ``explode(array(wkt_point_lonlat(...)))``,
+    so it runs once per row: see ``plans.preprocess.preprocess_positions``,
+    and ``schemas.decode_json_envelope`` for the same idiom on
+    ``from_json``. A null or malformed position still yields that one row,
+    with a null array. No higher-order functions: interpreted
+    transform/filter/exists cost ~10 µs/row, while split/element_at/try_cast
+    is codegen'd.
     """
     cleaned = F.trim(F.regexp_replace(_c(position), "[a-zA-Z()]", ""))
     parts = F.split(cleaned, r"\s+")

@@ -75,6 +75,17 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     )
 
 
+# F.transform passes (element, index) to a two-parameter lambda, so a
+# ``lambda x, _s=s: ...`` default binding silently becomes the array index;
+# bind the loop value through a one-parameter closure instead.
+def _seeded_md5(seed: int):
+    return lambda sh: F.md5(F.concat(F.lit(f"{seed}|"), sh))
+
+
+def _hex_chunk(chunk: int):
+    return lambda digest: F.substring(digest, chunk * 8 + 1, 8)
+
+
 def minhash_signatures(
     sets_df: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
 ) -> DataFrame:
@@ -92,34 +103,27 @@ def minhash_signatures(
     doc-keyed aggregation: a corpus-shingle-occurrence-sized exchange
     (~100 bytes x occurrences at any scale) for values that never needed
     to leave their row (guide §2.4 "remove shuffles outright").
-    Bit-identical: shingle arrays are non-empty by construction
-    (shingles_from_tokens falls back to the whole text below n tokens),
-    min over lexicographic hex strings is the same reduction either way,
+    Bit-identical: a doc with a null or empty shingle array (null text)
+    is dropped, as the explode dropped it, instead of getting all-null
+    signatures that would collide in every LSH band; min over
+    lexicographic hex strings is the same reduction either way,
     and the digest arrays are projected into columns before the per-chunk
     mins so each md5 runs once per shingle (the CSE-across-lambdas
     boundary CollapseProject keeps for non-cheap multiply-referenced
     expressions — the shingle_sets lesson).
     """
     n_seeds = (num_hashes + 3) // 4
-    with_h = sets_df.select(
+    with_h = sets_df.filter(F.size("shingles") > 0).select(
         "doc",
         *[
-            F.transform(
-                "shingles",
-                lambda sh, _s=s: F.md5(F.concat(F.lit(f"{_s}|"), sh)),
-            ).alias(f"h{s}")
+            F.transform("shingles", _seeded_md5(s)).alias(f"h{s}")
             for s in range(n_seeds)
         ],
     )
     return with_h.select(
         "doc",
         *[
-            F.array_min(
-                F.transform(
-                    f"h{i // 4}",
-                    lambda d, _i=i: F.substring(d, (_i % 4) * 8 + 1, 8),
-                )
-            ).alias(f"mh{i}")
+            F.array_min(F.transform(f"h{i // 4}", _hex_chunk(i % 4))).alias(f"mh{i}")
             for i in range(num_hashes)
         ],
     )

@@ -49,28 +49,34 @@ def preprocess_positions(
     Mirrors reference preprocess.py:42-65 with the dormant cleaning steps
     turned on. Output schema = AIS_PROCESSED_SCHEMA (+ true_heading kept
     nulled-if-sentinel for downstream features).
+
+    The WKT position is parsed once per row:
+    ``explode(array(wkt_point_lonlat(position)))`` is a Generate, an
+    optimizer barrier, so the bbox Filter and the ECEF Project above it
+    read the generated ``[lon, lat]`` instead of each getting its own copy
+    of the parse. ``decode_json_envelope`` uses the same idiom for
+    ``from_json``. A null or malformed position yields one row with a null
+    ``[lon, lat]``, which the bbox filter drops.
     """
     df = wire
     if message_type_filter:
         df = df.filter(F.col("message_type").isin(*POSITION_MESSAGE_TYPES))
 
-    coords = wkt_point_lonlat("position")
     df = (
         df.select(
             "timestamp_utc",
             "mmsi",
-            "position",
             "speed_over_ground",
             "course_over_ground",
             "true_heading",
             "rate_of_turn",
+            F.explode(F.array(wkt_point_lonlat("position"))).alias("lonlat"),
         )
-        .withColumn("longitude", coords.getItem(0))
-        .withColumn("latitude", coords.getItem(1))
+        .withColumn("longitude", F.col("lonlat").getItem(0))
+        .withColumn("latitude", F.col("lonlat").getItem(1))
         .filter(bbox_filter("latitude", "longitude"))
         .withColumn("cartesian_x", ecef_x("longitude", "latitude"))
         .withColumn("cartesian_y", ecef_y("longitude", "latitude"))
-        .drop("position")
         .withColumn("timestamp_utc", parse_ts_z("timestamp_utc"))
         .withColumn("true_heading", null_sentinels("true_heading", HEADING_NOT_AVAILABLE))
         .withColumn("rate_of_turn", null_sentinels("rate_of_turn", ROT_NOT_AVAILABLE))

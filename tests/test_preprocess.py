@@ -112,3 +112,90 @@ def test_kinematic_aggs_windows(spark):
     assert out[(59, 1)] == 15.0
     assert out[(0, 2)] == 20.0
     assert out[(1, 3)] == 30.0
+
+
+def _plan_nodes(plan):
+    """(nodeName, own expressions) of a JVM logical plan, root first."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        out.append((node.nodeName(), node.simpleString(10_000)))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return out
+
+
+def _assert_parse_once(plan):
+    nodes = _plan_nodes(plan)
+    assert sum(s.count("from_json(") for _, s in nodes) == 1
+    parse_nodes = [i for i, (_, s) in enumerate(nodes) if "regexp_replace(" in s]
+    assert len(parse_nodes) == 1, [nodes[i][0] for i in parse_nodes]
+    (at,) = parse_nodes
+    assert nodes[at][0] == "Generate"
+    for name, s in nodes[:at]:
+        if name in ("Filter", "Project"):
+            assert "position#" not in s, s
+
+
+def test_preprocess_parses_each_value_once(spark, tmp_path):
+    """Entry point B's optimized plan holds one from_json and one WKT parse.
+
+    Both sit in a Generate (``inline``/``explode`` of a one-element array),
+    so filter pushdown and CollapseProject cannot copy them into the bbox
+    Filter and the ECEF Project above (30 ``regexp_replace`` nodes spread
+    over Filter and Project without the barrier). The streaming plan is
+    the one a micro-batch actually ran."""
+    batch = spark.createDataFrame([("{}",)], "value string")
+    _assert_parse_once(preprocess_from_envelope(batch)._jdf.queryExecution().optimizedPlan())
+
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "part.txt").write_text("{}\n")
+    stream = spark.readStream.format("text").load(str(tmp_path / "in"))
+    q = (
+        preprocess_from_envelope(stream)
+        .writeStream.format("memory")
+        .queryName("preprocess_parse_once")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        _assert_parse_once(q._jsq.streamingQuery().lastExecution().optimizedPlan())
+    finally:
+        q.stop()
+
+
+def test_preprocess_malformed_positions_dropped(spark):
+    """The parse barrier keeps the drop semantics: a null or malformed
+    position yields a null [lon, lat] that the bbox filter drops; extra
+    whitespace still parses."""
+    positions = {
+        1: None,
+        2: "POINT()",
+        3: "POINT(1)",
+        4: "POINT(a b)",
+        5: "POINT(110.5   15.25)",
+        6: "POINT( 111.0 16.0 )",
+        7: "POINT(130.0 15.0)",  # outside the bbox
+        8: "POINT(110.0 15.0 3.0)",
+        9: "POINT(110.5 15.25)",
+    }
+    wire = _wire_df(spark, [_wire_row(mmsi=m, position=p) for m, p in positions.items()])
+    expected = [(5, 110.5, 15.25), (6, 111.0, 16.0), (9, 110.5, 15.25)]
+    got = sorted(
+        (r.mmsi, r.longitude, r.latitude) for r in preprocess_positions(wire).collect()
+    )
+    assert got == expected
+
+    import json
+
+    names = [f.name for f in AIS_WIRE_SCHEMA.fields]
+    env = spark.createDataFrame(
+        [(json.dumps(dict(zip(names, r, strict=True))),) for r in wire.collect()],
+        "value string",
+    )
+    got = sorted(
+        (r.mmsi, r.longitude, r.latitude) for r in preprocess_from_envelope(env).collect()
+    )
+    assert got == expected
