@@ -21,8 +21,6 @@ because md5 is uniform on the first bytes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -312,10 +310,8 @@ def simhash_bits(text_col: Column | str, nibbles: int = 16) -> Column:
 # Size gate for the driver union-find fast path below: the same
 # size-switched-algorithm convention as Spark's own broadcast-join
 # threshold. 1M edges ≈ tens of MB of Python tuples — far inside the
-# driver budget; override via env for other deployments.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
-)
+# driver budget; callers pass ``driver_max_edges`` to change it.
+_CC_DRIVER_MAX_EDGES = 1_000_000
 
 
 def _union_find_components(rows) -> dict:
@@ -363,8 +359,8 @@ def connected_components(
     broadcast-join-threshold convention — pick the algorithm by measured
     size, not hope):
 
-    - ``≤ driver_max_edges`` (default 1M, env
-      ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``): persist the pair list, count
+    - ``≤ driver_max_edges`` (default 1M,
+      ``_CC_DRIVER_MAX_EDGES``): persist the pair list, count
       it (ONE fully-parallel execution of the pair chain), and collect
       from cache for a driver union-find — the verified near-dup pair
       set is a tiny fraction of any corpus, and the distributed fixpoint

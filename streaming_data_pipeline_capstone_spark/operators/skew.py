@@ -21,7 +21,6 @@ never the logical answer.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -115,9 +114,7 @@ def skewed_collect_list(
 #      round-robin repartitioned. Shuffling < 64 MB is trivial on any
 #      deployment, and sortBeforeRepartition (Spark default) keeps the
 #      assignment deterministic under task retries.
-_SPREAD_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES", str(64 * 1024 * 1024))
-)
+_SPREAD_MAX_BYTES = 64 * 1024 * 1024
 
 
 def spread_small_input(

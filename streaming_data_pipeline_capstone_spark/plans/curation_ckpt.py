@@ -24,8 +24,8 @@ This module IS that execution shape (VERDICT r8 ask #3):
   (pinned by tests/test_curation_pipeline.py), because every stage is
   the same query — only the execution boundaries moved.
 
-`tools/funnel_ckpt.py` runs both shapes side by side and records the
-wall/IO comparison artifact (FUNNEL_CKPT_r09.json).
+A round-9 side-by-side run of both shapes at sf0.1 (FUNNEL_CKPT_r09.json,
+in git history) measured the wall/IO comparison.
 
 Parity note: extends SURVEY §2.11 — no reference twin; the reference has
 no corpus-curation stage. The checkpoint-between-jobs shape is the

@@ -1044,49 +1044,21 @@ def text_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUDGET = 512
 
 
-def _bucket_width_from_bounds(spark: SparkSession, lo, hi) -> int:
-    """Bucket width for the hierarchical prefix sum from known doc_id
-    bounds, sized so ~4 buckets exist per executor core. More buckets
+def _doc_bucket_width(spark: SparkSession, sf_dir: str) -> int:
+    """doc_id bucket width for the hierarchical prefix sum: one cheap
+    single-column agg over `documents` (parquet stats make this a nearly
+    free scan) sized so ~4 buckets exist per executor core. More buckets
     only add metadata rows; the width can't change bin output, only the
-    parallelism of the within-bucket windows (bin_id is an exact integer
-    prefix sum, associatively regrouped — width-invariant, pinned by
-    tests/test_curation_pipeline.py)."""
+    parallelism of the within-bucket windows."""
     import math
 
-    if lo is None or hi is None:  # empty input: any width packs 0 rows
-        return 1
-    target = max(32, 4 * spark.sparkContext.defaultParallelism)
-    return max(1, math.ceil((hi - lo + 1) / target))
-
-
-def _doc_bucket_width(spark: SparkSession, sf_dir: str) -> int:
-    """doc_id bucket width from one cheap single-column agg over
-    `documents` (parquet stats make this a nearly free scan)."""
     bounds = (
         read_table(spark, sf_dir, "documents")
         .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
         .head()
     )
-    return _bucket_width_from_bounds(spark, bounds["lo"], bounds["hi"])
-
-
-def _persist_with_bucket_width(
-    spark: SparkSession, t: DataFrame
-) -> tuple[DataFrame, int]:
-    """Scoped-persist a (doc_id, lang, n_tok) pack input and return it with
-    its bucket width — materialization and the width bounds in ONE job
-    (guide §5: the funnels previously paid an eager count PLUS a separate
-    base-table bounds scan; the bounds agg over the persisting frame
-    populates the cache exactly like the eager count did, so the
-    racing-consumers hazard the eager flag existed for stays closed).
-    Width from the frame's OWN bounds instead of the base table's: bin_id
-    is width-invariant (see _bucket_width_from_bounds), only the
-    within-bucket window parallelism moves."""
-    from streaming_data_pipeline_capstone_spark.cache import scoped_persist
-
-    t = scoped_persist(t)
-    bounds = t.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).head()
-    return t, _bucket_width_from_bounds(spark, bounds["lo"], bounds["hi"])
+    target = max(32, 4 * spark.sparkContext.defaultParallelism)
+    return max(1, math.ceil((bounds["hi"] - bounds["lo"] + 1) / target))
 
 
 def _pack_bins(t: DataFrame, bucket_width: int, budget: int = _PACK_BUDGET) -> DataFrame:
@@ -1280,64 +1252,22 @@ def _curation_ctes(plant: bool = False) -> str:
     """
 
 
-def _stage_verdicts(
-    spark: SparkSession, sf_dir: str, plant: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The funnel's three arm frames: (dd keep-list, quality verdicts,
-    contaminated doc_id set — the decontam arm eagerly scoped-persisted).
-
-    The dedup arm's build is DRIVER-BLOCKING (connected_components' gate
-    runs the whole pair chain via count + collect before the keep-list
-    frame exists), while the decontam arm is pure executor work with no
-    dependency on it — so the two run CONCURRENTLY from driver threads
-    (guide §2.6: actions are only sequential because driver code calls
-    them sequentially; the decontam persist's tasks back-fill executors
-    the CC stages leave idle). The contaminated set is the arm's tiny
-    OUTPUT (ids of contaminated docs only), so the persist holds a
-    keep-list-sized frame, never corpus text; consumers (the survivor
-    materialization, the report's one-pass agg) read the cache instead
-    of re-running the gram join. The quality arm stays lazy: it is a
-    scan-shaped projection the consumer's own action parallelizes.
-
-    Measured (sf0.1, warm, idle): CC build 3.0-3.7 s and decontam chain
-    1.8 s serial before; overlapped they cost max(), not sum()."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    from streaming_data_pipeline_capstone_spark.cache import scoped_persist
-    from streaming_data_pipeline_capstone_spark.queries.quality import (
-        dedup_keep_list,
-    )
-
-    def _dd() -> DataFrame:
-        return dedup_keep_list(spark, sf_dir)
-
-    def _cont() -> DataFrame:
-        c = _decontam(spark, sf_dir, _DECON_N_W8, plant=plant, spread=True).select(
-            "doc_id"
-        )
-        return scoped_persist(c, eager=True)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dd = pool.submit(inheritable_thread_target(_dd))
-        f_cont = pool.submit(inheritable_thread_target(_cont))
-        dd = f_dd.result()
-        cont = f_cont.result()
-    qok = quality_filter_composite(spark, sf_dir)
-    return dd, qok, cont
-
-
 def _survivors(spark: SparkSession, sf_dir: str, plant: bool = False) -> DataFrame:
     """The funnel's survivor frame. ``plant`` (default OFF) switches the
     decontam stage to the planted-gate input — production callers get the
     natural corpus; registered gate queries pass plant=True."""
+    from streaming_data_pipeline_capstone_spark.queries.quality import (
+        dedup_keep_list,
+    )
+
     docs = read_table(spark, sf_dir, "documents")
-    dd, qok, cont = _stage_verdicts(spark, sf_dir, plant=plant)
+    dd = dedup_keep_list(spark, sf_dir).filter("keep").select("doc_id")
+    qok = quality_filter_composite(spark, sf_dir).filter("keep").select("doc_id")
+    cont = _decontam(spark, sf_dir, _DECON_N_W8, plant=plant, spread=True).select("doc_id")
     return (
         docs.filter(F.col("doc_id") % _EVAL_MOD != 0)
-        .join(dd.filter("keep").select("doc_id"), "doc_id")
-        .join(qok.filter("keep").select("doc_id"), "doc_id")
+        .join(dd, "doc_id")
+        .join(qok, "doc_id")
         .join(cont, "doc_id", "left_anti")
     )
 
@@ -1361,16 +1291,19 @@ def curation_funnel_bins(
     # verdicts are checkpointed parquet between jobs (demonstrated by
     # plans/curation_ckpt.py, pinned row-identical to this query).
     #
-    # The bounds agg populates the cache immediately (the r15 eager flag's
-    # job): without that, the bucket-offsets broadcast job and the main
-    # stages race to materialize the same InMemoryRelation and the
-    # survivor chain can execute twice concurrently (measured: up to 2x
-    # wall at sf1). scoped_persist: released when the next registry query
-    # builds, so a long-lived session doesn't accumulate survivor caches
-    # (r11 ask #7). r16: the width bounds ride the SAME materializing job
-    # (previously: eager count + a separate base-table bounds scan).
-    surv, width = _persist_with_bucket_width(spark, surv)
-    binned = _pack_bins(surv, width)
+    # The eager flag populates the cache immediately: without it, the
+    # bucket-offsets broadcast job and the main stages race to
+    # materialize the same InMemoryRelation and the survivor chain can
+    # execute twice concurrently (measured: up to 2x wall at sf1).
+    # scoped_persist: released when the next registry query builds, so a
+    # long-lived session doesn't accumulate survivor caches (r11 ask #7).
+    from streaming_data_pipeline_capstone_spark.cache import scoped_persist
+
+    surv = scoped_persist(surv, eager=True)
+    # bucket width derives from the base table's doc_id bounds (a cheap
+    # 1-column scan), NOT the survivor frame — bounds from survivors would
+    # re-run the whole dedup/quality/decontam chain just to size buckets.
+    binned = _pack_bins(surv, _doc_bucket_width(spark, sf_dir))
     return binned.groupBy("lang", "bin_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tok").alias("tok_total"),
@@ -1440,11 +1373,18 @@ def curation_report_frame(
     pipeline runs, where stage verdicts are computed once and every
     downstream consumer (the funnel report included) reads the same
     frames."""
+    from streaming_data_pipeline_capstone_spark.queries.quality import (
+        dedup_keep_list,
+    )
+
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    dd, qok, cont = _stage_verdicts(spark, sf_dir, plant=plant)
-    dd = dd.withColumnRenamed("keep", "keep_dd")
-    qok = qok.select("doc_id", F.col("keep").alias("keep_q"))
-    cont = cont.withColumn("contam", F.lit(True))
+    dd = dedup_keep_list(spark, sf_dir).withColumnRenamed("keep", "keep_dd")
+    qok = quality_filter_composite(spark, sf_dir).select(
+        "doc_id", F.col("keep").alias("keep_q")
+    )
+    cont = _decontam(spark, sf_dir, _DECON_N_W8, plant=plant, spread=True).select(
+        "doc_id", F.lit(True).alias("contam")
+    )
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     j = (
         docs.join(dd, "doc_id")
@@ -1530,11 +1470,11 @@ def dsir_curation_bins(
     sel = _dsir_selected_survivors(spark, sf_dir, plant=plant)
     # the selected set is k rows; persist so the pack's two prefix-sum
     # passes read it instead of re-running the funnel + weights chain
-    # (scoped: the registry releases it when the next query builds).
-    # r16: the width bounds ride the materializing job (see
-    # _persist_with_bucket_width — bin_id is width-invariant).
-    sel, width = _persist_with_bucket_width(spark, sel)
-    binned = _pack_bins(sel, width)
+    # (scoped: the registry releases it when the next query builds)
+    from streaming_data_pipeline_capstone_spark.cache import scoped_persist
+
+    sel = scoped_persist(sel, eager=True)
+    binned = _pack_bins(sel, _doc_bucket_width(spark, sf_dir))
     return binned.groupBy("lang", "bin_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tok").alias("tok_total"),

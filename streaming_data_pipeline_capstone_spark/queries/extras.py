@@ -2185,8 +2185,7 @@ def multi_topk_ivfpq(
 def sim_topk_ivfpq_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched ANN serving: exact-cosine top-10 per query for the 3-query
     batch through ONE pruned IVF-PQ + rerank pass — (query_id, vec_id,
-    cosine_sim, rank). The gate instance of :func:`multi_topk_ivfpq`
-    (tools/bench_ann_batch.py runs the same plan at Q=32)."""
+    cosine_sim, rank). The gate instance of :func:`multi_topk_ivfpq`."""
     return multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS)
 
 

@@ -75,21 +75,11 @@ def get_spark(
         # overhead in any deployment, measured 2-3x of the serving-probe
         # build walls (sim_topk_ivfpq_filtered build 1.76 → 0.69 s). It
         # only enriches error messages with Python call sites; re-enable
-        # via env when debugging.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        # through ``extra_conf`` when debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    # Large streaming state (per-key state at 100M+ keys) wants RocksDB
-    # instead of the default in-heap HDFS-backed provider: incremental
-    # checkpoints, state larger than executor heap. Opt-in so small local
-    # runs keep the zero-dependency default.
-    if os.environ.get("SPARK_GRAFT_ROCKSDB", "").lower() in ("1", "true"):
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    # Other settings, e.g. the RocksDB state store provider for large
+    # streaming state, come in through ``extra_conf``.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

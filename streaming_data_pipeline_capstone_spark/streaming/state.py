@@ -248,88 +248,3 @@ def gap_fill_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# T5 (Spark 4 API): last-K per key via transformWithStateInPandas
-# ---------------------------------------------------------------------------
-def last_k_per_key_stream_tws(
-    stream_df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_cols: list[str],
-    k: int = 3,
-) -> DataFrame:
-    """`last_k_per_key_stream` on Spark 4's transformWithState API.
-
-    Same semantics as the applyInPandasWithState form above; the new API
-    trades the single opaque state struct for TYPED state primitives —
-    here a ListState of (ts, values) rows, bounded at K per key — plus
-    optional TTL and timers, and requires the RocksDB state store
-    provider (`spark.sql.streaming.stateStore.providerClass`). Kept
-    alongside the classic form: same shuffle shape (one exchange on the
-    key), same bounded state, newer engine surface.
-
-    Environment note: the TWS state protocol needs ``google.protobuf`` in
-    the Python workers (absent in this sandbox, present on normal
-    clusters); its test skips with that reason when the import fails.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_field = stream_df.schema[key]
-    value_fields = [stream_df.schema[c] for c in value_cols]
-    out_schema = T.StructType(
-        [
-            key_field,
-            T.StructField(ts_col, T.TimestampType()),
-            *value_fields,
-            T.StructField("rn", T.IntegerType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            *[T.StructField(f"v_{f.name}", f.dataType) for f in value_fields],
-        ]
-    )
-
-    # NOTE: no type annotations on the processor methods — this module has
-    # `from __future__ import annotations`, which stringifies them, and
-    # stringified annotations break the TWS driver worker's introspection
-    # (same failure family as pandas_udf under future-annotations).
-    class LastKProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getListState("lastk", state_schema)
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            entries = (
-                [tuple(r) for r in self._state.get()] if self._state.exists() else []
-            )
-            for pdf in rows:
-                ts_us = pdf[ts_col].astype("datetime64[us]").astype("int64").tolist()
-                cols = [pdf[c].tolist() for c in value_cols]
-                entries.extend(zip(ts_us, *cols))
-            entries.sort(key=lambda t: t[0], reverse=True)
-            entries = entries[:k]
-            self._state.put(entries)
-            yield pd.DataFrame(
-                {
-                    key: [key_tuple[0]] * len(entries),
-                    ts_col: pd.to_datetime([e[0] for e in entries], unit="us"),
-                    **{
-                        c: [e[i + 1] for e in entries]
-                        for i, c in enumerate(value_cols)
-                    },
-                    "rn": list(range(1, len(entries) + 1)),
-                }
-            )
-
-        def close(self):
-            pass
-
-    return stream_df.groupBy(key).transformWithStateInPandas(
-        LastKProcessor(), out_schema, "Update", "None"
-    )

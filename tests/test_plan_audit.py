@@ -361,7 +361,7 @@ def plan_stats(spark):
 def test_budget_covers_whole_registry(plan_stats):
     assert set(plan_stats) == set(SHUFFLE_BUDGET), (
         "registry and budget table diverged; re-run "
-        "`python tools/plan_audit.py --all` and update SHUFFLE_BUDGET"
+        "`python tools/plan_audit.py` and update SHUFFLE_BUDGET"
     )
 
 

@@ -334,84 +334,6 @@ def test_stateful_restart_carries_state(spark, tmpdir):
     assert got == {(_t(2), 2.0): 1, (_t(1), 1.0): 2, (_t(0), 0.0): 3}
 
 
-def test_last_k_transformwithstate_construct_smoke(spark, tmpdir):
-    """Construction-level check that runs even without protobuf: the TWS
-    plan must build against a real stream with the exact output schema of
-    the classic last-K (proves wiring/schemas; execution is covered by the
-    full test below when protobuf exists)."""
-    from streaming_data_pipeline_capstone_spark.streaming.state import (
-        last_k_per_key_stream_tws,
-    )
-
-    df = _events_df(spark, [(1, _t(0), 1.0)])
-    schema = replay_to_files(df, f"{tmpdir}/replay", num_chunks=1, order_col="ts")
-    stream = stream_from_replay(spark, f"{tmpdir}/replay", schema)
-    out = last_k_per_key_stream_tws(
-        stream, key="user_id", ts_col="ts", value_cols=["value"], k=3
-    )
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["user_id", "ts", "value", "rn"]
-
-
-def test_last_k_transformwithstate_matches_classic(spark, tmpdir):
-    """The Spark-4 transformWithStateInPandas last-K must produce the same
-    final per-key state as the applyInPandasWithState classic across the
-    same 5-micro-batch replay (typed ListState vs opaque struct state).
-
-    ENVIRONMENTAL SKIP: TWS's state-server protocol imports
-    google.protobuf in the streaming driver worker
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py); protobuf is not
-    installed in this container and installs are not permitted — on a
-    normal cluster (protobuf ships with most distros) this test runs."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState requires protobuf, absent in this sandbox",
-    )
-    from streaming_data_pipeline_capstone_spark.streaming.state import (
-        last_k_per_key_stream_tws,
-    )
-
-    rows = [(1, _t(m), float(m)) for m in range(5)] + [
-        (2, _t(m), 10.0 + m) for m in range(5)
-    ]
-    df = _events_df(spark, rows)
-    schema = replay_to_files(df, f"{tmpdir}/replay", num_chunks=5, order_col="ts")
-    stream = stream_from_replay(spark, f"{tmpdir}/replay", schema)
-
-    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocksdb)
-    try:
-        out = last_k_per_key_stream_tws(
-            stream, key="user_id", ts_col="ts", value_cols=["value"], k=3
-        )
-        q = to_memory(out, "last3_tws", output_mode="update")
-        q.awaitTermination(120)
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    final = (
-        spark.table("last3_tws")
-        .groupBy("user_id", "ts", "value")
-        .agg(F.min("rn").alias("rn"))
-    )
-    # last emission per key: ranks 1..3 over the 3 most recent events
-    latest = {
-        (r["user_id"], r["value"]): r["rn"]
-        for r in spark.table("last3_tws")
-        .withColumn("batch_rank", F.monotonically_increasing_id())
-        .orderBy(F.desc("batch_rank"))
-        .collect()[:6]
-    }
-    assert latest == {
-        (1, 4.0): 1, (1, 3.0): 2, (1, 2.0): 3,
-        (2, 14.0): 1, (2, 13.0): 2, (2, 12.0): 3,
-    }
-
-
 def test_stream_stream_interval_join_matches_batch(spark, tmpdir):
     """Two watermarked streams joined on key + event-time interval must
     produce exactly the rows the equivalent batch join produces —

@@ -6,7 +6,7 @@ the sandbox's measured 4x noise band (AB_r05)?  And does the round-6
 explode-projection fix (assign_cells evaluated once per vector, commit
 550ff2e) hold up under the fresh-JVM interleaved methodology?
 
-Method (same discipline as tools/bench_scale.py / AB_r05):
+Method (same discipline as AB_r05):
 
 - two code legs: ``pre`` = a git worktree pinned at the last pre-fix
   commit, ``head`` = this repo;

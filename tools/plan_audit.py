@@ -1,6 +1,8 @@
-"""Physical-plan audit: per headline query, summarize what matters at
+"""Physical-plan audit: per registry query, summarize what matters at
 scale — scan schemas (column pruning), pushed filters, join strategies,
-and exchange (shuffle) counts — and write PLANS.md.
+and exchange (shuffle) counts — and print them as one JSON object.
+tests/test_plan_audit.py holds the budgets these numbers are checked
+against.
 
 Usage: python tools/plan_audit.py [--sf-dir /root/testdata/sf0.1]
 """
@@ -8,6 +10,7 @@ Usage: python tools/plan_audit.py [--sf-dir /root/testdata/sf0.1]
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import re
 import sys
@@ -99,45 +102,17 @@ def audit(df) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--out", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"))
-    ap.add_argument("--all", action="store_true", help="audit every registry query; print JSON stats instead of PLANS.md")
     args = ap.parse_args()
-
-    import bench
 
     spark = get_spark(app_name="plan-audit")
     qs = all_queries()
-
-    if args.all:
-        import json
-
-        stats = {}
-        for name in sorted(qs):
-            try:
-                stats[name] = audit(qs[name](spark, args.sf_dir))
-            except Exception as exc:  # noqa: BLE001 - audit tool, report and move on
-                stats[name] = {"error": str(exc).splitlines()[0]}
-        print(json.dumps(stats, indent=1))
-        spark.stop()
-        return
-    lines = [
-        "# PLANS — physical-plan audit of the headline bench suite",
-        "",
-        f"Generated by `python tools/plan_audit.py` at `{args.sf_dir}`. Scans",
-        "list (columns read, filters pushed); shuffles exclude broadcasts.",
-        "",
-        "| query | scans (cols, pushed) | joins | shuffles |",
-        "|---|---|---|---|",
-    ]
-    for name in bench.BENCH_QUERIES:
-        a = audit(qs[name](spark, args.sf_dir))
-        scans = ", ".join(f"{n} cols{'+filt' if p else ''}" for n, p in a["scans"]) or "—"
-        joins = ", ".join(j.replace("Join", "") for j in a["joins"]) or "—"
-        lines.append(f"| {name} | {scans} | {joins} | {a['shuffles']} |")
-    out = "\n".join(lines) + "\n"
-    with open(args.out, "w") as f:
-        f.write(out)
-    print(out)
+    stats = {}
+    for name in sorted(qs):
+        try:
+            stats[name] = audit(qs[name](spark, args.sf_dir))
+        except Exception as exc:  # noqa: BLE001 - audit tool, report and move on
+            stats[name] = {"error": str(exc).splitlines()[0]}
+    print(json.dumps(stats, indent=1))
     spark.stop()
 
 
