@@ -3,15 +3,12 @@ predict_path.py) — plus the declared-but-unbuilt feature/scoring stage.
 
 The reference's intent (SURVEY §3.3, recovered from broken T-SQL):
 consume the kinematic stream, maintain the 3 most recent positions per
-vessel across micro-batches, persist snapshots. Implemented here two ways:
-
-- ``recent_positions_stream``: executor-side keyed state
-  (applyInPandasWithState) — the 100 TB design
-- ``recent_positions_foreachbatch``: foreachBatch + parquet-backed state
-  table — the compatibility twin of the reference's global-temp-view
-  loop, kept because foreachBatch upsert is a capability in its own
-  right (S6); unlike the reference it rewrites state atomically and
-  without driver-resident data
+vessel across micro-batches, persist snapshots.
+``recent_positions_stream`` does this as one JVM streaming aggregate
+(``streaming.state.last_k_per_key_stream``): the state lives in the
+executors' state store, each micro-batch writes and emits only the
+vessels it touched, and no Python runs in the micro-batch. Its batch
+twin is ``operators.windows.last_k_per_key``.
 
 Feature stage: per-vessel step distance (haversine), path angle over the
 last three positions (excluding interpolated points — the provenance
@@ -27,7 +24,6 @@ from pyspark.sql import functions as F
 
 from streaming_data_pipeline_capstone_spark.functions.cleaning import bbox_filter
 from streaming_data_pipeline_capstone_spark.functions.geo import haversine_km, path_angle_deg
-from streaming_data_pipeline_capstone_spark.operators.windows import last_k_per_key
 from streaming_data_pipeline_capstone_spark.streaming.state import last_k_per_key_stream
 
 KINEMATIC_VALUE_COLS = [
@@ -42,40 +38,10 @@ KINEMATIC_VALUE_COLS = [
 
 
 def recent_positions_stream(processed: DataFrame, k: int = 3) -> DataFrame:
-    """Streaming last-K positions per vessel, state on executors."""
+    """Streaming last-K positions per vessel, state in the JVM state store."""
     return last_k_per_key_stream(
         processed, key="mmsi", ts_col="timestamp_utc", value_cols=KINEMATIC_VALUE_COLS, k=k
     )
-
-
-def recent_positions_foreachbatch(
-    state_path: str, k: int = 3
-) -> "callable":
-    """foreachBatch body: merge micro-batch into a parquet state table and
-    prune to K per key (the reference's insert→rank→truncate loop,
-    predict_path.py:59-69, without driver-side state).
-
-    Returns a function suitable for streaming/sinks.py:for_each_batch.
-    """
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            state = spark.read.parquet(state_path)
-            merged = state.unionByName(batch.drop("rn") if "rn" in batch.columns else batch)
-        except Exception:  # first batch: no state yet
-            merged = batch
-        pruned = last_k_per_key(
-            merged, key="mmsi", order_col="timestamp_utc", k=k, tiebreak=None
-        ).drop("rn")
-        # write-then-swap would be storage-dependent; overwrite is atomic
-        # enough for parquet-dir state at test scale. On a cluster this
-        # state table is Delta/Iceberg MERGE territory.
-        pruned.cache().count()
-        pruned.write.mode("overwrite").parquet(state_path)
-        pruned.unpersist()
-
-    return merge
 
 
 def step_features(positions: DataFrame) -> DataFrame:

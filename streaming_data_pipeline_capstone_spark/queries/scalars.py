@@ -68,12 +68,14 @@ def scalar_wkt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(")"),
         ),
     )
-    coords = wkt_point_lonlat("position")
+    # one parse per row behind a Generate barrier (see wkt_point_lonlat)
     return wkt.select(
+        "event_id", "position", F.explode(F.array(wkt_point_lonlat("position"))).alias("lonlat")
+    ).select(
         "event_id",
         "position",
-        coords.getItem(0).alias("longitude"),
-        coords.getItem(1).alias("latitude"),
+        F.col("lonlat").getItem(0).alias("longitude"),
+        F.col("lonlat").getItem(1).alias("latitude"),
     )
 
 

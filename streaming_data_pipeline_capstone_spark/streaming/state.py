@@ -6,11 +6,12 @@ micro-batch (``predict_path.py:49-70``). That design caps out at one
 driver's memory and serializes every batch through it. Here the same
 semantics run on executors, partitioned by key:
 
-- ``last_k_per_key_stream``: applyInPandasWithState keyed by the vessel/
-  user id. State per key is one tiny struct of arrays (≤ k rows); the
-  micro-batch shuffles once on the key, state lives in the state store
-  (HDFS/RocksDB-backed on a cluster), and a 1000-executor job holds
-  100M+ keys without the driver seeing any of them.
+- ``last_k_per_key_stream``: a JVM streaming aggregate keyed by the
+  vessel/user id, Spark's bounded ``CollectTopK`` in update mode. State
+  per key is one priority queue of ≤ k structs in the state store (HDFS
+  by default, RocksDB through conf); the micro-batch shuffles once on
+  the key, writes and emits only the keys it touched, and runs no
+  Python.
 - ``gap_fill_interpolate``: the declared-but-never-built interpolation
   (reference README.md:46, Mao et al.): synthesize per-key points when
   the inter-event gap exceeds a threshold. The batch form is pure native
@@ -29,9 +30,10 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.column import Column as JvmColumn
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -48,69 +50,43 @@ def last_k_per_key_stream(
     """Streaming 'keep the K most recent rows per key'.
 
     Output (update semantics): after each micro-batch, the current top-K
-    rows for every key that changed. State schema: parallel arrays of
-    epoch-micros and values — bounded at K entries per key.
+    rows of every key that batch touched, ``rn`` = 1 (newest) .. K.
+
+    A JVM streaming aggregate, no Python in the micro-batch:
+    ``groupBy(key).agg(collect_top_k(struct(ts, *values), k))``, then a
+    ``posexplode`` into ranked rows. The aggregation buffer is Spark's
+    bounded priority queue, so the state store holds at most K structs
+    per key. ``ts`` is the struct's first field, so the K largest structs
+    are the K newest rows.
+
+    Timestamp ties are broken by the value columns, in order (the larger
+    struct ranks first), so the result does not depend on arrival order;
+    the earlier pandas state kept arrival order instead. A Spark without
+    ``CollectTopK`` fails when this is called: there is no second path.
     """
-    key_field = stream_df.schema[key]
-    value_fields = [stream_df.schema[c] for c in value_cols]
-
-    out_schema = T.StructType(
-        [
-            key_field,
-            T.StructField(ts_col, T.TimestampType()),
-            *value_fields,
-            T.StructField("rn", T.IntegerType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.ArrayType(T.LongType())),
-            *[T.StructField(f"v_{f.name}", T.ArrayType(f.dataType)) for f in value_fields],
-        ]
-    )
-
-    def update(
-        key_tuple: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stored = state.get
-            ts_list = list(stored[0])
-            vals: list[list[Any]] = [list(col) for col in stored[1:]]
-        else:
-            ts_list, vals = [], [[] for _ in value_cols]
-
-        for pdf in batches:
-            ts_us = (pdf[ts_col].astype("datetime64[us]").astype("int64")).tolist()
-            ts_list.extend(ts_us)
-            for i, c in enumerate(value_cols):
-                vals[i].extend(pdf[c].tolist())
-
-        # rank by recency, keep K — the window/rank semantics of
-        # reference predict_path.py:60-66, per key, executor-side
-        order = sorted(range(len(ts_list)), key=lambda i: ts_list[i], reverse=True)[:k]
-        ts_list = [ts_list[i] for i in order]
-        vals = [[v[i] for i in order] for v in vals]
-        state.update((ts_list, *vals))
-
-        out = pd.DataFrame(
-            {
-                key: [key_tuple[0]] * len(ts_list),
-                ts_col: pd.to_datetime(pd.Series(ts_list), unit="us"),
-                **{c: vals[i] for i, c in enumerate(value_cols)},
-                "rn": list(range(1, len(ts_list) + 1)),
-            }
+    top = _collect_top_k(stream_df.sparkSession, F.struct(ts_col, *value_cols), k)
+    return (
+        stream_df.groupBy(key)
+        .agg(top.alias("__top"))
+        .select(key, F.posexplode("__top").alias("__pos", "__row"))
+        .select(
+            key,
+            *[F.col("__row")[c].alias(c) for c in [ts_col, *value_cols]],
+            (F.col("__pos") + 1).alias("rn"),
         )
-        yield out
-
-    return stream_df.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _collect_top_k(spark: SparkSession, struct: Column, k: int) -> Column:
+    """Spark's built-in ``CollectTopK`` aggregate: the ``k`` largest values
+    of ``struct``, largest first. Spark names it in neither SQL nor the
+    DataFrame API, so it is built through the JVM gateway."""
+    jvm = spark._jvm
+    utils = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    agg = jvm.org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK(
+        utils.expression(struct._jc), k, False
+    )
+    return JvmColumn(utils.column(agg))
 
 
 # ---------------------------------------------------------------------------

@@ -166,6 +166,17 @@ def test_preprocess_parses_each_value_once(spark, tmp_path):
         q.stop()
 
 
+def test_scalar_wkt_extract_parses_each_value_once(spark, sf_smoke):
+    """``scalar_wkt_extract`` reads longitude and latitude from one parse:
+    every ``regexp_replace`` of its optimized plan sits in one Generate
+    (without the barrier the Project holds one copy per coordinate)."""
+    from streaming_data_pipeline_capstone_spark.queries.scalars import scalar_wkt_extract
+
+    nodes = _plan_nodes(scalar_wkt_extract(spark, sf_smoke)._jdf.queryExecution().optimizedPlan())
+    parse_nodes = [name for name, s in nodes if "regexp_replace(" in s]
+    assert parse_nodes == ["Generate"], parse_nodes
+
+
 def test_preprocess_malformed_positions_dropped(spark):
     """The parse barrier keeps the drop semantics: a null or malformed
     position yields a null [lon, lat] that the bbox filter drops; extra

@@ -73,6 +73,112 @@ def test_last_k_state_across_batches(spark, tmpdir):
     }
 
 
+def _write_chunks(spark, path, chunks):
+    """One parquet file per chunk, mtimes ascending: chunk i is micro-batch
+    i of ``stream_from_replay``, rows inside a chunk in the given order."""
+    import os
+
+    for i, rows in enumerate(chunks):
+        _events_df(spark, rows).coalesce(1).write.parquet(f"{path}/chunk={i:05d}")
+    base = int(os.stat(path).st_mtime)
+    for i in range(len(chunks)):
+        cdir = f"{path}/chunk={i:05d}"
+        for fname in os.listdir(cdir):
+            os.utime(f"{cdir}/{fname}", (base + i, base + i))
+    return _events_df(spark, [r for rows in chunks for r in rows])
+
+
+def test_last_k_state_disorder_matches_batch_twin(spark, tmpdir):
+    """Disorder inside and across micro-batches. Batch 0: rows out of
+    order per key, and a timestamp tie at the K boundary (broken by
+    value). Batch 1: an older row for key 1 after three newer ones is
+    ignored; key 3 is absent and not re-emitted. Batch 2: a row lands
+    between key 1's ranks and reorders ``rn``. The last emission per key
+    equals the batch twin ``last_k_per_key`` over all rows."""
+    from streaming_data_pipeline_capstone_spark.operators.windows import last_k_per_key
+
+    chunks = [
+        [
+            (1, _t(5), 5.0), (2, _t(0), 20.0), (1, _t(1), 1.0), (3, _t(4), 31.0),
+            (1, _t(3), 3.0), (3, _t(4), 32.0), (3, _t(5), 30.0), (1, _t(2), 2.0),
+            (3, _t(4), 33.0),
+        ],
+        [(2, _t(7), 27.0), (1, _t(0), 0.0), (2, _t(6), 26.0)],
+        [(1, _t(4), 4.0)],
+    ]
+    all_rows = _write_chunks(spark, f"{tmpdir}/replay", chunks)
+    stream = stream_from_replay(spark, f"{tmpdir}/replay", all_rows.schema)
+
+    emitted: dict[int, dict[int, list]] = {}
+
+    def sink(batch, epoch_id):
+        per_key: dict[int, list] = {}
+        for r in sorted(batch.collect(), key=lambda r: (r.user_id, r.rn)):
+            per_key.setdefault(r.user_id, []).append((r.ts, r.value, r.rn))
+        emitted[epoch_id] = per_key
+
+    out = last_k_per_key_stream(stream, key="user_id", ts_col="ts", value_cols=["value"], k=3)
+    for_each_batch(out, sink, f"{tmpdir}/ckpt", available_now=True).awaitTermination(120)
+
+    assert sorted(emitted) == [0, 1, 2]
+    assert {e: sorted(keys) for e, keys in emitted.items()} == {0: [1, 2, 3], 1: [1, 2], 2: [1]}
+    key1 = [(_t(5), 5.0, 1), (_t(3), 3.0, 2), (_t(2), 2.0, 3)]
+    assert emitted[0][1] == key1 and emitted[1][1] == key1  # t0 arrived too old
+    assert emitted[0][3] == [(_t(5), 30.0, 1), (_t(4), 33.0, 2), (_t(4), 32.0, 3)]
+    assert emitted[2][1] == [(_t(5), 5.0, 1), (_t(4), 4.0, 2), (_t(3), 3.0, 3)]
+
+    final = {}
+    for epoch in sorted(emitted):
+        final.update(emitted[epoch])
+    twin: dict[int, list] = {}
+    rows = last_k_per_key(all_rows, key="user_id", order_col="ts", k=3, tiebreak="value")
+    for r in sorted(rows.collect(), key=lambda r: (r.user_id, r.rn)):
+        twin.setdefault(r.user_id, []).append((r.ts, r.value, r.rn))
+    assert final == twin
+
+
+def test_recent_positions_plan_is_one_jvm_state_store(spark, tmpdir):
+    """Entry C's micro-batch plan keeps its state in one JVM stateful
+    aggregate: exactly one StateStoreSave, and no Python exec anywhere
+    (no FlatMapGroupsInPandasWithState, pandas or Python UDF node)."""
+    import json
+    import os
+
+    from streaming_data_pipeline_capstone_spark.plans.predict import recent_positions_stream
+    from streaming_data_pipeline_capstone_spark.plans.preprocess import preprocess_from_envelope
+    from streaming_data_pipeline_capstone_spark.schemas import AIS_WIRE_SCHEMA
+
+    fields = [f.name for f in AIS_WIRE_SCHEMA.fields]
+    msg = dict(zip(fields, (
+        "2021-04-05 10:00:00Z", 229906000, "POINT(110.5 15.25)", 0.0,
+        10.0, 90.0, 1, "src", 1, 0, 0, "V", "Cargo", 30, 90.0, 2.0, 0,
+    ), strict=True))
+    os.makedirs(f"{tmpdir}/in")
+    with open(f"{tmpdir}/in/part.txt", "w") as fh:
+        fh.write(json.dumps(msg) + "\n")
+    stream = spark.readStream.format("text").load(f"{tmpdir}/in")
+    q = to_memory(
+        recent_positions_stream(preprocess_from_envelope(stream)),
+        "recent_positions_plan",
+        output_mode="update",
+        available_now=True,
+    )
+    try:
+        q.awaitTermination(120)
+        assert spark.table("recent_positions_plan").count() == 1
+        nodes, todo = [], [q._jsq.streamingQuery().lastExecution().executedPlan()]
+        while todo:
+            node = todo.pop()
+            nodes.append((node.nodeName(), node.getClass().getName()))
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    finally:
+        q.stop()
+    assert [n for n, _ in nodes].count("StateStoreSave") == 1, nodes
+    python = [n for n, cls in nodes if ".execution.python." in cls or "Python" in n]
+    assert python == [], python
+
+
 def test_gap_fill_stream_interpolates(spark, tmpdir):
     """Gap of 5 min with 60 s step → 4 synthetic points, linearly blended,
     flagged is_interpolated=1; state carries across micro-batches."""
@@ -139,29 +245,6 @@ def test_watermark_drops_late_events(spark, tmpdir):
     run(stream_from_replay(spark, f"{tmpdir}/replay", schema))
     out2 = {r.ws: (r.total, r.n) for r in spark.read.parquet(f"{tmpdir}/out").collect()}
     assert out2[_t(0)] == (4.0, 2)  # unchanged — late event dropped
-
-
-def test_foreachbatch_state_table(spark, tmpdir):
-    """foreachBatch + parquet state: the reference's insert→rank→truncate
-    loop without driver-resident state (predict_path.py:59-69)."""
-    from streaming_data_pipeline_capstone_spark.plans.predict import (
-        recent_positions_foreachbatch,
-    )
-
-    rows = [(1, _t(m), float(m)) for m in range(5)]
-    df = _events_df(spark, rows).withColumnRenamed("user_id", "mmsi").withColumnRenamed(
-        "ts", "timestamp_utc"
-    )
-    schema = replay_to_files(df, f"{tmpdir}/replay", num_chunks=5, order_col="timestamp_utc")
-    stream = stream_from_replay(spark, f"{tmpdir}/replay", schema)
-
-    merge = recent_positions_foreachbatch(f"{tmpdir}/state", k=3)
-    q = for_each_batch(stream, merge, checkpoint=f"{tmpdir}/ckpt", available_now=True)
-    q.awaitTermination(120)
-
-    state = spark.read.parquet(f"{tmpdir}/state")
-    got = sorted(r.timestamp_utc for r in state.collect())
-    assert got == [_t(2), _t(3), _t(4)]  # exactly last 3 survive
 
 
 def test_checkpoint_restart_resumes(spark, tmpdir):
@@ -294,7 +377,7 @@ def test_last_k_state_on_rocksdb_provider(spark, tmpdir):
 
 
 def test_stateful_restart_carries_state(spark, tmpdir):
-    """applyInPandasWithState across a stop/restart: run 1 sees 2 events,
+    """Keyed last-K state across a stop/restart: run 1 sees 2 events,
     run 2 (same checkpoint) delivers 1 more — the final top-3 must include
     run-1 events, proving keyed state was restored from the state store."""
     rows1 = [(1, _t(0), 0.0), (1, _t(1), 1.0)]

@@ -26,7 +26,7 @@ Methodology:
 
 Usage::
 
-    python tools/ann_recall.py   # writes ANN_RECALL_r09.json
+    python tools/ann_recall.py   # writes .tool_out/ann_recall.json
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ sys.path.insert(0, REPO)
 
 TRAIN_SF_DIR = "/root/testdata/sf0.01"
 EVAL_SF_DIR = "/root/testdata/sf0.1"
-OUT = os.path.join(REPO, "ANN_RECALL_r09.json")
+OUT = os.path.join(REPO, ".tool_out", "ann_recall.json")
 
 N_QUERIES = 20
 TOP_K = 10
@@ -274,6 +274,7 @@ def main() -> None:
             "standard PQ recall lever."
         ),
     }
+    os.makedirs(os.path.dirname(OUT), exist_ok=True)
     with open(OUT, "w") as fh:
         json.dump(artifact, fh, indent=1)
     print(json.dumps(artifact["recall_at_10"], indent=1))

@@ -33,7 +33,7 @@ cosine math as tools/ann_recall.py (shared helpers imported from it).
 
 Usage::
 
-    python tools/ann_recall_realistic.py   # writes ANN_RECALL_r11.json
+    python tools/ann_recall_realistic.py   # writes .tool_out/ann_recall_realistic.json
 """
 
 from __future__ import annotations
@@ -100,7 +100,9 @@ def main() -> None:
         "spilling trades PQ-code storage (96 bits/vector per copy) for "
         "that ceiling, leaving the probed FRACTION unchanged.",
     )
-    ap.add_argument("--out", default=os.path.join(REPO, "ANN_RECALL_r11.json"))
+    ap.add_argument(
+        "--out", default=os.path.join(REPO, ".tool_out", "ann_recall_realistic.json")
+    )
     ap.add_argument(
         "--model-json",
         default=None,
@@ -110,6 +112,7 @@ def main() -> None:
         "that will serve",
     )
     args = ap.parse_args()
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     nprobes = [int(x) for x in args.nprobes.split(",")]
     reranks = [int(x) for x in args.reranks.split(",")]
 

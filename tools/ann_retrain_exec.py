@@ -27,14 +27,14 @@ lifecycle's rebuild leg, run for real against a grown corpus:
    (different tag) are deleted; `-incr` / `-streamed` work dirs keyed
    on the old model hash go with them.
 
-Each step is timed and recorded in one JSON artifact
-(``ANN_RETRAIN_EXEC_r{N}.json``) so the judge can replay the loop.
+Each step is timed and recorded in one JSON artifact (``--out``, by
+default under the git-ignored ``.tool_out/``) so the loop can be replayed.
 
 Usage::
 
     python tools/ann_retrain_exec.py --sf-dir /root/repo/.sf1 \
-        --out ANN_RETRAIN_EXEC_r15.json \
-        --recall-out ANN_RECALL_r15.json
+        --out .tool_out/ann_retrain_exec.json \
+        --recall-out .tool_out/ann_recall_exec.json
 """
 
 from __future__ import annotations
@@ -85,12 +85,14 @@ def main() -> None:
     ap.add_argument("--force", action="store_true")
     ap.add_argument("--skip-recall", action="store_true")
     ap.add_argument(
-        "--out", default=os.path.join(REPO, "ANN_RETRAIN_EXEC.json")
+        "--out", default=os.path.join(REPO, ".tool_out", "ann_retrain_exec.json")
     )
     ap.add_argument(
-        "--recall-out", default=os.path.join(REPO, "ANN_RECALL_EXEC.json")
+        "--recall-out", default=os.path.join(REPO, ".tool_out", "ann_recall_exec.json")
     )
     args = ap.parse_args()
+    for path in (args.out, args.recall_out):
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
 
     from pyspark.sql import functions as F
 
