@@ -22,13 +22,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def equi_join(
-    left: DataFrame, right: DataFrame, on: str | list[str], how: str = "inner"
-) -> DataFrame:
-    """inner/left/right/full/left_semi/left_anti — thin idiomatic wrapper."""
-    return left.join(right, on=on, how=how)
-
-
 def broadcast_join(
     left: DataFrame, small_right: DataFrame, on: str | list[str] | Column, how: str = "inner"
 ) -> DataFrame:

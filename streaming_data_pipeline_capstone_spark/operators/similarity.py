@@ -819,18 +819,6 @@ def lit_double_matrix(rows) -> Column:
     return F.expr("array(" + body + ")")
 
 
-def _sq_dist_to(vec_col: Column, centroid: list[float]) -> Column:
-    # one array Literal, not a dim-wide CreateArray of scalar literals:
-    # assign_cells is rebuilt every Lloyd iteration, so plan-construction
-    # cost scales with iters*k*dim unless centroids enter as single nodes
-    lit = lit_double_array(centroid)
-    return F.aggregate(
-        F.zip_with(vec_col, lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def assign_cells(vec_col: Column, centroids: list[list[float]]) -> Column:
     """Nearest-centroid cell id (0-based) with first-minimum tie-break.
 

@@ -59,17 +59,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(text), n)
 
 
-def char_shingles(text: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of the normalized text (near-dup feature
-    for languages without whitespace segmentation)."""
-    s = F.lower(F.trim(_c(text)))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1))),
-        lambda i: F.substring(s, i, n),
-    )
-    return F.array_distinct(grams)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Share of non-alphanumeric-non-space characters (quality signal)."""
     s = _c(text)

@@ -26,7 +26,6 @@ def last_k_per_key(
     order_col: str,
     k: int = 3,
     tiebreak: str | None = None,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """Keep the ``k`` most recent rows per key (reference predict_path.py:60-66).
 
@@ -39,33 +38,7 @@ def last_k_per_key(
     if tiebreak is not None:
         order.append(F.desc(tiebreak))
     w = Window.partitionBy(*keys).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-
-
-def topk_per_group(
-    df: DataFrame,
-    key: str | list[str],
-    order_exprs: list[Column],
-    k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Generalized top-K per group with explicit ordering expressions."""
-    keys = [key] if isinstance(key, str) else list(key)
-    w = Window.partitionBy(*keys).orderBy(*order_exprs)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-
-
-def rolling_avg_over_partition(
-    df: DataFrame, key: str | list[str], value_cols: list[str], suffix: str = "_avg"
-) -> DataFrame:
-    """Partition-wide average attached to each row (no second shuffle when the
-    data is already exchanged on the key, e.g. after last_k_per_key)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    w = Window.partitionBy(*keys)
-    out = df
-    for c in value_cols:
-        out = out.withColumn(f"{c}{suffix}", F.avg(c).over(w))
-    return out
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def sliding_time_agg(
@@ -74,10 +47,10 @@ def sliding_time_agg(
     key: str | list[str],
     aggs: list[Column],
     window_duration: str = "2 minutes",
-    slide_duration: str | None = "1 minute",
+    slide_duration: str = "1 minute",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Sliding/tumbling event-time window aggregation.
+    """Sliding event-time window aggregation.
 
     The reference's dormant kinematic rollup (``preprocess.py:78-88``):
     2-minute window, 1-minute slide, 5-minute watermark, keyed by mmsi,
@@ -86,37 +59,5 @@ def sliding_time_agg(
     """
     keys = [key] if isinstance(key, str) else list(key)
     src = df.withWatermark(ts_col, watermark) if watermark else df
-    win = (
-        F.window(ts_col, window_duration, slide_duration)
-        if slide_duration
-        else F.window(ts_col, window_duration)
-    )
+    win = F.window(ts_col, window_duration, slide_duration)
     return src.groupBy(win.alias("window"), *keys).agg(*aggs)
-
-
-def lag_deltas(
-    df: DataFrame, key: str, order_col: str, cols: list[str], n: int = 1
-) -> DataFrame:
-    """Previous-row values per key (reference's dormant ``lag`` import,
-    ``preprocess.py:3``; needed by speed-spike repair README.md:50 and the
-    path-angle feature README.md:48)."""
-    w = Window.partitionBy(key).orderBy(order_col)
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{c}_prev{n if n > 1 else ''}", F.lag(c, n).over(w))
-    return out
-
-
-def forward_fill(df: DataFrame, key: str, order_col: str, cols: list[str]) -> DataFrame:
-    """Per-key forward fill: replace nulls with the previous non-null value
-    (reference README.md:50 — "replace sudden speed increase with previous
-    valid recording", the W4 last(ignorenulls) pattern)."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out

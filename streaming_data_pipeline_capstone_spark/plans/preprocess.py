@@ -39,11 +39,7 @@ from streaming_data_pipeline_capstone_spark.schemas import (
 POSITION_MESSAGE_TYPES = (1, 2, 3, 18, 27)
 
 
-def preprocess_positions(
-    wire: DataFrame,
-    message_type_filter: bool = True,
-    decode_rot: bool = False,
-) -> DataFrame:
+def preprocess_positions(wire: DataFrame, decode_rot: bool = False) -> DataFrame:
     """17-column wire frame → 9-column processed kinematic frame.
 
     Mirrors reference preprocess.py:42-65 with the dormant cleaning steps
@@ -58,12 +54,9 @@ def preprocess_positions(
     ``from_json``. A null or malformed position yields one row with a null
     ``[lon, lat]``, which the bbox filter drops.
     """
-    df = wire
-    if message_type_filter:
-        df = df.filter(F.col("message_type").isin(*POSITION_MESSAGE_TYPES))
-
     df = (
-        df.select(
+        wire.filter(F.col("message_type").isin(*POSITION_MESSAGE_TYPES))
+        .select(
             "timestamp_utc",
             "mmsi",
             "speed_over_ground",
@@ -97,17 +90,14 @@ def preprocess_positions(
     )
 
 
-def preprocess_from_envelope(envelope: DataFrame, **kwargs) -> DataFrame:
+def preprocess_from_envelope(envelope: DataFrame, decode_rot: bool = False) -> DataFrame:
     """Kafka-style value bytes → processed frame (the full entry point B)."""
-    return preprocess_positions(decode_json_envelope(envelope, AIS_WIRE_SCHEMA), **kwargs)
+    return preprocess_positions(
+        decode_json_envelope(envelope, AIS_WIRE_SCHEMA), decode_rot=decode_rot
+    )
 
 
-def kinematic_aggs(
-    processed: DataFrame,
-    window_duration: str = "2 minutes",
-    slide_duration: str = "1 minute",
-    watermark: str | None = None,
-) -> DataFrame:
+def kinematic_aggs(processed: DataFrame, watermark: str | None = None) -> DataFrame:
     """The dormant sliding kinematic rollup (reference preprocess.py:78-88).
 
     avg(speed/course/rot) per (2-min window sliding 1 min, mmsi), carrying
@@ -129,7 +119,7 @@ def kinematic_aggs(
         ts_col="timestamp_utc",
         key="mmsi",
         aggs=aggs,
-        window_duration=window_duration,
-        slide_duration=slide_duration,
+        window_duration="2 minutes",
+        slide_duration="1 minute",
         watermark=watermark,
     )

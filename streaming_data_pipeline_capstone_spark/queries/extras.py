@@ -234,7 +234,7 @@ def pipeline_preprocess_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_pipeline_capstone_spark.sources.replay import ais_wire_from_events
 
     events = read_table(spark, sf_dir, "events")
-    wire = ais_wire_from_events(events, lat_base=5.0, lat_mod=20)
+    wire = ais_wire_from_events(events)
     processed = preprocess_from_envelope(wire, decode_rot=True)
     return processed.select(
         "mmsi",

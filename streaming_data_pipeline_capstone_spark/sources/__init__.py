@@ -4,7 +4,6 @@ from streaming_data_pipeline_capstone_spark.sources.readers import (
     read_kafka_batch,
     read_kafka_stream,
     read_rate_stream,
-    read_socket_stream,
     read_stream_files,
     read_table,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "read_kafka_batch",
     "read_kafka_stream",
     "read_rate_stream",
-    "read_socket_stream",
     "read_stream_files",
     "read_table",
 ]

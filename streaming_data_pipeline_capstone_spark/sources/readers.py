@@ -5,8 +5,9 @@ Capability parity with the reference's source surface (SURVEY §2.1):
 - S1 Kafka stream source (reference ``preprocess.py:20``) and its batch twin
 - S3 pipe-delimited headerless CSV (reference ``server.py:47-49``) — read
   distributed with an explicit schema instead of driver-side pandas
-- S4 socket source (dev only; the reference's 900-byte TCP framing protocol
-  is an ops concern and is intentionally dropped)
+- S4 the reference's TCP replay feed is ``sources.replay`` (file-chunk
+  replay into the file-stream source); its 900-byte TCP framing protocol
+  is an ops concern and is intentionally dropped
 - file-stream source (the test-friendly stand-in for Kafka: same unbounded
   semantics, ``availableNow`` trigger for deterministic tests)
 - rate source for load generation (replaces the reference's 100 msg/s
@@ -72,15 +73,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def read_csv_pipe(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = False
-) -> DataFrame:
+def read_csv_pipe(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Pipe-delimited headerless CSV with explicit schema.
 
     Distributed replacement for the reference's driver-side
     ``pd.read_csv(sep="|", names=[...])`` (``server.py:47-49``).
     """
-    return spark.read.csv(path, sep="|", schema=schema, header=header)
+    return spark.read.csv(path, sep="|", schema=schema, header=False)
 
 
 def read_kafka_stream(
@@ -142,16 +141,5 @@ def read_rate_stream(spark: SparkSession, rows_per_second: int = 2800) -> DataFr
     return (
         spark.readStream.format("rate")
         .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
-
-
-def read_socket_stream(spark: SparkSession, host: str = "127.0.0.1", port: int = 1234) -> DataFrame:
-    """Socket source — dev-only parity with the reference's TCP pair
-    (``server.py:76-100`` / ``client.py:11-24``)."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", str(port))
         .load()
     )

@@ -84,27 +84,13 @@ def stream_from_replay(
     )
 
 
-def rate_to_envelope(rate_df: DataFrame) -> DataFrame:
-    """Shape the rate source like a Kafka envelope (value bytes) for
-    load-generation benchmarks at the reference's 2,800 msg/s feed rate."""
-    return rate_df.select(
-        F.to_json(F.struct("timestamp", "value")).cast("binary").alias("value")
-    )
-
-
-def ais_wire_from_events(
-    events: DataFrame,
-    lat_base: float = 7.0,
-    lat_mod: int = 16,
-    lon_base: float = 105.0,
-    lon_mod: int = 18,
-) -> DataFrame:
+def ais_wire_from_events(events: DataFrame) -> DataFrame:
     """Dress the testdata ``events`` table as the reference's AIS wire JSON
     envelope (the ``position_history`` topic's message shape).
 
     Deterministic pseudo lon/lat derive from the integer keys (exact in
-    fp64; defaults sit inside the reference bbox — widen ``lat_base``/
-    ``lat_mod`` to make the bbox filter actually drop rows). Message types
+    fp64). Longitudes sit inside the reference bbox; latitudes span
+    5.5-24.5, so the bbox filter drops the rows outside 7-23. Message types
     cycle through the kept position-report set; AIS "not available"
     sentinels (511 heading, -128 ROT) are injected on a fixed cadence.
     """
@@ -124,8 +110,8 @@ def ais_wire_from_events(
 
     events = spread_small_input(events)
 
-    lon = F.lit(lon_base) + (F.col("user_id") % lon_mod).cast("double") + F.lit(0.25)
-    lat = F.lit(lat_base) + (F.col("event_id") % lat_mod).cast("double") + F.lit(0.5)
+    lon = F.lit(105.0) + (F.col("user_id") % 18).cast("double") + F.lit(0.25)
+    lat = F.lit(5.0) + (F.col("event_id") % 20).cast("double") + F.lit(0.5)
     mt = F.element_at(
         F.array(*[F.lit(t) for t in (1, 2, 3, 18, 27)]),
         (F.col("event_id") % 5 + 1).cast("int"),

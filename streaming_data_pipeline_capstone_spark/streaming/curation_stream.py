@@ -91,99 +91,6 @@ def _fp_bucket(fp, prefix_len: int = _FP_PREFIX_LEN):
     return F.substring(fp, 1, prefix_len)
 
 
-def fp_compaction_due(state_dir: str, max_bucket_files: int | None = None) -> bool:
-    """The compaction RULE applied to the verdict stream's fingerprint
-    index (VERDICT r13 #3): every epoch adds ~1 file per touched bucket;
-    once any bucket holds more than MAX_BUCKET_FILES epoch-files the
-    per-file open/footer overhead dominates the pruned read and it is
-    time to compact."""
-    import os as _os
-
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        MAX_BUCKET_FILES,
-        files_per_bucket_table,
-    )
-
-    limit = MAX_BUCKET_FILES if max_bucket_files is None else max_bucket_files
-    return files_per_bucket_table(_os.path.join(state_dir, "fp_min")) > limit
-
-
-def compact_fp_index(
-    spark: SparkSession,
-    state_dir: str,
-    fp_prefix_len: int = _FP_PREFIX_LEN,
-    partitions: int = 32,
-) -> None:
-    """Collapse the fingerprint index's epochs into the sentinel and
-    rewrite one file per bucket — compact_index's recipe on the verdict
-    stream's single state table. Only run between stream runs (drain
-    complete / checkpoint committed); re-pins the layout marker since a
-    changed ``fp_prefix_len`` here is the legitimate rebucket path."""
-    import os as _os
-
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        _write_index_layout,
-        compact_epoch_table,
-    )
-
-    compact_epoch_table(
-        spark,
-        _os.path.join(state_dir, "fp_min"),
-        _fp_bucket(F.col("fp"), fp_prefix_len),
-        partitions,
-    )
-    _write_index_layout(state_dir, fp_prefix_len, 16 ** fp_prefix_len)
-
-
-def maybe_compact_fp_index(
-    spark: SparkSession,
-    state_dir: str,
-    fp_prefix_len: int | None = None,
-    partitions: int = 32,
-    max_bucket_files: int | None = None,
-    auto_rebucket: bool = True,
-) -> bool:
-    """Apply BOTH maintenance rules at the maintenance point; returns
-    whether a compaction ran.
-
-    - files-per-bucket (read amplification): compact at the current
-      fan-out when any bucket's epoch-file count crosses the threshold;
-    - write-side rebucket (VERDICT r14 #3): when the sustained per-batch
-      write shape says the fan-out is over-sized for the batch bytes
-      (dedup_stream.rebucket_decision — the r14 Phase-B finding that
-      commit cost at fan-out >> batch cannot be recovered by read-side
-      compaction), compact AND rebucket to the decision's target in one
-      rewrite. The marker is re-pinned by compact_fp_index, so restarted
-      streams and probes pick the new fan-out up automatically.
-
-    ``fp_prefix_len=None`` (the default) reads the current fan-out from
-    the index's own layout marker; passing it explicitly pins the
-    compaction fan-out and disables the auto-rebucket path."""
-    import os as _os
-
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        read_index_layout,
-        rebucket_decision,
-    )
-
-    explicit = fp_prefix_len is not None
-    if fp_prefix_len is None:
-        fp_prefix_len = int(read_index_layout(state_dir)["bh_prefix_len"])
-    if auto_rebucket and not explicit:
-        decision = rebucket_decision(
-            _os.path.join(state_dir, "fp_min"), 16 ** fp_prefix_len
-        )
-        if decision["rebucket_due"]:
-            compact_fp_index(
-                spark, state_dir, decision["target_prefix_len"], partitions
-            )
-            return True
-    if not fp_compaction_due(state_dir, max_bucket_files):
-        return False
-    compact_fp_index(spark, state_dir, fp_prefix_len, partitions)
-    return True
-
-
 VERDICT_COLUMNS = [
     "doc_id",
     "keep_dedup",

@@ -762,8 +762,8 @@ def compact_epoch_table(
     bucket as ONE file (a ``repartition`` on the bucket key — the
     fan-out rule already sizes buckets to be file-sized, so one file per
     bucket is the shape the per-batch pruned read wants). The shared
-    core of :func:`compact_index` (bands/sets) and the curation stream's
-    fingerprint index (curation_stream.compact_fp_index). Same contract:
+    core of :func:`compact_index` (bands/sets) and the streamed postings
+    index (text_index_stream.maybe_compact_postings_index). Same contract:
     only run with the stream stopped and its checkpoint committed."""
     df = spark.read.parquet(path).drop("epoch", "bkt")
     tmp = path + "__compacting"

@@ -1,6 +1,6 @@
 """Streaming sinks (SURVEY §2.1 S2/S5/S6/S10, §2.9 T1/T2).
 
-Kafka / file / console / memory writers with checkpoint management, plus
+Kafka / file / memory writers with checkpoint management, plus
 the foreachBatch escape hatch. The reference's sink layering bug — it
 chained ``.foreachBatch(...).format("csv")`` and discovered empirically
 that the last one wins (``predict_path.py:94-95``) — can't happen here:
@@ -55,21 +55,17 @@ def to_files(
     path: str,
     checkpoint: str,
     fmt: str = "parquet",
-    partition_by: list[str] | None = None,
     processing_time: str | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Append-mode file sink. The reference wrote CSV (predict_path.py:95);
-    default here is parquet, optionally partitioned (date/key-bucket) so
-    downstream scans get partition pruning."""
+    default here is parquet."""
     w = (
         df.writeStream.outputMode("append")
         .format(fmt)
         .option("path", path)
         .option("checkpointLocation", checkpoint)
     )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
     return _with_trigger(w, processing_time, available_now).start()
 
 
@@ -84,16 +80,10 @@ def to_memory(
     return _with_trigger(w, available_now=available_now).start()
 
 
-def to_console(df: DataFrame, output_mode: str = "append") -> StreamingQuery:
-    """Debug sink (reference used print(df.show()) inside foreachBatch)."""
-    return df.writeStream.outputMode(output_mode).format("console").start()
-
-
 def for_each_batch(
     df: DataFrame,
     fn: Callable[[DataFrame, int], None],
     checkpoint: str,
-    output_mode: str = "update",
     processing_time: str | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
@@ -104,7 +94,7 @@ def for_each_batch(
     upserts, or side effects.
     """
     w = (
-        df.writeStream.outputMode(output_mode)
+        df.writeStream.outputMode("update")
         .foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
     )

@@ -60,9 +60,9 @@ def last_k_per_key_stream(
     are the K newest rows.
 
     Timestamp ties are broken by the value columns, in order (the larger
-    struct ranks first), so the result does not depend on arrival order;
-    the earlier pandas state kept arrival order instead. A Spark without
-    ``CollectTopK`` fails when this is called: there is no second path.
+    struct ranks first), so the result does not depend on arrival order.
+    A Spark without ``CollectTopK`` fails when this is called: there is no
+    second path.
     """
     top = _collect_top_k(stream_df.sparkSession, F.struct(ts_col, *value_cols), k)
     return (

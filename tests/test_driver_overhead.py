@@ -1,7 +1,8 @@
-"""Pins for the r15 driver-overhead optimizations (OPTIMIZATION_r15.md
-#8–#10): single-round-trip model literals, per-path schema memos. Each
-optimization changed an operator's internals without changing values —
-these tests pin the "without changing values" half.
+"""Pins for the r15 driver-overhead optimizations (#8–#10 of the round-15
+optimization notes, in git history at 78bf83b): single-round-trip model
+literals, per-path schema memos. Each optimization changed an operator's
+internals without changing values — these tests pin the "without
+changing values" half.
 """
 
 from __future__ import annotations

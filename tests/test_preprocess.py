@@ -12,6 +12,7 @@ from streaming_data_pipeline_capstone_spark.plans.preprocess import (
     preprocess_positions,
 )
 from streaming_data_pipeline_capstone_spark.schemas import AIS_WIRE_SCHEMA
+from streaming_data_pipeline_capstone_spark.sources.readers import read_csv_pipe
 
 
 def _wire_row(
@@ -90,7 +91,7 @@ def test_envelope_decode_permissive_nulls(spark):
     env = spark.createDataFrame(
         [(json.dumps(good),), ("{not json at all",)], "value string"
     )
-    df = preprocess_from_envelope(env, message_type_filter=False)
+    df = preprocess_from_envelope(env)
     # malformed row decodes to all-null struct → fails bbox filter → dropped
     assert df.count() == 1
 
@@ -210,3 +211,27 @@ def test_preprocess_malformed_positions_dropped(spark):
         (r.mmsi, r.longitude, r.latitude) for r in preprocess_from_envelope(env).collect()
     )
     assert got == expected
+
+
+def test_read_csv_pipe_feeds_preprocess(spark, tmp_path):
+    """S3: the reference's headerless pipe-delimited AIS rows, read with the
+    wire schema, go through the preprocess chain like any other source."""
+    rows = [
+        _wire_row(mmsi=1),
+        _wire_row(mmsi=2, position="POINT(111.0 16.0)", heading=511.0),
+        _wire_row(mmsi=3, mtype=5),  # static/voyage message → dropped
+        _wire_row(mmsi=4, position="POINT(130.0 15.0)"),  # outside the bbox
+    ]
+    (tmp_path / "ais.csv").write_text(
+        "".join("|".join(str(v) for v in r) + "\n" for r in rows)
+    )
+    wire = read_csv_pipe(spark, str(tmp_path / "ais.csv"), AIS_WIRE_SCHEMA)
+    assert wire.count() == 4
+    got = sorted(
+        (r.mmsi, str(r.timestamp_utc), r.longitude, r.latitude, r.true_heading)
+        for r in preprocess_positions(wire).collect()
+    )
+    assert got == [
+        (1, "2021-04-05 10:00:00", 110.5, 15.25, 90.0),
+        (2, "2021-04-05 10:00:00", 111.0, 16.0, None),
+    ]
