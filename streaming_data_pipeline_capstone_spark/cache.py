@@ -1,4 +1,4 @@
-"""Scoped persist bookkeeping (VERDICT r11 ask #7).
+"""Scoped persist bookkeeping.
 
 Several queries persist an intermediate frame that the RETURNED lazy
 DataFrame still depends on (the LM bucket bins, the DSIR funnel's

@@ -85,7 +85,7 @@ def probe_cells_batch(
 ) -> list[list[int]]:
     """Batched probe ranking: top-``nprobe`` cells per query for a Q-query
     batch — BIT-IDENTICAL to per-query :func:`probe_cells_py` (pinned in
-    tests), vectorized for serving shapes (VERDICT r13 #2: the pure-Python
+    tests), vectorized for serving shapes (the pure-Python
     rank is fine at k=8, ~67M Python float ops per Q=32 batch at the
     100 TB-scale k≈2^16).
 
@@ -120,7 +120,7 @@ def probe_cells_batch(
 
 
 # -- coarse-quantizer sizing: a RULE of corpus size, not a constant ------------
-# VERDICT r13 #2: k=8 at the fixture and k=64 in the recall rig were
+# k=8 at the fixture and k=64 in the recall rig used to be
 # constants; nothing tied cell count to corpus size or said when a grown
 # index must retrain. The published IVF recipe (FAISS guidelines; Johnson
 # et al. 2017) sizes k so each inverted list holds a scan-friendly number
@@ -204,7 +204,7 @@ def cell_layout_path(
     # model_tag keys a RETRAINED model's layout to a distinct path, so
     # the retrain recipe builds BESIDE the live layout and the repoint is
     # an atomic pointer flip, never an in-place overwrite of a directory
-    # concurrent probes may be reading (VERDICT r14 ask #1)
+    # concurrent probes may be reading
     tag = f"-{model_tag}" if model_tag else ""
     return os.path.join(_LAYOUT_ROOT, f"{base}-{slug}{tag}{sfx}")
 
@@ -593,7 +593,7 @@ def append_cell_epoch(
     )
 
 
-# -- compaction trigger: a RULE, not a manual step (VERDICT r13 #3) ------------
+# -- compaction trigger: a RULE, not a manual step -----------------------------
 # Every epoch append adds ~1 file per touched cell/bucket, so probe cost
 # gains a fixed per-file term (listing + footer + dictionary reads) on
 # top of the data. The data per (cell, epoch) file is ~batch/fanout rows;

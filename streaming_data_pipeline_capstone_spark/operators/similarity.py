@@ -191,7 +191,7 @@ def banded_lsh_config(
     """Corpus-scaled banded-LSH parameters: (planes_per_band, num_bands).
 
     The two knobs trade against each other, so a fixed config only fits
-    one corpus size (VERDICT r5 ask #3):
+    one corpus size:
 
     - ``planes_per_band`` controls expected bucket occupancy n/2^planes.
       Occupancy is what must stay bounded at scale — the in-bucket verify
@@ -745,7 +745,7 @@ def cell_blocked_pairs(
     cell_col: str = "cell",
 ) -> DataFrame:
     """All (id1 < id2) cosine >= threshold pairs WITHIN each cell, with hot
-    cells salted into bounded tasks (VERDICT r6 ask #3).
+    cells salted into bounded tasks.
 
     A plain groupBy(cell) verify is one task per cell — correct while every
     cell is near the expected occupancy, but a natural corpus concentrates

@@ -7,7 +7,7 @@ text per serving batch. At 100 TB that is a full-corpus read per batch,
 while the dense arm reads nprobe/k of a cell-partitioned layout (the
 measured asymmetry: BENCH_sf10_ann_r13.json decade exponents −0.0 dense
 vs 0.42 hybrid — the 0.42 is entirely the sparse arm). This module is the
-ANN-layout move applied to text (VERDICT r13 ask #1): tokenize ONCE,
+ANN-layout move applied to text: tokenize ONCE,
 write an inverted-index-shaped postings table hive-partitioned by a hash
 bucket of the term, and serve every later query by listing ONLY the
 buckets its terms live in.

@@ -41,13 +41,17 @@ def last_k_per_key(
     return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
+# The reference's kinematic window (``preprocess.py:78-88``); every caller
+# uses it.
+WINDOW_DURATION = "2 minutes"
+SLIDE_DURATION = "1 minute"
+
+
 def sliding_time_agg(
     df: DataFrame,
     ts_col: str,
     key: str | list[str],
     aggs: list[Column],
-    window_duration: str = "2 minutes",
-    slide_duration: str = "1 minute",
     watermark: str | None = None,
 ) -> DataFrame:
     """Sliding event-time window aggregation.
@@ -59,5 +63,5 @@ def sliding_time_agg(
     """
     keys = [key] if isinstance(key, str) else list(key)
     src = df.withWatermark(ts_col, watermark) if watermark else df
-    win = F.window(ts_col, window_duration, slide_duration)
+    win = F.window(ts_col, WINDOW_DURATION, SLIDE_DURATION)
     return src.groupBy(win.alias("window"), *keys).agg(*aggs)

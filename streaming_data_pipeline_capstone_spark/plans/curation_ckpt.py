@@ -9,7 +9,7 @@ verdict would instead be CHECKPOINTED parquet between jobs, with every
 downstream consumer (the next stage, the funnel report, auditors) reading
 the same materialized frames instead of re-deriving them.
 
-This module IS that execution shape (VERDICT r8 ask #3):
+This module IS that execution shape:
 
 - each stage's verdict frame (the same registry-green stage queries —
   `dedup_keep_list`, `quality_filter_composite`,

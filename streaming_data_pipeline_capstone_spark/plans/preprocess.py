@@ -119,7 +119,5 @@ def kinematic_aggs(processed: DataFrame, watermark: str | None = None) -> DataFr
         ts_col="timestamp_utc",
         key="mmsi",
         aggs=aggs,
-        window_duration="2 minutes",
-        slide_duration="1 minute",
         watermark=watermark,
     )

@@ -65,7 +65,7 @@ _DECON_N = 3          # sensitive end of the published 8-13-gram range
 _DECON_N_W8 = 8       # published operating point (GPT-3/PaLM-style 8-13)
 _EVAL_MOD = 97        # doc_id % 97 == 0 → the stand-in "benchmark" slice
 
-# Planted w=8 contamination (r10, VERDICT r9 ask #1 — the curation_pii_scrub
+# Planted w=8 contamination (the curation_pii_scrub
 # precedent): the gate corpus contains no verbatim 8-word overlap with the
 # eval slice, so the w8 driver check hash-matched an EMPTY frame. Append a
 # fixed 8-token sentinel span — identically in both engines — to every eval
@@ -1156,7 +1156,7 @@ def _curation_ctes(plant: bool = False) -> str:
     dedup_keep_list / quality_filter_composite / decontam_ngram_overlap_w8
     oracles with disambiguated CTE names.
 
-    ``plant`` (default OFF — r11, VERDICT r10 finding #3) appends the w8
+    ``plant`` (default OFF) appends the w8
     sentinel span to the decontam stage's input, exactly as the registered
     ``decontam_ngram_overlap_w8`` gate does; the REGISTERED funnel queries
     pass plant=True so their oracles keep verifying known positives, while
@@ -1415,7 +1415,7 @@ def curation_report_frame(
 
 
 # -- DSIR-selected funnel ------------------------------------------------------
-# The funnel with the paper's ACTUAL composition (VERDICT r9 ask #6): Xie
+# The funnel with the paper's ACTUAL composition: Xie
 # et al. run importance resampling over the CLEANED pool, so the packing
 # stage's input here is the DSIR-selected subset of the funnel's survivor
 # set — per-doc importance weights toward the eval-slice target (the
@@ -1813,7 +1813,7 @@ def text_dup_spans_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_dup_spans_strip_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production shape of :func:`text_dup_spans_strip` — the twin its
-    docstring promises (VERDICT r9 ask #2): the global window count AND
+    docstring promises: the global window count AND
     the duplicated-start-position rollup key on ``xxhash64(window)``
     (8 bytes) instead of the window text (~15 words ≈ 100+ bytes), the
     same ~12× exchange shrinkage :func:`text_dup_spans_hashed` buys the

@@ -898,7 +898,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # included.
 #
 # Config is chosen off the recorded curves (ANN_RECALL_r09/r11 +
-# ANN_PQ_SWEEP_r12, VERDICT r8 ask #2 / r11 ask #4): the binding
+# ANN_PQ_SWEEP_r12): the binding
 # constraint has always been the sub-quantizer COUNT (r8's 4×16 read
 # 0.135 flat in k; r9-r11's 16×4 capped probe-ADC at 0.415). The r12
 # shipped 32×2 split at k=64 is 192 bits/vector (10.7x vs float32),
@@ -1008,7 +1008,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(10)
 
 
-# -- deployment-shape variants: FIXED (shipped) codebooks (VERDICT r5 ask #2)
+# -- deployment-shape variants: FIXED (shipped) codebooks ---------------------
 # The per-invocation-training queries above prove the training pipeline is
 # oracle-correct; these prove the shape a 100 TB pipeline actually runs —
 # codebooks/centroids are a model artifact trained once on a sample
@@ -1318,7 +1318,7 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cell_blocked_pairs(cells, threshold=0.45, target_rows=4096)
 
 
-# -- partition-pruned ANN serving (VERDICT r6 ask #2) -------------------------
+# -- partition-pruned ANN serving ---------------------------------------------
 # The *_fixed probes prune COMPUTE (survivors come from a broadcast cell
 # join) but still scan the whole corpus. These twins run the same probes
 # against the cell-partitioned serving layout (operators/ann_layout.py):
@@ -1334,7 +1334,7 @@ def _serving_model(sf_dir: str):
     """The corpus's CURRENT serving model — the shipped codebooks for
     the gate corpora (their oracles inline those literals), or the
     repointed rule-k model after tools/ann_retrain_exec.py has executed
-    the retrain recipe for a grown corpus (VERDICT r14 ask #1)."""
+    the retrain recipe for a grown corpus."""
     from streaming_data_pipeline_capstone_spark.queries.serving_models import (
         serving_model,
     )
@@ -1451,7 +1451,7 @@ def sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.limit(10)
 
 
-# -- exact re-rank stage (VERDICT r8 ask #2) ----------------------------------
+# -- exact re-rank stage ------------------------------------------------------
 # ADC distances rank by quantized geometry; the production probe takes the
 # ADC TOP-_RERANK shortlist and re-scores only those raw vectors exactly —
 # recall then depends on the shortlist CONTAINING the true neighbors, a far
@@ -1673,7 +1673,7 @@ def sim_topk_ivfpq_rerank_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pruned_rerank_topk(spark, sf_dir, 10)
 
 
-# -- spilled-assignment serving probe (round 11, VERDICT r10 ask #3) ----------
+# -- spilled-assignment serving probe -----------------------------------------
 # The realistic-cell-count recall measurement (ANN_RECALL_r11.json, k=64
 # cells over the rotate-dup sf1 corpus) showed single-assignment IVF's
 # coarse quantizer IS the recall ceiling on an isotropic corpus: ivf_exact
@@ -1938,7 +1938,7 @@ def retrieval_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dtabs[s][code_s] — the SAME numbers the single-query literal tables
 # compile to, but expression size O(subs) regardless of batch size, so
 # the batch axis is bounded only by the broadcast (Q * subs * pq_k
-# doubles ≈ 16 KiB/query), not by codegen (VERDICT r12 #1: the previous
+# doubles ≈ 16 KiB/query), not by codegen (the previous
 # per-query literal-CASE chain grew the projection O(Q·subs·pq_k) and
 # would not compile at serving batch sizes). The shortlist and final
 # top-k are rank windows PARTITIONED BY query_id — more queries add
@@ -2039,8 +2039,8 @@ def multi_topk_ivfpq(
     cluster is ONE broadcast of Q rows (each subs x pq_k doubles + the
     raw query vector); plan/expression size is independent of Q.
 
-    ``labels`` (r14: the filter axis composed onto the batch axis —
-    VERDICT r13 ask #3) maps query_id -> required label for that query's
+    ``labels`` (the filter axis composed onto the batch axis) maps
+    query_id -> required label for that query's
     results; omitted qids are unfiltered. Real serving batches carry
     per-query predicates, so the predicate rides in TWO layers: the
     UNION of requested labels is a literal IN-filter INSIDE the pruned
@@ -2308,7 +2308,7 @@ def sim_topk_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- filtered x batched ANN serving (r14) --------------------------------------
-# VERDICT r13 ask #3: real serving batches carry PER-QUERY predicates
+# Real serving batches carry PER-QUERY predicates
 # (tenant A's query must only see tenant A's vectors). The composition
 # multiplies correctly: ONE pruned codes scan over the union probe cells,
 # prefiltered by the UNION of requested labels (a literal IN inside the
@@ -2560,7 +2560,7 @@ def retrieval_hybrid_rrf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sparse arm through the term-bucketed postings layout (r14): the
     # batch reads only the union terms' buckets — the corpus text is
-    # never scanned at serving time (VERDICT r13 #1)
+    # never scanned at serving time
     scores = (
         _bm25_base(spark, sf_dir, _multi_terms())
         .join(F.broadcast(qt), "term")
@@ -2602,7 +2602,7 @@ def retrieval_hybrid_rrf_multi_streamed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The batched hybrid answered ENTIRELY from STREAMED indexes
-    (VERDICT r14 ask #5) — the full freshness composition: the dense arm
+    — the full freshness composition: the dense arm
     probes the stream-ingested ANN index (_streamed_index: 3 real
     micro-batches through foreachBatch -> append_cell_epoch), the sparse
     arm scores from the stream-ingested postings index

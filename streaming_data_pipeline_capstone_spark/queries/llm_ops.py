@@ -323,7 +323,7 @@ def sim_lsh_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# corpus-scaled banded config (VERDICT r5 ask #3): band width is a
+# corpus-scaled banded config: band width is a
 # corpus-size knob — a fixed (planes, bands) only fits one corpus size.
 # operators/similarity.banded_lsh_config holds expected bucket occupancy
 # at the sf1-proven target and grows bands to keep per-pair recall ≥0.93
@@ -355,7 +355,7 @@ def sim_lsh_pairs_banded_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# near-dup-threshold banded variant (VERDICT r6 ask #4 context): 0.4 is the
+# near-dup-threshold banded variant: 0.4 is the
 # deliberately-low stress threshold, but it sits only ~3.2 sd above the
 # RANDOM-pair cosine noise at dim=64 (sd ~ 1/sqrt(dim) = 0.125), so pair
 # output is quadratic in n for ANY corpus — the bulk tail, not duplicates.
@@ -364,8 +364,8 @@ def sim_lsh_pairs_banded_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # output tracks the corpus's actual duplicate density — linear in n when
 # density is constant, which is what the natural-growth decade measures.
 # The driver's gate corpora contain no natural >=0.7 pairs (max pair cosine
-# 0.51), which made the r9 gate a hash of an EMPTY frame. r10 (VERDICT r9
-# ask #1, curation_pii_scrub precedent): the query PLANTS deterministic
+# 0.51), which made the gate a hash of an EMPTY frame. So (the
+# curation_pii_scrub precedent) the query PLANTS deterministic
 # near-dups in-flight — for every vec_id % 83 == 0 a perturbed copy
 # (v*0.9 + 0.01 elementwise, cosine ≈ 0.99 to its source at dim=64) is
 # unioned in under a disjoint id range — identically in both engines, so

@@ -445,7 +445,7 @@ _LM_LABELED_CTES = f"""
     """,
 )
 def corpus_health_lm_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source LM-quality distribution (VERDICT r11 ask #5): what
+    """Per-source LM-quality distribution: what
     fraction of each ingest source's scored documents land in the CCNet
     head/middle/tail perplexity buckets — the fluency counterpart to
     corpus_health_by_source's rule pass-rates (a source whose tail share

@@ -183,13 +183,13 @@ def join_semi_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_anti_no_urgent_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti equi-join: customers who never placed an URGENT order.
 
-    The priority predicate (r10, VERDICT r9 ask #1) makes the driver's
-    sf0.01 gate NON-vacuous: the unrestricted form matched an empty frame
+    The priority predicate makes the sf0.01
+    oracle gate NON-vacuous: the unrestricted form matched an empty frame
     (every gate customer has at least one order — a hash of nothing),
     while this one returns 203 real rows at sf0.01 / 18 at sf0.001. Same
     anti-join machinery; the filter pushes into the orders scan.
 
-    Renamed from ``join_anti_never_ordered`` in r11 (VERDICT r10 #5):
+    Renamed from ``join_anti_never_ordered``:
     the old name described the pre-r10 unrestricted semantics."""
     cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders").filter(

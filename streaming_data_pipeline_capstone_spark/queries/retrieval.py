@@ -9,7 +9,7 @@ Model (Robertson et al.'s BM25 with the Lucene IDF variant, all public):
                              / (tf(t,D) + k1·(1 − b + b·|D|/avgdl))
     IDF(t) = ln(1 + (N − df(t) + 0.5) / (df(t) + 0.5))
 
-100 TB shape — the POSTINGS LAYOUT is the plan (r14; VERDICT r13 #1):
+100 TB shape — the POSTINGS LAYOUT is the plan:
 
 - the corpus is tokenized ONCE into a term-bucketed postings layout
   (operators/text_layout.py: rows (term, doc_id, tf, dl, df) hive-
@@ -570,7 +570,7 @@ def text_qld_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- QLD on the serving axes (r15: VERDICT r14 ask #4) ------------------------
+# -- QLD on the serving axes --------------------------------------------------
 # The BM25 family already serves the batch axis (text_bm25_multi_topk)
 # and the metadata-filter axis (text_bm25_filtered_topk); the postings
 # layout makes each a small delta for QLD too. Batch: ONE bucket-pruned

@@ -1,5 +1,5 @@
 """Per-corpus ANN serving-model resolution — the REPOINT step of the
-coarse-quantizer lifecycle (VERDICT r14 ask #1).
+coarse-quantizer lifecycle.
 
 The shipped codebooks (queries/codebooks.py, trained once on the sf0.01
 sample) are the right model for the gate corpora — their oracles inline

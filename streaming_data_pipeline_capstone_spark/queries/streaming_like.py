@@ -54,8 +54,6 @@ def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.round(F.avg("value"), 6).alias("avg_value"),
         ],
-        window_duration="2 minutes",
-        slide_duration="1 minute",
     )
     return agg.select(
         F.col("window.start").alias("window_start"),
@@ -149,8 +147,6 @@ def stream_sliding_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("value"), 6).alias("avg_value"),
             F.max_by("value", "ts").alias("last_value"),
         ],
-        window_duration="2 minutes",
-        slide_duration="1 minute",
     )
     return agg.select(
         F.col("window.start").alias("window_start"),

@@ -358,7 +358,7 @@ def chunk_fixed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The encode path is the one that must scale with VOCAB SIZE, and the
 # r12 replace-chain did not: n_merges nested replaces is O(vocab) plan
 # depth and O(vocab) per-row work — a real 30k-50k-merge tokenizer would
-# not compile (VERDICT r12 #3). The deploy encode now applies the frozen
+# not compile. The deploy encode now applies the frozen
 # merges ONLY to the corpus's DISTINCT-WORD frame through an
 # Arrow-batched pandas pass (operators/bpe.segment_word, rank-ordered —
 # provably equal to priority-order BPE because a merge's operands are

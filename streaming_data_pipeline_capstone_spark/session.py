@@ -3,14 +3,17 @@
 The reference pinned ``local[1]`` for its preprocess job
 (``preprocess.py:16``) — a hard single-core throughput ceiling. Here the
 master defaults to ``local[$SPARK_GRAFT_CPUS]`` for local runs and is left
-to spark-submit/cluster config in production; every other default is chosen
-to survive a 1000-executor / 100 TB deployment:
+to spark-submit/cluster config in production. The other defaults serve the
+streaming pipeline (entry points B and C) as perfbench measures it on one
+node, and stay correct when the same code runs on a cluster:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting)
 - shuffle partitions sized for the local core count; on a real cluster AQE
   scales the initial number down/up from a deliberately high initial value
 - Arrow transfers on, so any Pandas-UDF boundary is vectorized
 - UTC session timezone so event-time semantics are deployment-independent
+- checkpoint renames without a forked `readlink`, and no `.crc` side file
+  (with its forked `chmod`) per local file
 """
 
 from __future__ import annotations
@@ -77,11 +80,44 @@ def get_spark(
         # only enriches error messages with Python call sites; re-enable
         # through ``extra_conf`` when debugging.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Checkpoint renames without forking `readlink`. pyspark ships no
+        # native libhadoop, so the default FileContext-based checkpoint
+        # manager forks `readlink` about 4 times per rename
+        # (RawLocalFs.getFileLinkStatus → FileUtil.readLink). With the
+        # no-`.crc` flag below, 6 warm perfbench kinematics drains went from
+        # 3,983 process starts to 550 (JFR), perfbench's summed state
+        # commit time (`operators.windows.commit_ms`) from 1,400 to 110 ms,
+        # and kinematics events/s from a median 5,643 to 8,008 on 4 cores
+        # (CHANGES.md). This manager
+        # renames through FileSystem.rename (File.renameTo on local disk).
+        # On HDFS that rename is atomic and refuses an existing target, as
+        # before; on local disk it checks for the target and then renames,
+        # which is safe because one query owns a checkpoint dir. S3 has no
+        # atomic rename under either manager.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     # Other settings, e.g. the RocksDB state store provider for large
     # streaming state, come in through ``extra_conf``.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # No `.<name>.crc` side file next to every local file: without
+    # libhadoop each one is a second create that forks `chmod`
+    # (RawLocalFileSystem.setPermission). Spark's own checkpoint checksums
+    # (spark.sql.streaming.checkpoint.fileChecksum.enabled, on by default)
+    # still guard the state files. This is a flag on the JVM's cached
+    # local FileSystem, not `fs.file.impl=RawLocalFileSystem`: that breaks
+    # FileSystem.getLocal, which the RocksDB state store calls on every
+    # commit. It reaches everything in this JVM, local-mode tasks too;
+    # executors in their own JVM keep writing checksums.
+    sc = spark.sparkContext
+    local_fs = sc._jvm.org.apache.hadoop.fs.FileSystem.get(
+        sc._jvm.java.net.URI("file:///"), sc._jsc.hadoopConfiguration()
+    )
+    local_fs.setWriteChecksum(False)
+    sc.setLogLevel("WARN")
     return spark

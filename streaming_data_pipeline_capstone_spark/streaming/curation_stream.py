@@ -1,5 +1,5 @@
 """Streaming curation verdicts — per-document ingest decisions as ONE
-Structured Streaming job (VERDICT r9 ask #3 / r10 top-next).
+Structured Streaming job.
 
 The batch curation funnel decides keep/drop over a corpus at rest; a
 training-data INGEST pipeline makes the same decisions per document as it

@@ -44,7 +44,7 @@ from streaming_data_pipeline_capstone_spark.operators.dedup import (
 
 
 # State-index bucket fan-out: a RULE of expected batch size, not a
-# constant (VERDICT r12 #2 — the r12 fixed 16 meant any batch with >=16
+# constant (a fixed 16 meant any batch with >=16
 # distinct key prefixes touched every bucket, so pruning only bit when
 # batches were small relative to fan-out). With B uniformly-hashed keys
 # per batch over N buckets, the expected touched fraction is
@@ -513,7 +513,7 @@ def exact_dedup_stream(
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-# Compaction trigger rule (VERDICT r13 #3 — the trigger was manual):
+# Compaction trigger rule (the trigger used to be a manual step):
 # every epoch adds ~1 file per touched bucket, and each file costs a
 # fixed open/footer overhead per pruned read on top of its data. With
 # per-batch data per bucket ≈ batch/fanout rows, the fixed term starts
@@ -555,7 +555,7 @@ def index_compaction_due(
     return files_per_bucket(index_dir) > max_bucket_files
 
 
-# Write-side rebucket trigger rule (VERDICT r14 #3). The files-per-bucket
+# Write-side rebucket trigger rule. The files-per-bucket
 # threshold above bounds READ amplification only; the r14 probe
 # (BENCH_stream_compaction_r14.json Phase B) proved that at over-sized
 # fan-out the per-batch cost is the WRITE side — each epoch commits ~1

@@ -293,7 +293,6 @@ def test_sliding_window_assignment_matches_naive(spark, rows_in):
     agg = sliding_time_agg(
         df, ts_col="ts", key="k",
         aggs=[F.count("*").alias("n")],
-        window_duration="2 minutes", slide_duration="1 minute",
     )
     got = {
         (r["k"], int(r["window"]["start"].timestamp())): r["n"] for r in agg.collect()

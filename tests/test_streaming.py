@@ -417,6 +417,127 @@ def test_stateful_restart_carries_state(spark, tmpdir):
     assert got == {(_t(2), 2.0): 1, (_t(1), 1.0): 2, (_t(0), 0.0): 3}
 
 
+def test_checkpoints_use_filesystem_rename_and_no_crc_side_files(spark, tmpdir):
+    """The session renames checkpoint files through ``FileSystem.rename``
+    (no ``readlink`` fork per rename) and writes no hidden
+    ``.<name>.crc`` side file (and its ``chmod`` fork) per local file. A
+    stateful availableNow query leaves offsets, commits and state files,
+    Spark's own state checksums (``<name>.crc``), and no Hadoop side file
+    anywhere under the run's dir (replay, checkpoint, sink). The local
+    filesystem stays a ``LocalFileSystem``, so ``FileSystem.getLocal`` (the
+    RocksDB state store's commit path) still works."""
+    import os
+
+    jvm = spark.sparkContext._jvm
+    schema = replay_to_files(
+        _events_df(spark, [(1, _t(0), 1.0), (2, _t(1), 2.0), (1, _t(2), 3.0)]),
+        f"{tmpdir}/replay", num_chunks=2, order_col="ts",
+    )
+    counts = stream_from_replay(spark, f"{tmpdir}/replay", schema).groupBy("user_id").count()
+
+    def sink(batch, epoch_id):
+        batch.write.mode("append").parquet(f"{tmpdir}/out")
+
+    for_each_batch(counts, sink, f"{tmpdir}/ckpt", available_now=True).awaitTermination(120)
+    got = spark.read.parquet(f"{tmpdir}/out").groupBy("user_id").agg(F.max("count"))
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 2), (2, 1)]
+
+    files = {
+        sub: [f for _, _, fs in os.walk(f"{tmpdir}/ckpt/{sub}") for f in fs]
+        for sub in ("offsets", "commits", "state")
+    }
+    assert all(files.values()), files
+    crc = [f for _, _, fs in os.walk(tmpdir) for f in fs if f.endswith(".crc")]
+    assert [f for f in crc if f.startswith(".")] == []
+    assert any(f.endswith(".delta.crc") for f in crc), crc
+
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(f"{tmpdir}/ckpt")
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    assert (
+        manager.create(path, hconf).getClass().getSimpleName()
+        == "FileSystemBasedCheckpointFileManager"
+    )
+    local = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), hconf)
+    assert jvm.java.lang.Class.forName("org.apache.hadoop.fs.LocalFileSystem").isInstance(local)
+
+
+def _ais_envelopes(spark):
+    """AIS wire envelopes for 3 vessels reporting every 30 s from 10:00 to
+    10:19:30, in event-time order (``seq``), every row kept by preprocess."""
+    from streaming_data_pipeline_capstone_spark.schemas import AIS_WIRE_SCHEMA
+
+    rows = []
+    for step in range(40):
+        ts = dt.datetime(2024, 1, 1, 10, 0) + dt.timedelta(seconds=step * 30)
+        for v in range(3):
+            rows.append((
+                len(rows), ts.strftime("%Y-%m-%d %H:%M:%SZ"), 229906000 + v,
+                f"POINT({110 + v + step / 100} {15 + step / 100})", 0.0,
+                float(step % 7 + v), float(step * 9 % 360), 1, "src", 1, 0, 0,
+                "VESSEL", "Cargo", 30, 90.0, float(step % 5 - 2), 0,
+            ))
+    schema = T.StructType([T.StructField("seq", T.LongType()), *AIS_WIRE_SCHEMA.fields])
+    wire = spark.createDataFrame(rows, schema)
+    # the envelope of schemas.encode_json_envelope, with ``seq`` beside it
+    value = F.to_json(F.struct(*AIS_WIRE_SCHEMA.fieldNames()))
+    return wire.select(value.alias("value"), "seq")
+
+
+def test_entry_b_restart_appends_each_window_once(spark, tmpdir):
+    """Entry point B (``preprocess_from_envelope`` -> ``kinematic_aggs`` ->
+    ``to_files``) stopped after chunks 0-1 and restarted on the same
+    checkpoint after chunks 2-3 arrive. Windows open at the stop straddle
+    the chunk boundary, so their rows come from both runs and only the
+    restored state store can sum them. The sink holds each (window, mmsi)
+    once and equals batch ``kinematic_aggs`` over every window the final
+    watermark closed."""
+    import os
+
+    from streaming_data_pipeline_capstone_spark.plans.preprocess import (
+        kinematic_aggs,
+        preprocess_from_envelope,
+    )
+    from streaming_data_pipeline_capstone_spark.streaming.sinks import to_files
+
+    envelopes = _ais_envelopes(spark)
+    staging, replay = f"{tmpdir}/staging", f"{tmpdir}/replay"
+    schema = replay_to_files(envelopes, staging, num_chunks=4, order_col="seq")
+    os.makedirs(replay)
+    out, ckpt = f"{tmpdir}/out", f"{tmpdir}/ckpt"
+
+    def run(chunks):
+        for k in chunks:  # a rename keeps the re-stamped chunk mtimes
+            os.rename(f"{staging}/chunk={k:05d}", f"{replay}/chunk={k:05d}")
+        processed = preprocess_from_envelope(stream_from_replay(spark, replay, schema))
+        q = to_files(kinematic_aggs(processed, watermark="5 minutes"), out, ckpt, available_now=True)
+        q.awaitTermination(120)
+        return q
+
+    run([0, 1])
+    emitted_first = spark.read.parquet(out).count()
+    last = run([2, 3])
+
+    got = spark.read.parquet(out)
+    key = ["window", "mmsi"]
+    assert got.count() == got.select(*key).distinct().count()
+    assert 0 < emitted_first < got.count()
+
+    final_wm = F.lit(last.lastProgress["eventTime"]["watermark"]).cast("timestamp")
+    twin = kinematic_aggs(preprocess_from_envelope(envelopes)).filter(
+        F.col("window.end") <= final_wm
+    )
+    cols = got.columns
+
+    def rows(df):
+        return sorted(
+            (r.window.start, r.mmsi, *(round(r[c], 9) for c in cols if c not in key))
+            for r in df.select(*cols).collect()
+        )
+
+    assert rows(got) == rows(twin)
+
+
 def test_stream_stream_interval_join_matches_batch(spark, tmpdir):
     """Two watermarked streams joined on key + event-time interval must
     produce exactly the rows the equivalent batch join produces —

@@ -1,5 +1,4 @@
-"""Recall-vs-compression curve for the ANN family (VERDICT r6 ask #5;
-pq_subs axis added for r9, VERDICT r8 ask #2).
+"""Recall-vs-compression curve for the ANN family, with a pq_subs axis.
 
 The deployment-shape probes trade recall for compute/storage three ways:
 PQ quantization loss (ADC on integer codes vs exact cosine), IVF cell

@@ -1,4 +1,4 @@
-"""ANN recall at a REALISTIC cell count (VERDICT r9 ask #4 / r10 ask #3).
+"""ANN recall at a REALISTIC cell count.
 
 The r9 curve (`ANN_RECALL_r09.json`) certified the shipped 16x4/k=64
 codebook at the fixture scale's coarse index: KMEANS_K=8 cells, nprobe=5

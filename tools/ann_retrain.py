@@ -1,6 +1,6 @@
 """Coarse-quantizer lifecycle decision: is a retrain due, and what to run.
 
-VERDICT r13 #2 asked for the growth rule AND the retrain/re-certify
+A grown index needs the growth rule AND the retrain/re-certify
 recipe as a tool. The rule lives in operators/ann_layout.py
 (`coarse_cells`, `coarse_retrain_due`); this tool applies it to a
 corpus + its currently-shipped quantizer and prints the decision as one

@@ -1,4 +1,4 @@
-"""EXECUTE the coarse-quantizer retrain recipe end-to-end (VERDICT r14 #1).
+"""EXECUTE the coarse-quantizer retrain recipe end-to-end.
 
 tools/ann_retrain.py is the decision: *is* a retrain due, and what to
 run. This tool is the operational loop itself — the FAISS main+delta

@@ -1,6 +1,6 @@
 """Materialize the cell-partitioned ANN serving layout for a corpus.
 
-VERDICT r6 ask #2: the fixed-codebook IVF probes pruned compute but not
+The fixed-codebook IVF probes pruned compute but not
 storage — README.md already named partition-by-cell as the 100 TB layout;
 this tool (beside tools/train_codebooks.py, the other half of the
 train-once story) actually writes it. One run per corpus: embeddings +

@@ -1,7 +1,7 @@
 """Deterministic sf1 generator: a 10x scale-up of /root/testdata/sf0.1.
 
-The driver ships sf{0.001,0.01,0.1}; the scale-proof bench (VERDICT r3
-ask #1) needs one decade more. This builds sf1 (~6M lineitem) the way
+The test data ships sf{0.001,0.01,0.1}; the scale-proof bench
+needs one decade more. This builds sf1 (~6M lineitem) the way
 TPC-H itself scales: fact/entity tables grow 10x, the fixed dimensions
 (region, nation) stay put.
 
@@ -38,7 +38,7 @@ Two tables need more than key offsets to avoid DEGENERATE scaling:
     (cos ~0.97), so pair-enumeration output grows QUADRATICALLY in the
     replica count — a worst-case duplicate-explosion corpus, honest for
     throughput but wrong for reading a time-vs-input exponent.
-  * ``rotate`` (VERDICT r6 ask #4, the natural-growth corpus): replica
+  * ``rotate`` (the natural-growth corpus): replica
     r>0 is the base matrix times a seeded random ORTHOGONAL matrix (QR of
     a seed-r Gaussian). Rotation preserves every intra-replica cosine
     EXACTLY — near-dup density per replica is constant by construction,

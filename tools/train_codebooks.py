@@ -1,6 +1,6 @@
 """Train the shipped PQ / IVF codebooks and emit queries/codebooks.py.
 
-VERDICT r5 ask #2: the registry's PQ and kmeans-IVF queries retrain per
+The registry's PQ and kmeans-IVF queries retrain per
 invocation — the right shape for proving the training pipeline is
 oracle-correct, but not the shape a 100 TB deployment runs. At scale the
 codebook is a MODEL ARTIFACT: trained once (on a sample), shipped as
