@@ -26,19 +26,15 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def bbox_filter(
-    lat: Column | str,
-    lon: Column | str,
-    lat_range: tuple[float, float] = BBOX_LAT,
-    lon_range: tuple[float, float] = BBOX_LON,
-) -> Column:
-    """Conjunctive strict-range predicate (reference preprocess.py:54)."""
+def bbox_filter(lat: Column | str, lon: Column | str) -> Column:
+    """Conjunctive strict-range predicate on BBOX_LAT / BBOX_LON (reference
+    preprocess.py:54)."""
     la, lo = _c(lat), _c(lon)
     return (
-        (la > F.lit(lat_range[0]))
-        & (la < F.lit(lat_range[1]))
-        & (lo > F.lit(lon_range[0]))
-        & (lo < F.lit(lon_range[1]))
+        (la > F.lit(BBOX_LAT[0]))
+        & (la < F.lit(BBOX_LAT[1]))
+        & (lo > F.lit(BBOX_LON[0]))
+        & (lo < F.lit(BBOX_LON[1]))
     )
 
 

@@ -61,21 +61,22 @@ def _prime_vertical_radius(lat_rad: Column) -> Column:
     return F.lit(WGS84_A) / F.sqrt(1.0 - F.lit(WGS84_E2) * F.pow(F.sin(lat_rad), 2))
 
 
-def ecef_x(lon_deg: Column | str, lat_deg: Column | str, height_m: float = DEFAULT_HEIGHT_M) -> Column:
+def ecef_x(lon_deg: Column | str, lat_deg: Column | str) -> Column:
     """Geodetic → geocentric (ECEF) X in meters (reference _util.py:58-79).
 
-    ``x = (N(φ) + h) · cosφ · cosλ`` with the reference's fixed h = 124 m.
+    ``x = (N(φ) + h) · cosφ · cosλ`` with the reference's fixed
+    h = DEFAULT_HEIGHT_M = 124 m.
     """
     lat = F.radians(_c(lat_deg))
     lon = F.radians(_c(lon_deg))
-    return (_prime_vertical_radius(lat) + F.lit(height_m)) * F.cos(lat) * F.cos(lon)
+    return (_prime_vertical_radius(lat) + F.lit(DEFAULT_HEIGHT_M)) * F.cos(lat) * F.cos(lon)
 
 
-def ecef_y(lon_deg: Column | str, lat_deg: Column | str, height_m: float = DEFAULT_HEIGHT_M) -> Column:
+def ecef_y(lon_deg: Column | str, lat_deg: Column | str) -> Column:
     """Geodetic → geocentric (ECEF) Y in meters: ``(N(φ) + h) · cosφ · sinλ``."""
     lat = F.radians(_c(lat_deg))
     lon = F.radians(_c(lon_deg))
-    return (_prime_vertical_radius(lat) + F.lit(height_m)) * F.cos(lat) * F.sin(lon)
+    return (_prime_vertical_radius(lat) + F.lit(DEFAULT_HEIGHT_M)) * F.cos(lat) * F.sin(lon)
 
 
 def haversine_km(

@@ -151,7 +151,7 @@ def coarse_cells(n_vectors: int, n_train: int | None = None) -> int:
     ≥ ~39 training points per centroid — FAISS's min-points warning
     threshold; a k the sample can't populate trains noise centroids and
     the recall certificate would certify nothing. The cap applies AFTER
-    the [8, 2^16] clamp (ADVICE r14): a sample too thin to populate even
+    the [8, 2^16] clamp: a sample too thin to populate even
     the minimum fan-out (n_train < ~312) returns k < 8 honestly — the
     FAISS floor wins over the fan-out floor, never silently violated."""
     import math
@@ -618,7 +618,7 @@ def max_files_per_partition(path: str, prefix: str) -> int:
     (directory metadata, not data).
 
     Listed through the Hadoop FileSystem API when a SparkSession is
-    active (ADVICE r14: the read path deliberately globs through Hadoop
+    active (the read path deliberately globs through Hadoop
     so remote schemes work — a trigger that walked the LOCAL filesystem
     would silently read 0 files on a remote index and never fire);
     without an active session it falls back to ``os.walk`` (local-only
@@ -682,9 +682,9 @@ def compact_cell_epochs(
 
     Any top-level ``_*.json`` marker files living inside the layout dir
     (e.g. ``_INCR_META.json`` for the incremental layout, or the
-    ``_LAYOUT_META.json`` convention) are preserved across the rewrite
-    (ADVICE r14): the static overwrite deletes everything under ``path``,
-    and a lost marker would make the next ``_incr_layout`` open see an
+    ``_LAYOUT_META.json`` convention) are preserved across the rewrite:
+    the static overwrite deletes everything under ``path``, and a lost
+    marker would make the next ``_incr_layout`` open see an
     unmarked layout and discard the just-compacted index with a full
     rebuild — compaction undone, the work wasted."""
     markers: dict[str, bytes] = {}

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from streaming_data_pipeline_capstone_spark.operators.textstats import fingerprint, word_shingles
+from streaming_data_pipeline_capstone_spark.operators.textstats import fingerprint
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # rows per band r = k/b = 3 → catches jaccard ≳ 0.63
@@ -46,9 +46,9 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingles array<string>) — the input to both MinHash and exact
-    Jaccard.
+def shingle_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, word 3-gram shingles array<string>) — the input to both MinHash
+    and exact Jaccard.
 
     Tokenization is projected into its own column before shingling so the
     per-document split runs once, not once per lambda reference (see
@@ -69,7 +69,7 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     # fired; spread_small_input detects actual input size instead.
     df = spread_small_input(df)
     return df.select(F.col(id_col).alias("doc"), tokens(text_col).alias("t")).select(
-        "doc", shingles_from_tokens(F.col("t"), n).alias("shingles")
+        "doc", shingles_from_tokens(F.col("t")).alias("shingles")
     )
 
 
@@ -206,9 +206,6 @@ def minhash_lsh_dedup(
     id_col: str,
     text_col: str,
     threshold: float = 0.6,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
     pre_dedup: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: verified (doc1, doc2, jaccard).
@@ -243,14 +240,14 @@ def minhash_lsh_dedup(
     # returns before materialization so it cannot unpersist itself
     from streaming_data_pipeline_capstone_spark.cache import scoped_persist
 
-    sets_df = scoped_persist(shingle_sets(df, id_col, text_col, shingle_n))
-    sigs = minhash_signatures(sets_df, num_hashes)
-    cands = candidate_pairs_from_bands(lsh_bands(sigs, num_hashes, bands))
+    sets_df = scoped_persist(shingle_sets(df, id_col, text_col))
+    sigs = minhash_signatures(sets_df, DEFAULT_NUM_HASHES)
+    cands = candidate_pairs_from_bands(lsh_bands(sigs, DEFAULT_NUM_HASHES, DEFAULT_BANDS))
     return jaccard_verify(cands, sets_df, threshold)
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.6, shingle_n: int = 3
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.6
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dups via the inverted shingle index.
 
@@ -260,7 +257,7 @@ def ngram_jaccard_pairs(
     """
     from streaming_data_pipeline_capstone_spark.cache import scoped_persist
 
-    sets_df = scoped_persist(shingle_sets(df, id_col, text_col, shingle_n))
+    sets_df = scoped_persist(shingle_sets(df, id_col, text_col))
     inv = sets_df.select("doc", F.explode("shingles").alias("sh"))
     # |A ∩ B| = number of inverted-index buckets both docs occupy: count
     # pair instances instead of re-intersecting shingle arrays per pair.
@@ -282,7 +279,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_bits(text_col: Column | str, nibbles: int = 16) -> Column:
+def simhash_bits(text_col: Column | str) -> Column:
     """SimHash-style fingerprint as a bit-string over md5 nibble parities.
 
     For each of the 16 hex positions of md5(token), tokens vote +1 if the
@@ -301,7 +298,7 @@ def simhash_bits(text_col: Column | str, nibbles: int = 16) -> Column:
         ).otherwise(-1)
 
     bits = []
-    for p in range(1, nibbles + 1):
+    for p in range(1, 17):
         vote = F.aggregate(toks, F.lit(0), _vote(p))
         bits.append(F.when(vote > 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
@@ -343,13 +340,11 @@ def _union_find_components(rows) -> dict:
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "doc1",
-    dst: str = "doc2",
     max_iter: int = 25,
     driver_max_edges: int | None = None,
 ) -> DataFrame:
-    """Connected components over an undirected pair list: (node, component)
-    where component = min node id reachable from it.
+    """Connected components over an undirected ``(doc1, doc2)`` pair list:
+    (node, component) where component = min node id reachable from it.
 
     The step real dedup pipelines need after pair generation — near-dup
     pairs are transitive in intent ("all versions of this document"), so
@@ -385,7 +380,7 @@ def connected_components(
     """
     if driver_max_edges is None:
         driver_max_edges = _CC_DRIVER_MAX_EDGES
-    sel = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sel = pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
     gated_cache = None
     if driver_max_edges > 0:
         gated_cache = sel.persist()
@@ -395,7 +390,7 @@ def connected_components(
             gated_cache.unpersist()
             comp = _union_find_components([(r["a"], r["b"]) for r in head])
             spark = pairs.sparkSession
-            node_type = pairs.schema[src].dataType
+            node_type = pairs.schema["doc1"].dataType
             out_schema = T.StructType(
                 [
                     T.StructField("node", node_type, True),
@@ -422,7 +417,7 @@ def connected_components(
     # cluster with lineage-recovery requirements use reliable checkpoint
     # (spark.sparkContext.setCheckpointDir + .checkpoint()) instead.
     #
-    # Checkpoint-block hygiene (r11 ADVICE sweep): each round's
+    # Checkpoint-block hygiene: each round's
     # localCheckpoint pins its blocks in executor storage and nothing
     # unpins them — a 10-round run on a long-lived session leaks 10
     # label-table copies. Once round i's checkpoint is materialized (the

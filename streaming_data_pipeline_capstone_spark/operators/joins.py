@@ -23,23 +23,21 @@ from pyspark.sql import functions as F
 
 
 def broadcast_join(
-    left: DataFrame, small_right: DataFrame, on: str | list[str] | Column, how: str = "inner"
+    left: DataFrame, small_right: DataFrame, on: str | list[str] | Column
 ) -> DataFrame:
-    """Map-side join: replicate the small side to every executor — no
+    """Map-side inner join: replicate the small side to every executor — no
     shuffle of the big side. The right plan for dimension tables (region,
     nation, part at 100 TB fact scale)."""
-    return left.join(F.broadcast(small_right), on=on, how=how)
+    return left.join(F.broadcast(small_right), on=on)
 
 
-def range_join(
-    left: DataFrame, right: DataFrame, condition: Column, how: str = "inner"
-) -> DataFrame:
-    """Theta/range join with an arbitrary non-equi condition.
+def range_join(left: DataFrame, right: DataFrame, condition: Column) -> DataFrame:
+    """Theta/range inner join with an arbitrary non-equi condition.
 
     At scale: if either side is small, Catalyst broadcasts it and the join
     is a vectorized BNLJ; if both are huge, pre-bucket the range dimension
     (see asof_join for the shuffle-friendly alternative)."""
-    return left.join(right, on=condition, how=how)
+    return left.join(right, on=condition)
 
 
 def asof_join(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,9 +57,9 @@ def _fake_decode_features(payload: bytes) -> list[float]:
 
 
 def extract_features(
-    df: DataFrame, payload_col: str = "payload", id_cols: tuple[str, ...] = ()
+    df: DataFrame, id_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
+    """Arrow-batched feature extraction over the binary ``payload`` column.
 
     ``mapInPandas`` so each Python worker sees whole record batches (not
     rows); the output keeps only compact columns (optional ``id_cols``
@@ -75,7 +75,7 @@ def extract_features(
         ]
     )
     src = df.select(
-        *id_cols, F.md5(F.col(payload_col)).alias("checksum"), F.col(payload_col).alias("p")
+        *id_cols, F.md5(F.col("payload")).alias("checksum"), F.col("payload").alias("p")
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -133,7 +133,7 @@ IMAGE_DECODE_SCHEMA = T.StructType(
 
 
 def decode_image(
-    df: DataFrame, payload_col: str = "payload", id_cols: tuple[str, ...] = ()
+    df: DataFrame, id_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """Real image decode over binary payloads (driver mandate X5).
 
@@ -147,13 +147,14 @@ def decode_image(
     Output is the compact per-image summary
     (dims + channel means + corner pixels), never the pixel tensor:
     payloads stay in the scan stage and nothing wide reaches a shuffle.
+    The payloads are read from the ``payload`` column.
     """
     import numpy as np
 
     ids = [df.schema[c] for c in id_cols]
     out_schema = T.StructType([*ids, *IMAGE_DECODE_SCHEMA])
     src = df.select(
-        *id_cols, F.md5(F.col(payload_col)).alias("checksum"), F.col(payload_col).alias("p")
+        *id_cols, F.md5(F.col("payload")).alias("checksum"), F.col("payload").alias("p")
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -190,7 +191,7 @@ def decode_image(
     return src.mapInPandas(batches, out_schema)
 
 
-def sample_video_frames(df: DataFrame, payload_col: str = "payload", every_n: int = 30) -> DataFrame:
+def sample_video_frames(df: DataFrame) -> DataFrame:
     """Frame sampling — NOT available in this environment (needs ffmpeg)."""
     raise NotImplementedError(
         "video frame sampling requires ffmpeg bindings, not shipped here; "

@@ -16,15 +16,16 @@ from pyspark.sql import types as T
 _NUMERIC = (T.IntegerType, T.LongType, T.DoubleType, T.FloatType, T.ShortType, T.DecimalType)
 
 
-def profile_table(df: DataFrame, approx_rsd: float = 0.05, exact: bool = False) -> DataFrame:
+def profile_table(df: DataFrame, exact: bool = False) -> DataFrame:
     """(column, n_rows, n_null, null_frac, n_distinct_approx, min, max)
     per column — numerics profile min/max numerically; everything else
     lexicographically; complex types skip min/max.
 
-    ``n_distinct_approx`` uses HyperLogLog (``approx_count_distinct``) —
-    the only sane distinct count at 100 TB. ``exact=True`` switches to
-    exact distinct counts (validation / small data; this is what the
-    DuckDB oracle checks, since HLL estimates differ across engines).
+    ``n_distinct_approx`` uses HyperLogLog (``approx_count_distinct`` at
+    5% relative SD) — the only sane distinct count at 100 TB.
+    ``exact=True`` switches to exact distinct counts (validation / small
+    data; this is what the DuckDB oracle checks, since HLL estimates
+    differ across engines).
     """
     n = F.count(F.lit(1))
     aggs = [n.alias("__n")]
@@ -35,7 +36,7 @@ def profile_table(df: DataFrame, approx_rsd: float = 0.05, exact: bool = False) 
         per_col.append((f.name, simple))
         aggs.append(F.sum(F.when(c.isNull(), 1).otherwise(0)).alias(f"__null_{f.name}"))
         if simple:
-            nd = F.count_distinct(c) if exact else F.approx_count_distinct(c, approx_rsd)
+            nd = F.count_distinct(c) if exact else F.approx_count_distinct(c, 0.05)
             aggs.append(nd.alias(f"__nd_{f.name}"))
             aggs.append(F.min(c).cast("string").alias(f"__min_{f.name}"))
             aggs.append(F.max(c).cast("string").alias(f"__max_{f.name}"))

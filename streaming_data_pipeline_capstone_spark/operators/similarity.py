@@ -49,8 +49,6 @@ def cosine(a: Column, b: Column) -> Column:
 def cosine_topk(
     corpus: DataFrame,
     query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 20,
 ) -> DataFrame:
     """Exact top-k by cosine against one query vector.
@@ -61,10 +59,10 @@ def cosine_topk(
     """
     q = lit_double_array(query_vec)
     scored = corpus.select(
-        F.col(id_col),
-        F.round(cosine(_as_double(vec_col), q), 6).alias("cosine_sim"),
+        F.col("vec_id"),
+        F.round(cosine(_as_double("embedding"), q), 6).alias("cosine_sim"),
     )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
 
 
 def _plane_component(j: int, i: int) -> Column:
@@ -123,7 +121,6 @@ def hyperplane_signature(
     vec: Column | str,
     num_planes: int = 8,
     dim: int = 64,
-    plane_offset: int = 0,
     planes: list[list[float]] | None = None,
 ) -> Column:
     """LSH bucket id: sign bits of dot products with deterministic planes.
@@ -136,31 +133,26 @@ def hyperplane_signature(
     bands you add (caught by the recall gate in tests/test_llm_ops.py).
     Multiplying into the 4e4 range and taking the fractional part
     decorrelates components, giving ~iid uniform(−1,1) planes. Returns a
-    bit-string like '01101001'. ``plane_offset`` shifts the plane index
-    range so bands draw disjoint plane sets.
+    bit-string like '01101001', from planes 0..num_planes-1.
 
     Pass ``planes`` (from :func:`materialize_planes`, engine-evaluated so
     values are identical) to build the signature from plain float
     literals instead of per-coefficient sin trees — same result, ~10×
     cheaper plan construction, the difference between a 35 s and a 3 s
     launch for the 16-band variant. When ``planes`` is given it must
-    already be the ``num_planes`` planes for this band — i.e. the caller
-    slices ``materialize_planes`` output by ``plane_offset`` itself, and
-    ``plane_offset`` is NOT applied again here.
+    hold exactly ``num_planes`` planes.
     """
     v = _as_double(vec)
     if planes is None:
         plane_cols = [
             F.array(*[_plane_component(j, i) for i in range(dim)])
-            for j in range(plane_offset, plane_offset + num_planes)
+            for j in range(num_planes)
         ]
     else:
         if len(planes) != num_planes:
             raise ValueError(
                 f"planes must contain exactly num_planes={num_planes} "
-                f"pre-sliced planes (got {len(planes)}); plane_offset is "
-                "not applied when planes is supplied — slice the "
-                "materialize_planes output before passing it"
+                f"planes (got {len(planes)})"
             )
         # one Literal node per plane + ONE transform over the plane
         # matrix, not num_planes separate dot subtrees: the corpus-scaled
@@ -182,11 +174,15 @@ def hyperplane_signature(
     return F.concat(*bits)
 
 
+# banded_lsh_config's targets: the sf1-proven bucket occupancy, and the
+# per-pair recall at the threshold
+OCC_TARGET = 1250
+RECALL_TARGET = 0.93
+
+
 def banded_lsh_config(
     n: int,
     threshold: float = 0.4,
-    occ_target: int = 1250,
-    recall_target: float = 0.93,
 ) -> tuple[int, int]:
     """Corpus-scaled banded-LSH parameters: (planes_per_band, num_bands).
 
@@ -196,8 +192,8 @@ def banded_lsh_config(
     - ``planes_per_band`` controls expected bucket occupancy n/2^planes.
       Occupancy is what must stay bounded at scale — the in-bucket verify
       is a GEMM, O(occ² · dim) per bucket, and a bucket must fit one
-      executor task. The rule holds occupancy at ``occ_target`` (the
-      sf1-proven value): planes = max(4, round(log2(n / occ_target))).
+      executor task. The rule holds occupancy at ``OCC_TARGET``:
+      planes = max(4, round(log2(n / OCC_TARGET))).
     - ``num_bands`` then restores recall: a pair exactly at ``threshold``
       collides per-band with probability p^planes (p = 1 − acos(t)/π for
       hyperplane LSH), so bands = ceil(ln(1−R) / ln(1−p^planes)) gives
@@ -216,43 +212,45 @@ def banded_lsh_config(
     dominates, which it does for any n by construction.
     """
     p = 1.0 - math.acos(threshold) / math.pi
-    planes = max(4, round(math.log2(max(n, 1) / occ_target)))
+    planes = max(4, round(math.log2(max(n, 1) / OCC_TARGET)))
     per_band = p**planes
-    bands = max(1, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - per_band)))
+    bands = max(1, math.ceil(math.log(1.0 - RECALL_TARGET) / math.log(1.0 - per_band)))
     return planes, bands
 
 
-def vector_elem_bytes(df: DataFrame, vec_col: str = "embedding") -> int:
+def vector_elem_bytes(df: DataFrame) -> int:
     """Bytes per vector component as the tagged exchange will ship it: the
-    exchange carries ``vec_col`` in its SOURCE type, so array<double>
-    corpora pay 8 bytes/component, not the float32 default (ADVICE r8)."""
-    elem = df.schema[vec_col].dataType.elementType.simpleString()
+    exchange carries ``embedding`` in its SOURCE type, so array<double>
+    corpora pay 8 bytes/component, not the float32 default."""
+    elem = df.schema["embedding"].dataType.elementType.simpleString()
     return 8 if elem == "double" else 4
+
+
+PEAK_SHUFFLE_BYTES = 8 << 30
 
 
 def banded_lsh_band_batch(
     n: int,
     num_bands: int,
     dim: int = 64,
-    peak_bytes: int = 8 << 30,
     elem_bytes: int = 4,
 ) -> int | None:
     """Band-batch size bounding the banded shuffle's peak disk footprint.
 
     The tagged exchange carries ~(elem_bytes·dim vector + bands sig-prefix
     + ~48 key/overhead) bytes per row and n×bands rows; when that total
-    exceeds ``peak_bytes`` the bands are processed in sequential groups of
+    exceeds ``PEAK_SHUFFLE_BYTES`` the bands are processed in sequential groups of
     the returned size (None = single job). ``elem_bytes`` must match the
     corpus's array element type (use :func:`vector_elem_bytes`) — a
     double-typed corpus ships 2× the float32 payload, and sizing with 4
-    would let the real peak run ~2× past the target. 8 GiB default keeps
+    would let the real peak run ~2× past the target. The 8 GiB bound keeps
     the sandbox's disk headroom comfortable; at cluster scale the same
     rule is "peak = a small multiple of the corpus", the knob that makes
     bands a throughput factor instead of a disk-capacity factor."""
     row_bytes = elem_bytes * dim + num_bands + 48
-    if n * num_bands * row_bytes <= peak_bytes:
+    if n * num_bands * row_bytes <= PEAK_SHUFFLE_BYTES:
         return None
-    return max(1, int(peak_bytes // max(n * row_bytes, 1)))
+    return max(1, int(PEAK_SHUFFLE_BYTES // max(n * row_bytes, 1)))
 
 
 def _pairs_within(pdf, threshold: float):
@@ -260,7 +258,7 @@ def _pairs_within(pdf, threshold: float):
     via a normalized GEMM in row blocks.
 
     Blocked because bucket size is data-dependent, not rule-bounded: the
-    occupancy rule holds the EXPECTED bucket at ~occ_target, but clustered
+    occupancy rule holds the EXPECTED bucket at ~OCC_TARGET, but clustered
     corpora (e.g. many near-copies of a base document sharing every sign
     bit) concentrate into hot buckets 10–40× that. A full m×m similarity
     matrix plus triu index arrays is O(m²) memory — at m≈50k that's tens
@@ -343,8 +341,6 @@ _PAIR_SCHEMA = "id1 long, id2 long, cosine_sim double"
 
 def lsh_similar_pairs(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     num_planes: int = 8,
     dim: int = 64,
@@ -390,9 +386,9 @@ def lsh_similar_pairs(
     )
     if num_bands == 1:
         tagged = corpus.select(
-            F.col(id_col).alias("vid"),
-            _as_double(vec_col).alias("v"),
-            hyperplane_signature(vec_col, num_planes, dim, planes=all_planes).alias("sig"),
+            F.col("vec_id").alias("vid"),
+            _as_double("embedding").alias("v"),
+            hyperplane_signature("embedding", num_planes, dim, planes=all_planes).alias("sig"),
         )
         return tagged.groupBy("sig").applyInPandas(
             lambda pdf: _pairs_within(pdf, threshold), _PAIR_SCHEMA
@@ -445,15 +441,15 @@ def lsh_similar_pairs(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 bits = (x @ plane_mat.T) > 0  # (n, bands*planes)
                 sig_ints = (
                     bits.reshape(len(x), num_bands, num_planes) * weights
                 ).sum(axis=2)  # (n, bands)
                 packed = sig_ints.astype(sig_dtype)
                 sig_bytes = [row.tobytes() for row in packed]
-                vids = pdf[id_col].to_numpy()
-                vecs = pdf[vec_col]
+                vids = pdf["vec_id"].to_numpy()
+                vecs = pdf["embedding"]
                 for b in range(band_lo, band_hi):
                     yield pd.DataFrame(
                         {
@@ -467,8 +463,8 @@ def lsh_similar_pairs(
 
         return tag_bands
 
-    vec_type = corpus.schema[vec_col].dataType.simpleString()
-    src = corpus.select(id_col, vec_col)
+    vec_type = corpus.schema["embedding"].dataType.simpleString()
+    src = corpus.select("vec_id", "embedding")
     # Parallelism guard for SMALL inputs only: a single-row-group parquet
     # file scans as one split, which would serialize the tagging GEMM and
     # the shuffle write into one task (measured 200s each at sf10). At
@@ -494,7 +490,7 @@ def lsh_similar_pairs(
     # reclaimable — before the next group begins. Group outputs are
     # disjoint (global first-match-band prefix), union = the one-job plan.
     #
-    # NOTE (execution semantics, ADVICE r8): unlike every other path in
+    # NOTE (execution semantics): unlike every other path in
     # this module, the batched path is EAGER — the group jobs run at call
     # time, and the returned DataFrame is a scan over their committed
     # parquet. The scratch location must be a filesystem BOTH executors
@@ -557,14 +553,14 @@ def _band_batch_scratch(spark: SparkSession) -> str:
             base = None
     if not base:
         base = spark.conf.get("spark.sql.warehouse.dir")
-    # Fail FAST instead of losing rows silently (ADVICE r9): on a real
+    # Fail FAST instead of losing rows silently: on a real
     # multi-node cluster a file: fallback resolves to node-local disk, so
     # executor task commits land on machines the final read never sees.
     master = spark.sparkContext.master or ""
     is_local = master.startswith("local")
     node_local = base.startswith("file:")
     if not node_local and "://" not in base:
-        # A scheme-less path resolves against fs.defaultFS (ADVICE r10):
+        # A scheme-less path resolves against fs.defaultFS:
         # on a cluster whose default filesystem is HDFS/S3 it IS shared,
         # so only classify it node-local when the default FS is file:.
         try:
@@ -599,8 +595,6 @@ def _band_batch_scratch(spark: SparkSession) -> str:
 
 def brute_force_pairs(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.45,
     num_blocks: int = 8,
 ) -> DataFrame:
@@ -625,12 +619,12 @@ def brute_force_pairs(
         tasks, "task int, ba int, bb int, is_self boolean"
     )
     tagged = corpus.select(
-        F.col(id_col).alias("vid"),
-        _as_double(vec_col).alias("v"),
+        F.col("vec_id").alias("vid"),
+        _as_double("embedding").alias("v"),
         # pmod(hash(.)) not id % nb: raw mod collapses blocks for ids
         # sharing a factor with nb and maps negative ids to negative
         # remainders no task matches (silent row drop)
-        F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks)).cast("int").alias("blk"),
+        F.pmod(F.hash(F.col("vec_id")), F.lit(num_blocks)).cast("int").alias("blk"),
     )
     as_a = tagged.join(tasks_df, tagged.blk == tasks_df.ba).select(
         "task", "is_self", "vid", "v", F.lit(0).alias("side")
@@ -684,8 +678,8 @@ def _cell_block_tasks(
     The cell histogram is ONE metadata-sized aggregate (k rows — k is the
     codebook size, model metadata, never data-scale); each cell of n rows
     splits into ceil(n / target_rows) blocks, and every block pair (self
-    pairs included) becomes one task keyed (cell, ba, bb). Two round-7
-    ADVICE fixes shape the mechanics:
+    pairs included) becomes one task keyed (cell, ba, bb). Two fixes shape
+    the mechanics:
 
     - the block key is ``pmod(hash(id), nb)`` — a raw ``id % nb`` only
       balances for ids uniform mod nb (ids sharing a factor with nb
@@ -740,9 +734,6 @@ def cell_blocked_pairs(
     cells: DataFrame,
     threshold: float,
     target_rows: int = 4096,
-    id_col: str = "vid",
-    vec_col: str = "v",
-    cell_col: str = "cell",
 ) -> DataFrame:
     """All (id1 < id2) cosine >= threshold pairs WITHIN each cell, with hot
     cells salted into bounded tasks.
@@ -760,7 +751,7 @@ def cell_blocked_pairs(
     exactly the one-task-per-cell plan. Pair set and 6-dp scores are
     identical to the unsalted verify (same blocked GEMM, same global
     triangle)."""
-    tagged, _ = _cell_block_tasks(cells, target_rows, id_col, vec_col, cell_col)
+    tagged, _ = _cell_block_tasks(cells, target_rows, "vid", "v", "cell")
 
     def score(pdf):
         return _score_sided(pdf, threshold)
@@ -915,16 +906,15 @@ def lloyd_kmeans_centroids(
     vecs: DataFrame,
     k: int,
     iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> list[list[float]]:
-    """Train k-means; returns the final centroids (k×dim model metadata)."""
+    """Train k-means over ``(vec_id, v)`` rows; returns the final centroids
+    (k×dim model metadata)."""
     # every iteration scans the corpus once; persist so rounds 2..n read
     # the decoded/cast vectors from block storage instead of re-running
     # the parquet scan + cast pipeline
     vecs = vecs.persist()
     try:
-        init_rows = vecs.orderBy(id_col).limit(k).select(vec_col).collect()
+        init_rows = vecs.orderBy("vec_id").limit(k).select("v").collect()
         centroids = [[float(x) for x in r[0]] for r in init_rows]
         for _ in range(iters):
             # two selects, deliberately: with assign_cells in the SAME
@@ -934,17 +924,17 @@ def lloyd_kmeans_centroids(
             # iteration at sf0.01). Materializing `cell` below the
             # Generate evaluates it once per vector.
             if k >= PANDAS_ASSIGN_MIN_K:
-                assigned = vecs.select(F.col(vec_col)).mapInPandas(
-                    assign_cells_batches(centroids, vec_col),
-                    schema=f"cell int, {vec_col} array<double>",
+                assigned = vecs.select(F.col("v")).mapInPandas(
+                    assign_cells_batches(centroids, "v"),
+                    schema="cell int, v array<double>",
                 )
             else:
                 assigned = vecs.select(
-                    assign_cells(F.col(vec_col), centroids).alias("cell"),
-                    F.col(vec_col),
+                    assign_cells(F.col("v"), centroids).alias("cell"),
+                    F.col("v"),
                 )
             assigned = assigned.select(
-                "cell", F.posexplode(vec_col).alias("idx", "x")
+                "cell", F.posexplode("v").alias("idx", "x")
             )
             means = (
                 assigned.groupBy("cell", "idx")
@@ -980,8 +970,6 @@ def pq_train(
     sub_dim: int,
     k: int,
     iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> list[list[list[float]]]:
     """Per-subspace codebooks: result[s][code] = centroid (len sub_dim).
 
@@ -998,7 +986,7 @@ def pq_train(
     """
     vecs = vecs.persist()  # same scan-reuse as lloyd_kmeans_centroids
     try:
-        init_rows = vecs.orderBy(id_col).limit(k).select(vec_col).collect()
+        init_rows = vecs.orderBy("vec_id").limit(k).select("v").collect()
         books = [
             [[float(x) for x in r[0][s * sub_dim : (s + 1) * sub_dim]] for r in init_rows]
             for s in range(subs)
@@ -1006,7 +994,7 @@ def pq_train(
         for _ in range(iters):
             sub_structs = []
             for s, book in enumerate(books):
-                sl = F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim)
+                sl = F.slice(F.col("v"), s * sub_dim + 1, sub_dim)
                 sub_structs.append(
                     F.struct(
                         F.lit(s).alias("sub"),

@@ -89,6 +89,7 @@ def skewed_collect_list(
         key,
         partial_aggs=[F.collect_list(col).alias("__part")],
         final_aggs=[F.flatten(F.collect_list("__part")).alias(f"{col}_list")],
+        salt=salt,
     )
 
 
@@ -117,21 +118,15 @@ def skewed_collect_list(
 _SPREAD_MAX_BYTES = 64 * 1024 * 1024
 
 
-def spread_small_input(
-    df: DataFrame,
-    target: int | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Repartition ``df`` to ``target`` (default: defaultParallelism) iff
-    its input files are few AND provably small — the single-row-group
-    gate-corpus case where byte-range splits cannot parallelize the scan.
-    Results are unchanged (round-robin redistribution only); at real
-    scale the guard short-circuits on file count alone."""
+def spread_small_input(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to defaultParallelism iff its input files are
+    fewer than that AND total at most _SPREAD_MAX_BYTES — the
+    single-row-group gate-corpus case where byte-range splits cannot
+    parallelize the scan. Results are unchanged (round-robin
+    redistribution only); at real scale the guard short-circuits on file
+    count alone."""
     spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
-    if max_bytes is None:
-        max_bytes = _SPREAD_MAX_BYTES
+    target = spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:
@@ -145,6 +140,6 @@ def spread_small_input(
         p = jvm.org.apache.hadoop.fs.Path(f)
         fs = p.getFileSystem(conf)
         total += fs.getFileStatus(p).getLen()
-        if total > max_bytes:
+        if total > _SPREAD_MAX_BYTES:
             return df
     return df.repartition(target)

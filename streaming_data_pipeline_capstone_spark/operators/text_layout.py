@@ -81,16 +81,14 @@ _TARGET_TERMS_PER_BUCKET = 4096
 _MAX_PREFIX_LEN = 8
 
 
-def postings_prefix_len(
-    n_distinct_terms: int, target_per_bucket: int = _TARGET_TERMS_PER_BUCKET
-) -> int:
+def postings_prefix_len(n_distinct_terms: int) -> int:
     """Smallest hex-prefix length L whose 16^L buckets hold ≤
-    ``target_per_bucket`` expected terms each — the fan-out RULE (the
+    ``_TARGET_TERMS_PER_BUCKET`` expected terms each — the fan-out RULE (the
     ship-the-knob-as-a-rule pattern of state_bucket_prefix_len /
     banded_lsh_config). Chosen once at build and recorded in the marker;
     probes read it back rather than recomputing from a possibly-changed
     corpus."""
-    need = max(1.0, n_distinct_terms / max(1, target_per_bucket))
+    need = max(1.0, n_distinct_terms / _TARGET_TERMS_PER_BUCKET)
     return min(_MAX_PREFIX_LEN, max(1, math.ceil(math.log(need, 16))))
 
 

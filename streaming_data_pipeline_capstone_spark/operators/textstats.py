@@ -49,14 +49,14 @@ def shingles_from_tokens(t: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(t) < n, whole).otherwise(grams))
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles; documents shorter than ``n`` tokens
+def word_shingles(text: Column | str) -> Column:
+    """Distinct word 3-gram shingles; documents shorter than 3 tokens
     contribute their whole text as a single shingle.
 
     Prefer projecting :func:`tokens` into a column and calling
     :func:`shingles_from_tokens` — see its docstring for why.
     """
-    return shingles_from_tokens(tokens(text), n)
+    return shingles_from_tokens(tokens(text))
 
 
 def punct_ratio(text: Column | str) -> Column:
@@ -137,26 +137,24 @@ def hash_bucket(id_col: Column | str, buckets: int = 10000) -> Column:
     return (h % buckets).cast("int")
 
 
-def hash_split(
-    df,
-    id_col: str,
-    weights: dict[str, float],
-    split_col: str = "split",
-    buckets: int = 10000,
-):
-    """Assign every row a deterministic split label by id-hash bucket.
+_SPLIT_BUCKETS = 10000
+
+
+def hash_split(df, id_col: str, weights: dict[str, float]):
+    """Assign every row a deterministic ``split`` label by id-hash bucket
+    (one of _SPLIT_BUCKETS).
 
     ``weights`` maps label → fraction (must sum to ≤ 1; remainder gets the
     last label). Example: {"train": 0.8, "val": 0.1, "test": 0.1}.
     """
-    b = hash_bucket(id_col, buckets)
+    b = hash_bucket(id_col, _SPLIT_BUCKETS)
     expr = None
     acc = 0.0
     labels = list(weights.items())
     for name, w in labels[:-1]:
         acc += w
-        cond = b < int(round(acc * buckets))
+        cond = b < int(round(acc * _SPLIT_BUCKETS))
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = labels[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)

@@ -19,7 +19,7 @@ the reference planned its MLlib/TensorFlow model (README.md:94-98).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_capstone_spark.functions.cleaning import bbox_filter
@@ -37,10 +37,10 @@ KINEMATIC_VALUE_COLS = [
 ]
 
 
-def recent_positions_stream(processed: DataFrame, k: int = 3) -> DataFrame:
-    """Streaming last-K positions per vessel, state in the JVM state store."""
+def recent_positions_stream(processed: DataFrame) -> DataFrame:
+    """Streaming last-3 positions per vessel, state in the JVM state store."""
     return last_k_per_key_stream(
-        processed, key="mmsi", ts_col="timestamp_utc", value_cols=KINEMATIC_VALUE_COLS, k=k
+        processed, key="mmsi", ts_col="timestamp_utc", value_cols=KINEMATIC_VALUE_COLS, k=3
     )
 
 
@@ -88,19 +88,25 @@ def step_features(positions: DataFrame) -> DataFrame:
     return out.drop("prev_lon", "prev_lat", "x1", "y1", "x2", "y2", "__interp")
 
 
-def score_paths(features: DataFrame) -> DataFrame:
+def path_score(speed: Column, angle: Column) -> Column:
     """U-3 scorer stub: the reference's never-built MLlib/TensorFlow
     trajectory predictor (README.md:5-6,94,98), hosted the 100 TB-safe
-    way — an Arrow-batched pandas_udf. The model here is a deterministic
-    placeholder (dead-reckoning-ish linear score); swap `_score` for a
-    real model's predict.
-    """
+    way — an Arrow-batched pandas_udf. The model is a deterministic
+    placeholder, ``round(speed·0.1 + angle·0.01, 6)`` with a null angle
+    read as 0; swap the body for a real model's predict.
+
+    The UDF is built per call: a module-level ``@pandas_udf`` needs an
+    active SparkSession at import time."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
-    def _score(speed: pd.Series, angle: pd.Series) -> pd.Series:
-        return (speed.fillna(0.0) * 0.1 + angle.fillna(0.0) * 0.01).round(6)
+    def score(speed: pd.Series, angle: pd.Series) -> pd.Series:
+        return (speed * 0.1 + angle.fillna(0.0) * 0.01).round(6)
 
-    return features.withColumn(
-        "path_score", _score(F.col("speed_over_ground"), F.col("path_angle_deg"))
-    )
+    return score(speed, angle)
+
+
+def score_paths(features: DataFrame) -> DataFrame:
+    """Add ``path_score`` (:func:`path_score`, a null speed read as 0)."""
+    speed = F.coalesce(F.col("speed_over_ground"), F.lit(0.0))
+    return features.withColumn("path_score", path_score(speed, F.col("path_angle_deg")))

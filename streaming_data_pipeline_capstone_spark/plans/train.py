@@ -80,13 +80,13 @@ def fit_ols(df: DataFrame, features: list[str], target: str) -> list[float]:
     return solve_normal_equations(stats, len(features))
 
 
-def predict_expr(features: list[str], coefs: list[float], out_round: int = 5) -> F.Column:
+def predict_expr(features: list[str], coefs: list[float]) -> F.Column:
     """The fitted model as a native Column expression (no UDF): the dot
     product of literal coefficients with the feature columns."""
     expr = F.lit(0.0)
     for c, f in zip(coefs, features):
         expr = expr + F.lit(c) * F.col(f)
-    return F.round(expr, out_round)
+    return F.round(expr, 5)
 
 
 # -- SQL generation for the oracle twin --------------------------------------

@@ -1061,9 +1061,9 @@ def _doc_bucket_width(spark: SparkSession, sf_dir: str) -> int:
     return max(1, math.ceil((bounds["hi"] - bounds["lo"] + 1) / target))
 
 
-def _pack_bins(t: DataFrame, bucket_width: int, budget: int = _PACK_BUDGET) -> DataFrame:
+def _pack_bins(t: DataFrame, bucket_width: int) -> DataFrame:
     """Assign `bin_id` = floor(exclusive per-lang running token sum /
-    budget) to every row of ``t`` (doc_id, lang, n_tok) via the two-level
+    _PACK_BUDGET) to every row of ``t`` (doc_id, lang, n_tok) via the two-level
     prefix sum described above — bit-identical to
     ``Window.partitionBy(lang).orderBy(doc_id)`` (pinned by
     tests/test_curation_pipeline.py) with langs × buckets parallelism
@@ -1092,7 +1092,7 @@ def _pack_bins(t: DataFrame, bucket_width: int, budget: int = _PACK_BUDGET) -> D
     cum_excl = F.col("bkt_off") + F.coalesce(F.sum("n_tok").over(w_in), F.lit(0))
     return (
         b.join(F.broadcast(offsets), ["lang", "bkt"])
-        .withColumn("bin_id", F.floor(cum_excl / budget).cast("bigint"))
+        .withColumn("bin_id", F.floor(cum_excl / _PACK_BUDGET).cast("bigint"))
         .drop("bkt", "bkt_off")
     )
 

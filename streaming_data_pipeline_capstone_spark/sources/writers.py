@@ -10,7 +10,6 @@ shuffle-free reads:
   (Catalyst prunes directories before any IO happens)
 - ``bucketBy(n, key)`` → co-located joins/aggregations on the key: two
   tables bucketed the same way join with ZERO exchange
-- sorted-within-bucket → merge-friendly scans for as-of/window work
 
 Writers accept any DataFrame; date partitioning derives the partition
 column from an event-time column when asked.
@@ -25,16 +24,15 @@ from pyspark.sql import functions as F
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
     max_records_per_file: int | None = None,
 ) -> None:
-    """Plain or partitioned parquet write.
+    """Plain or partitioned parquet write (overwrite mode).
 
     ``max_records_per_file`` caps file size at scale (avoids the
     giant-file/straggler problem when a partition is skewed).
     """
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
@@ -46,15 +44,11 @@ def write_date_partitioned(
     df: DataFrame,
     path: str,
     ts_col: str,
-    mode: str = "overwrite",
-    extra_partition_cols: list[str] | None = None,
 ) -> None:
     """Partition by the DATE of an event-time column (the standard
     time-series layout: one directory per day, pruned by date predicates)."""
     out = df.withColumn("event_date", F.to_date(F.col(ts_col)))
-    write_parquet(
-        out, path, mode=mode, partition_by=["event_date", *(extra_partition_cols or [])]
-    )
+    write_parquet(out, path, partition_by=["event_date"])
 
 
 def write_bucketed_table(
@@ -62,8 +56,6 @@ def write_bucketed_table(
     table_name: str,
     bucket_col: str,
     num_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
     """Bucketed (hive-style) table: co-locates rows by hash(bucket_col).
@@ -72,21 +64,13 @@ def write_bucketed_table(
     requires no exchange — the join is planned as a zip of matching
     buckets. This is the batch twin of pre-partitioned Kafka topics.
     """
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
+    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name, format="parquet")
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    sep: str = ",",
-    header: bool = True,
-) -> None:
-    """CSV export (the reference's sink format — kept for parity; parquet
-    is the default everywhere else)."""
-    df.write.mode(mode).option("header", str(header).lower()).option("sep", sep).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """Comma-separated CSV export with a header row (the reference's sink
+    format — kept for parity; parquet is the default everywhere else)."""
+    df.write.mode("overwrite").option("header", "true").csv(path)

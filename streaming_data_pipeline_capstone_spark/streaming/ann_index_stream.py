@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
     append_cell_epoch,
 )
+from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 
 def streaming_index_ingest(
@@ -40,11 +41,11 @@ def streaming_index_ingest(
     centroids: list[list[float]],
     pq_books: list[list[list[float]]],
     pq_sub_dim: int,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the index-ingest job over a (vec_id, embedding, meta...)
-    vector stream. Each micro-batch lands as one epoch level under the
-    cell-partitioned index at ``index_path``."""
+    vector stream, draining what is available now. Each micro-batch
+    lands as one epoch level under the cell-partitioned index at
+    ``index_path``."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         append_cell_epoch(
@@ -57,9 +58,4 @@ def streaming_index_ingest(
             int(epoch_id),
         )
 
-    w = stream_vecs.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return for_each_batch(stream_vecs, handle, checkpoint_dir, available_now=True)

@@ -77,6 +77,7 @@ from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
     read_index_or_none,
     write_epoch_idempotent,
 )
+from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 # Fingerprint-index fan-out: 1 hex char of the md5 (16 buckets) is the
 # gate default; a stream sized with ``expected_batch_docs`` derives the
@@ -279,33 +280,29 @@ def start_verdict_stream(
     out_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     expected_batch_docs: int | None = None,
-    fp_prefix_len: int | None = None,
 ) -> StreamingQuery:
-    """Start the verdict job over a (doc_id, lang, text) document stream.
-    Verdicts land under ``out_dir`` (epoch-partitioned parquet); the
-    fingerprint dedup index under ``state_dir``.
+    """Start the verdict job over a (doc_id, lang, text) document stream,
+    draining what is available now. Verdicts land under ``out_dir``
+    (epoch-partitioned parquet); the fingerprint dedup index under
+    ``state_dir``.
 
     ``expected_batch_docs`` sizes the fp-index bucket fan-out by the
     dedup_stream rule; omitted, the gate default (16 buckets) applies.
-    ``fp_prefix_len`` overrides both — the restart-after-rebucket path,
-    where the index's pinned layout (not the batch-size rule) is the
-    address scheme. Keep the effective value fixed across restarts of
-    the same ``state_dir``; the layout marker fails fast if not."""
+    Keep it fixed across restarts of the same ``state_dir``; the layout
+    marker fails fast if not."""
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
         check_or_write_index_layout,
         state_bucket_prefix_len,
     )
 
-    if fp_prefix_len is None:
-        fp_prefix_len = (
-            state_bucket_prefix_len(expected_batch_docs)
-            if expected_batch_docs is not None
-            else _FP_PREFIX_LEN
-        )
+    fp_prefix_len = (
+        state_bucket_prefix_len(expected_batch_docs)
+        if expected_batch_docs is not None
+        else _FP_PREFIX_LEN
+    )
     # a key's bucket is its address: pin the fan-out for the life of the
-    # state dir, fail fast on a mismatched restart (ADVICE r13; the
+    # state dir, fail fast on a mismatched restart (the
     # fp-index has one bucketed table, so doc_fanout mirrors prefix_len)
     check_or_write_index_layout(state_dir, fp_prefix_len, 16 ** fp_prefix_len)
 
@@ -315,12 +312,7 @@ def start_verdict_stream(
             fp_prefix_len=fp_prefix_len,
         )
 
-    w = stream_docs.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return for_each_batch(stream_docs, handle, checkpoint_dir, available_now=True)
 
 
 def run_stream_curation_verdicts(

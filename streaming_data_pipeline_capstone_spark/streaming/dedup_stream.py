@@ -41,6 +41,7 @@ from streaming_data_pipeline_capstone_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
+from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 
 # State-index bucket fan-out: a RULE of expected batch size, not a
@@ -52,13 +53,12 @@ from streaming_data_pipeline_capstone_spark.operators.dedup import (
 # Hex-prefix buckets quantize N to powers of 16 (the md5-prefix scheme),
 # so the rule returns the smallest prefix length whose fan-out clears
 # the bound — the same ship-the-knob-as-a-rule pattern as
-# operators/similarity.banded_lsh_config. The defaults (prefix length 1
-# = 16 buckets) remain right for the gate corpora's few-hundred-doc
-# batches where more buckets would just multiply tiny files; a stream
-# sized with ``expected_batch_docs`` gets the rule automatically. The
-# fan-out MUST stay fixed for the life of one index (a key's bucket is
-# its address): pick it at stream start, and pass the same value to
-# compact_index.
+# operators/similarity.banded_lsh_config. streaming_minhash_dedup uses
+# the fixed fan-outs below (prefix length 1 = 16 buckets), right for
+# few-hundred-doc batches where more buckets would just multiply tiny
+# files. The fan-out MUST stay fixed for the life of one index (a key's
+# bucket is its address); compact_index may move it and re-pins the
+# layout marker.
 
 MAX_TOUCHED_FRAC = 0.3
 
@@ -67,23 +67,19 @@ _DOC_BUCKETS = 16   # shingle-set / fingerprint index fan-out (gate default)
 _MAX_PREFIX_LEN = 8
 
 
-def state_bucket_prefix_len(
-    expected_batch_keys: int, max_touched_frac: float = MAX_TOUCHED_FRAC
-) -> int:
+def state_bucket_prefix_len(expected_batch_keys: int) -> int:
     """Smallest hex-prefix length whose 16^L fan-out keeps the expected
-    per-batch touched-bucket fraction ≤ ``max_touched_frac``."""
+    per-batch touched-bucket fraction ≤ MAX_TOUCHED_FRAC."""
     import math
 
-    need = max(1.0, expected_batch_keys / -math.log(1.0 - max_touched_frac))
+    need = max(1.0, expected_batch_keys / -math.log(1.0 - MAX_TOUCHED_FRAC))
     return min(_MAX_PREFIX_LEN, max(1, math.ceil(math.log(need, 16))))
 
 
-def state_bucket_fanout(
-    expected_batch_keys: int, max_touched_frac: float = MAX_TOUCHED_FRAC
-) -> int:
+def state_bucket_fanout(expected_batch_keys: int) -> int:
     """Integer fan-out form of the rule (for pmod-bucketed keys), kept a
     power of 16 so both bucket schemes scale in lockstep."""
-    return 16 ** state_bucket_prefix_len(expected_batch_keys, max_touched_frac)
+    return 16 ** state_bucket_prefix_len(expected_batch_keys)
 
 
 _LAYOUT_MARKER = "_LAYOUT_META.json"
@@ -101,7 +97,7 @@ def check_or_write_index_layout(
     UNDETECTED (wrong verdicts, not an error). So the first writer records
     the chosen fan-outs in ``_LAYOUT_META.json`` under the index dir (the
     ann_layout marker convention), and every later open — stream start or
-    compaction — fails fast on mismatch instead (ADVICE r13)."""
+    compaction — fails fast on mismatch instead."""
     import json
 
     os.makedirs(index_dir, exist_ok=True)
@@ -132,7 +128,7 @@ _INDEX_SCHEMA_CACHE: dict[str, object] = {}
 
 def read_index_layout(index_dir: str) -> dict:
     """The pinned layout marker of a state index — the single source of
-    truth for bucket fan-outs at PROBE time (ADVICE r14: a probe that
+    truth for bucket fan-outs at PROBE time (a probe that
     accepts a caller-supplied fan-out can silently hash with a different
     prefix than the writer used — buckets missed, docs dropped, df/scores
     wrong; reading the marker makes that failure impossible, and a
@@ -331,7 +327,6 @@ def _merge_batch(
     threshold: float,
     num_hashes: int,
     bands: int,
-    pre_dedup: bool = True,
     bh_prefix_len: int = _BH_PREFIX_LEN,
     doc_fanout: int = _DOC_BUCKETS,
 ) -> None:
@@ -339,21 +334,19 @@ def _merge_batch(
     bands_path = os.path.join(index_dir, "bands")
     sets_path = os.path.join(index_dir, "sets")
 
-    if pre_dedup:
-        # Streams are where pathological repetition actually shows up
-        # (crawl replays delivering the same page many times per batch):
-        # collapse normalization-identical docs to their min-id
-        # representative BEFORE shingling so k copies can't form a hot
-        # LSH bucket emitting k(k-1)/2 pairs — the same mitigation as
-        # the batch pipeline's minhash_lsh_dedup(pre_dedup=True), on by
-        # default here. One extra in-batch exchange on the 16-byte
-        # fingerprint, never on the text.
-        reps = (
-            batch.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-            .groupBy("fp")
-            .agg(F.min(id_col).alias(id_col))
-        )
-        batch = batch.join(reps, id_col, "left_semi")
+    # Streams are where pathological repetition actually shows up
+    # (crawl replays delivering the same page many times per batch):
+    # collapse normalization-identical docs to their min-id
+    # representative BEFORE shingling so k copies can't form a hot
+    # LSH bucket emitting k(k-1)/2 pairs — the same mitigation as
+    # the batch pipeline's minhash_lsh_dedup(pre_dedup=True). One extra
+    # in-batch exchange on the 16-byte fingerprint, never on the text.
+    reps = (
+        batch.select(F.col(id_col), fingerprint(text_col).alias("fp"))
+        .groupBy("fp")
+        .agg(F.min(id_col).alias(id_col))
+    )
+    batch = batch.join(reps, id_col, "left_semi")
 
     sets_new = shingle_sets(batch, id_col, text_col).persist()
     bands_new = lsh_bands(minhash_signatures(sets_new, num_hashes), num_hashes, bands).persist()
@@ -442,60 +435,35 @@ def streaming_minhash_dedup(
     index_dir: str,
     pairs_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    available_now: bool = True,
-    pre_dedup: bool = True,
-    expected_batch_docs: int | None = None,
 ) -> StreamingQuery:
-    """Start the incremental dedup job over a stream of documents.
+    """Start the incremental dedup job over a ``(doc_id, text)`` stream,
+    draining what is available now.
 
     Emits verified (doc1, doc2, jaccard, epoch) rows to ``pairs_dir`` —
     including pairs whose two sides arrived in different micro-batches —
-    and maintains the band/shingle index under ``index_dir``.
-    ``pre_dedup`` (default ON) collapses normalization-identical docs
-    within each micro-batch before LSH — the hot-bucket mitigation.
-
-    ``expected_batch_docs`` sizes the state-index bucket fan-out by the
-    rule (``state_bucket_prefix_len``): the band index sees ~docs×bands
-    keys per batch, the shingle index ~docs. Omitted, the gate-default
-    fan-out of 16 applies. The value must stay FIXED for the life of
-    ``index_dir`` (a key's bucket is its address) — restarts of the same
-    stream must pass the same number, and compact_index the same fan-outs.
+    and maintains the band/shingle index under ``index_dir``. Each
+    micro-batch first collapses normalization-identical docs (the
+    hot-bucket mitigation). The index uses the fixed fan-outs
+    ``_BH_PREFIX_LEN`` / ``_DOC_BUCKETS``.
     """
-    if expected_batch_docs is not None:
-        bh_prefix_len = state_bucket_prefix_len(expected_batch_docs * bands)
-        doc_fanout = state_bucket_fanout(expected_batch_docs)
-    else:
-        bh_prefix_len, doc_fanout = _BH_PREFIX_LEN, _DOC_BUCKETS
     # fail fast at stream start if index_dir was written under a different
     # layout (first start records it) — see check_or_write_index_layout
-    check_or_write_index_layout(index_dir, bh_prefix_len, doc_fanout)
+    check_or_write_index_layout(index_dir, _BH_PREFIX_LEN, _DOC_BUCKETS)
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
         _merge_batch(
-            batch, epoch_id, index_dir, pairs_dir,
-            id_col, text_col, threshold, num_hashes, bands,
-            pre_dedup=pre_dedup,
-            bh_prefix_len=bh_prefix_len, doc_fanout=doc_fanout,
+            batch, epoch_id, index_dir, pairs_dir, "doc_id", "text",
+            threshold, DEFAULT_NUM_HASHES, DEFAULT_BANDS,
         )
 
-    w = stream_docs.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return for_each_batch(stream_docs, merge, checkpoint_dir, available_now=True)
 
 
 def exact_dedup_stream(
     stream: DataFrame,
     keys: list[str],
     ts_col: str,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Exact streaming deduplication with bounded state.
 
@@ -505,12 +473,12 @@ def exact_dedup_stream(
     ``dropDuplicatesWithinWatermark`` so per-key state is EVICTED once the
     event-time watermark passes — a plain ``dropDuplicates`` on a stream
     buffers every key forever, which is exactly what a 100 TB ingest
-    cannot do. (Trade-off, documented: a duplicate arriving later than
-    the watermark horizon is re-emitted; crawl re-deliveries cluster
-    tightly in time, so the horizon buys bounded state for a bounded—and
-    tunable—dedup window.)
+    cannot do. (Trade-off, documented: with the 10-minute watermark, a
+    duplicate arriving later than the watermark horizon is re-emitted;
+    crawl re-deliveries cluster tightly in time, so the horizon buys
+    bounded state for a bounded dedup window.)
     """
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return stream.withWatermark(ts_col, "10 minutes").dropDuplicatesWithinWatermark(keys)
 
 
 # Compaction trigger rule (the trigger used to be a manual step):
@@ -532,7 +500,7 @@ def files_per_bucket_table(table_path: str) -> int:
     state table (directory metadata, one tree listing, no data read).
     Listed through the Hadoop FileSystem API when a session is active —
     the same contract as the pruned read path — so the compaction
-    trigger fires on remote indexes too (ADVICE r14)."""
+    trigger fires on remote indexes too."""
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         max_files_per_partition,
     )
@@ -644,7 +612,6 @@ def rebucket_decision(
     current_fanout: int,
     window: int = REBUCKET_WINDOW,
     file_floor: int = REBUCKET_FILE_FLOOR,
-    oversize: int = REBUCKET_OVERSIZE,
 ) -> dict:
     """Should the next compaction point REBUCKET this table, and to what
     fan-out? Target: the largest power-of-16 fan-out keeping the expected
@@ -652,7 +619,7 @@ def rebucket_decision(
     observed batch size — est_batch_bytes // file_floor buckets, floored
     at 16. Due iff the last ``window`` epochs ALL wrote at that
     estimate's scale (sustained, not a one-off small batch) and the
-    current fan-out exceeds the target by >= ``oversize``."""
+    current fan-out exceeds the target by >= REBUCKET_OVERSIZE."""
     import math
 
     stats = epoch_write_stats(table_path)
@@ -676,17 +643,17 @@ def rebucket_decision(
         target_prefix_len=target_prefix,
         target_fanout=target_fanout,
     )
-    if current_fanout >= oversize * target_fanout:
+    if current_fanout >= REBUCKET_OVERSIZE * target_fanout:
         out["rebucket_due"] = True
         out["reason"] = (
-            f"fan-out {current_fanout} is >= {oversize}x the file-floor "
+            f"fan-out {current_fanout} is >= {REBUCKET_OVERSIZE}x the file-floor "
             f"target {target_fanout} for {window} consecutive epochs "
             f"(largest batch {est} B -> {target_fanout} buckets at a "
             f"{file_floor} B file floor)"
         )
     else:
         out["reason"] = (
-            f"fan-out {current_fanout} within {oversize}x of target "
+            f"fan-out {current_fanout} within {REBUCKET_OVERSIZE}x of target "
             f"{target_fanout}"
         )
     return out
@@ -696,23 +663,16 @@ def maybe_compact_index(
     spark,
     index_dir: str,
     partitions_per_table: int = 32,
-    bh_prefix_len: int = _BH_PREFIX_LEN,
-    doc_fanout: int = _DOC_BUCKETS,
     max_bucket_files: int = MAX_BUCKET_FILES,
 ) -> bool:
     """Apply the compaction rule: compact iff any bucket's epoch-file
-    count crossed the threshold. Call from the maintenance point (after
-    an availableNow drain / between stream runs — compact_index's
+    count crossed the threshold, keeping the fixed fan-outs
+    streaming_minhash_dedup writes with. Call from the maintenance point
+    (after an availableNow drain / between stream runs — compact_index's
     contract); returns whether a compaction ran."""
     if not index_compaction_due(index_dir, max_bucket_files):
         return False
-    compact_index(
-        spark,
-        index_dir,
-        partitions_per_table=partitions_per_table,
-        bh_prefix_len=bh_prefix_len,
-        doc_fanout=doc_fanout,
-    )
+    compact_index(spark, index_dir, partitions_per_table=partitions_per_table)
     return True
 
 

@@ -15,8 +15,6 @@ index). State is storage-backed, never driver-resident.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -31,6 +29,7 @@ from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
     read_index_or_none,
     write_epoch_idempotent,
 )
+from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 
 def _merge_batch(
@@ -101,14 +100,12 @@ def streaming_similarity_index(
     index_dir: str,
     pairs_dir: str,
     checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     num_planes: int = 6,
     dim: int = 64,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the incremental similarity-indexing job over a vector stream.
+    """Start the incremental similarity-indexing job over a
+    ``(vec_id, embedding)`` stream, draining what is available now.
 
     Emits verified (id1, id2, cosine_sim, epoch) near-neighbor pairs —
     including cross-batch pairs — and maintains the signature index."""
@@ -116,12 +113,7 @@ def streaming_similarity_index(
     def merge(batch: DataFrame, epoch_id: int) -> None:
         _merge_batch(
             batch, epoch_id, index_dir, pairs_dir,
-            id_col, vec_col, threshold, num_planes, dim,
+            "vec_id", "embedding", threshold, num_planes, dim,
         )
 
-    w = stream_vecs.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return for_each_batch(stream_vecs, merge, checkpoint_dir, available_now=True)

@@ -17,17 +17,8 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from streaming_data_pipeline_capstone_spark.schemas import encode_json_envelope
 
 
-def _with_trigger(
-    w: DataStreamWriter,
-    processing_time: str | None = None,
-    available_now: bool = False,
-) -> DataStreamWriter:
-    if available_now:
-        return w.trigger(availableNow=True)
-    if processing_time:
-        # the reference's 30-second micro-batch cadence (predict_path.py:95)
-        return w.trigger(processingTime=processing_time)
-    return w
+def _with_trigger(w: DataStreamWriter, available_now: bool) -> DataStreamWriter:
+    return w.trigger(availableNow=True) if available_now else w
 
 
 def to_kafka(
@@ -35,38 +26,35 @@ def to_kafka(
     topic: str,
     checkpoint: str,
     bootstrap_servers: str = "127.0.0.1:9092",
-    output_mode: str = "update",
-    processing_time: str | None = None,
 ) -> StreamingQuery:
-    """All columns → single JSON value → Kafka (reference preprocess.py:67-74)."""
-    w = (
+    """All columns → single JSON value → Kafka (reference preprocess.py:67-74),
+    in update output mode."""
+    return (
         encode_json_envelope(df)
-        .writeStream.outputMode(output_mode)
+        .writeStream.outputMode("update")
         .format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
+        .start()
     )
-    return _with_trigger(w, processing_time).start()
 
 
 def to_files(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    fmt: str = "parquet",
-    processing_time: str | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Append-mode file sink. The reference wrote CSV (predict_path.py:95);
-    default here is parquet."""
+    """Append-mode parquet file sink (the reference wrote CSV,
+    predict_path.py:95)."""
     w = (
         df.writeStream.outputMode("append")
-        .format(fmt)
+        .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
     )
-    return _with_trigger(w, processing_time, available_now).start()
+    return _with_trigger(w, available_now).start()
 
 
 def to_memory(
@@ -77,14 +65,13 @@ def to_memory(
 ) -> StreamingQuery:
     """Memory sink — deterministic test harness (SURVEY §5 item 3)."""
     w = df.writeStream.outputMode(output_mode).format("memory").queryName(table_name)
-    return _with_trigger(w, available_now=available_now).start()
+    return _with_trigger(w, available_now).start()
 
 
 def for_each_batch(
     df: DataFrame,
     fn: Callable[[DataFrame, int], None],
     checkpoint: str,
-    processing_time: str | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Arbitrary per-micro-batch logic (reference predict_path.py:55-71).
@@ -98,4 +85,4 @@ def for_each_batch(
         .foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
     )
-    return _with_trigger(w, processing_time, available_now).start()
+    return _with_trigger(w, available_now).start()

@@ -27,16 +27,13 @@ def stream_stream_interval_join(
     right_ts: str,
     max_lag: str = "5 minutes",
     watermark: str = "10 minutes",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two event streams on ``key`` where the right event lands within
-    ``± max_lag`` of the left event (event time).
+    """Inner-join two event streams on ``key`` where the right event lands
+    within ``± max_lag`` of the left event (event time).
 
     Both inputs must carry their own event-time column; each gets its own
     watermark. The time-range predicate is REQUIRED for state cleanup —
-    without it Spark must buffer every past row of both streams. ``how``
-    may be inner or left_outer/right_outer/full_outer (outer rows emit
-    only once the watermark passes their eviction bound).
+    without it Spark must buffer every past row of both streams.
     """
     l = left.withWatermark(left_ts, watermark).alias("l")
     r = right.withWatermark(right_ts, watermark).alias("r")
@@ -45,4 +42,4 @@ def stream_stream_interval_join(
         & (F.col(f"r.{right_ts}") >= F.expr(f"l.{left_ts} - INTERVAL {max_lag}"))
         & (F.col(f"r.{right_ts}") <= F.expr(f"l.{left_ts} + INTERVAL {max_lag}"))
     )
-    return l.join(r, cond, how)
+    return l.join(r, cond)

@@ -50,6 +50,7 @@ from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
     check_or_write_index_layout,
     write_epoch_idempotent,
 )
+from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 # Fan-out is a RULE of the expected vocabulary, never a constant
 # (the old _STREAM_PREFIX_LEN = 1 pinned 16 buckets for
@@ -59,7 +60,7 @@ from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
 # smallest 16^L holding <= 4096 expected terms per bucket), applied to a
 # creation-time vocabulary ESTIMATE — a streamed index cannot count its
 # eventual vocabulary, so the caller supplies the catalog estimate the
-# way streaming_minhash_dedup supplies expected_batch_docs. The default
+# way start_verdict_stream takes expected_batch_docs. The default
 # estimate resolves to the gate fan-out of 16 (the corpus-31-term gate
 # regime); the chosen fan-out is pinned for the index's life by the
 # layout marker, and probes READ it back from the marker.
@@ -97,9 +98,9 @@ def streaming_postings_ingest(
     index_dir: str,
     checkpoint_dir: str,
     expected_vocab: int = _DEFAULT_EXPECTED_VOCAB,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the postings-index ingest job over a document stream.
+    """Start the postings-index ingest job over a document stream,
+    draining what is available now.
 
     Per micro-batch: Θ(batch) tokenize/count, one idempotent epoch under
     ``postings/`` (bucketed by the term's md5 prefix) and one 1-row
@@ -141,32 +142,20 @@ def streaming_postings_ingest(
             stats, os.path.join(index_dir, "stats"), epoch_id
         )
 
-    w = stream_docs.writeStream.foreachBatch(ingest).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return for_each_batch(stream_docs, ingest, checkpoint_dir, available_now=True)
 
 
-def maybe_compact_postings_index(
-    spark: SparkSession,
-    index_dir: str,
-    partitions: int = 32,
-    max_bucket_files: int | None = None,
-    auto_rebucket: bool = True,
-) -> bool:
+def maybe_compact_postings_index(spark: SparkSession, index_dir: str) -> bool:
     """The streamed postings index's maintenance point — both rules:
 
-    - files-per-bucket (read amplification): collapse epochs at the
-      current fan-out when any bucket crosses the threshold;
     - write-side rebucket: when the sustained batch
       write shape says the fan-out is over-sized for the batch bytes
       (dedup_stream.rebucket_decision), the compaction rewrite ALSO
       moves every posting to the target fan-out and re-pins the marker —
       probes read the fan-out from the marker, so serving follows the
-      rebucket with no code change (the ask-#2 marker-probe contract is
-      what makes this safe).
+      rebucket with no code change;
+    - files-per-bucket (read amplification): otherwise collapse epochs at
+      the current fan-out when any bucket crosses MAX_BUCKET_FILES.
 
     Returns whether a rewrite ran. Only call with ingest stopped and its
     checkpoint committed (compact_epoch_table's contract)."""
@@ -181,17 +170,15 @@ def maybe_compact_postings_index(
 
     prefix_len = int(read_index_layout(index_dir)["bh_prefix_len"])
     post = os.path.join(index_dir, "postings")
-    if auto_rebucket:
-        decision = rebucket_decision(post, 16 ** prefix_len)
-        if decision["rebucket_due"]:
-            target = decision["target_prefix_len"]
-            compact_epoch_table(spark, post, _term_bucket(target), partitions)
-            _write_index_layout(index_dir, target, 16 ** target)
-            return True
-    limit = MAX_BUCKET_FILES if max_bucket_files is None else max_bucket_files
-    if files_per_bucket_table(post) <= limit:
+    decision = rebucket_decision(post, 16 ** prefix_len)
+    if decision["rebucket_due"]:
+        target = decision["target_prefix_len"]
+        compact_epoch_table(spark, post, _term_bucket(target))
+        _write_index_layout(index_dir, target, 16 ** target)
+        return True
+    if files_per_bucket_table(post) <= MAX_BUCKET_FILES:
         return False
-    compact_epoch_table(spark, post, _term_bucket(prefix_len), partitions)
+    compact_epoch_table(spark, post, _term_bucket(prefix_len))
     return True
 
 
@@ -206,7 +193,7 @@ def bm25_topk_from_stream_index(
 
     The bucket fan-out comes from the index's own ``_LAYOUT_META.json``
     (written at creation by :func:`streaming_postings_ingest`), never
-    from the caller (ADVICE r14: a caller-supplied prefix that disagrees
+    from the caller (a caller-supplied prefix that disagrees
     with the writer's silently mis-probes — buckets missed, docs dropped,
     df/scores wrong; a missing marker fails fast).
 

@@ -96,8 +96,8 @@ def test_pruned_probes_row_identical_to_unpruned(spark, sf_oracle):
 
 
 def test_pruned_probe_reads_only_probed_partitions(spark, sf_oracle):
-    """The storage-pruning claim, asserted from the executed plan (VERDICT
-    r6 ask #2): the scan must carry a literal PartitionFilters predicate on
+    """The storage-pruning claim, asserted from the executed plan: the
+    scan must carry a literal PartitionFilters predicate on
     cell, its runtime numFiles/numPartitions metrics must equal nprobe (of
     the k cell directories on disk), and the IVF-PQ probe must not read the
     raw embedding column at all (ADC runs on the integer codes)."""
@@ -139,7 +139,7 @@ def test_pruned_probe_reads_only_probed_partitions(spark, sf_oracle):
 
 
 def test_semantic_cells_hot_cell_salting(spark):
-    """Skew fixture (VERDICT r6 ask #3): one cell holds ~half the vectors.
+    """Skew fixture: one cell holds ~half the vectors.
     cell_blocked_pairs must (a) split the hot cell into multiple bounded
     tasks — no task sees more than 2x target_rows rows, so task memory and
     GEMM time are bounded regardless of skew — and (b) emit exactly the
@@ -203,7 +203,7 @@ def test_semantic_cells_hot_cell_salting(spark):
 
 
 def test_cell_layout_invalidated_by_model_change(spark, tmp_path):
-    """Round-7 ADVICE (medium): the layout marker must key on the MODEL
+    """The layout marker must key on the MODEL
     content, not just the source mtime — a retrained codebook with an
     unchanged corpus must rebuild the layout (its stored cell assignments
     and PQ codes were computed with the old model), not silently reuse
@@ -252,7 +252,7 @@ def test_cell_layout_invalidated_by_model_change(spark, tmp_path):
 
 
 def test_blocked_pairs_structured_and_negative_ids(spark):
-    """Round-7 ADVICE regression: block keys come from pmod(hash(id), nb),
+    """Regression: block keys come from pmod(hash(id), nb),
     not id % nb. With raw mod, (a) ids sharing a common factor with nb
     collapse into few blocks (straggler returns), and (b) negative ids get
     negative remainders that match no (ba, bb) task — rows silently
@@ -603,9 +603,9 @@ def test_coarse_cells_rule_and_retrain_trigger():
     assert coarse_cells(20_000) == 512
     assert coarse_cells(20_000, n_train=4_000) == 64
     assert coarse_cells(20_000, n_train=10**9) == 512  # cap only binds downward
-    # the FAISS ~39-points floor wins over the minimum fan-out (ADVICE
-    # r14): a sample too thin to populate even 8 cells returns k < 8
-    # honestly instead of 8 noise centroids
+    # the FAISS ~39-points floor wins over the minimum fan-out: a sample
+    # too thin to populate even 8 cells returns k < 8 honestly instead of
+    # 8 noise centroids
     assert coarse_cells(20_000, n_train=100) == 2
     assert coarse_cells(20_000, n_train=39 * 8) == 8
 
@@ -658,7 +658,7 @@ def test_multi_filtered_slice_pins_to_single_filtered(spark, sf_oracle):
 
 def test_multi_filtered_shared_labels_keep_scan_prefilter(spark, sf_oracle):
     """Two queries sharing one label must NOT disable the scan-level
-    union-of-labels prefilter (ADVICE r14: the old gate compared the
+    union-of-labels prefilter (the old gate compared the
     de-duplicated union's size against the query count, so shared labels
     silently fell back to an unfiltered codes scan)."""
     from streaming_data_pipeline_capstone_spark.queries.extras import (
@@ -727,7 +727,7 @@ def test_ann_epoch_compaction_rule_and_identity(spark, sf_oracle, tmp_path):
     assert epoch_files_per_cell(work) == 1
     after = [tuple(r) for r in _pruned_rerank_topk_at(spark, sf_oracle, work, 10).collect()]
     assert after == before
-    # marker files inside the layout survive the rewrite (ADVICE r14: a
+    # marker files inside the layout survive the rewrite (a
     # lost _INCR_META.json makes the next open discard the compacted
     # index with a full rebuild)
     with open(os.path.join(work, "_INCR_META.json")) as fh:

@@ -287,7 +287,7 @@ def test_decontam_w8_plant_flags_exactly_the_carriers(spark, sf_oracle):
 
 
 def test_unplanted_funnel_keeps_the_plant_carriers(spark, sf_oracle):
-    """r11 (VERDICT r10 finding #3): the PRODUCTION funnel (plant=False,
+    """The PRODUCTION funnel (plant=False,
     the default) must not drop docs because of gate instrumentation. On
     the gate corpus — which has no natural w8 contamination — the
     unplanted survivor set is exactly the planted one plus the carriers

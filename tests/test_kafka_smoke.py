@@ -1,4 +1,4 @@
-"""S1/S2 Kafka construct smoke (VERDICT r1 item 10).
+"""S1/S2 Kafka construct smoke.
 
 No Kafka broker and no spark-sql-kafka jar exist in this container, so the
 live path cannot execute — the waiver is documented in README ("Kafka in

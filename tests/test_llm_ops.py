@@ -97,7 +97,7 @@ def _make_bmp(pixels_rgb: list[list[tuple[int, int, int]]]) -> bytes:
 
 def test_decode_image_bmp_golden_pixels(spark):
     """The pure-numpy BMP decoder against a hand-assembled image: exact
-    dims, corner pixels, and channel means (VERDICT r4 ask #6 — one
+    dims, corner pixels, and channel means (one
     multimodal decode made real)."""
     from streaming_data_pipeline_capstone_spark.operators.multimodal import (
         decode_bmp_pixels,
@@ -141,7 +141,7 @@ def test_decode_image_rejects_non_bmp():
 def test_decode_image_permissive_nulls(spark):
     """A corrupt/non-BMP payload yields a null summary row (checksum kept
     for dead-lettering) instead of failing the job — the PERMISSIVE-reader
-    contract the docstring promises (ADVICE r5 #1)."""
+    contract the docstring promises."""
     from streaming_data_pipeline_capstone_spark.operators.multimodal import (
         decode_image,
     )
@@ -244,7 +244,7 @@ def test_pq_adc_recall_vs_exact_l2(spark, sf_oracle):
 
 
 def test_banded_lsh_config_rule():
-    """The corpus-scaled band config (VERDICT r5 ask #3): reproduces the
+    """The corpus-scaled band config: reproduces the
     proven (4, 16) at every SF the correctness gate runs, scales planes to
     hold bucket occupancy at sf10+, and always clears the theoretical
     recall floor at the registered threshold."""
@@ -346,7 +346,7 @@ def test_fixed_codebook_reproduces_training_at_sf001(spark, sf_oracle):
     sf0.01 embeddings, so at sf0.01 the fixed-codebook queries must
     reproduce the per-invocation-trained ones EXACTLY — codes, ADC top-k
     and IVF probe alike. Guards the generated artifact against drifting
-    from tools/train_codebooks.py's recipe (VERDICT r5 ask #2)."""
+    from tools/train_codebooks.py's recipe."""
     from streaming_data_pipeline_capstone_spark.queries.extras import (
         emb_pq_encode,
         emb_pq_encode_fixed,
@@ -441,7 +441,7 @@ def test_minhash_signatures_match_explode_groupby_reference(spark):
 
 
 def test_lsh_banded_pairs_recall_vs_bruteforce(spark, sf_oracle):
-    """Recall gate for the hyperplane-LSH pair path (VERDICT r3 ask #4).
+    """Recall gate for the hyperplane-LSH pair path.
 
     The registered band parameters must clear the 0.9 recall target TWICE:
     in theory — 1-(1-p^planes)^bands >= 0.9 for a pair sitting exactly at

@@ -1,4 +1,4 @@
-"""Registry hygiene pins (r11, VERDICT r10 ask #7)."""
+"""Registry hygiene pins."""
 
 from __future__ import annotations
 
@@ -31,7 +31,7 @@ def test_every_query_has_an_oracle():
 
 
 def test_scoped_persists_release_zero_storage(spark, sf_smoke):
-    """The r11 ADVICE leak: queries whose returned frame depends on a
+    """The scoped-persist leak: queries whose returned frame depends on a
     persisted intermediate (LM buckets, DSIR funnels, minhash dedup) must
     not accumulate executor storage across a long-lived session. Running
     each through the registry releases the previous query's caches, and a

@@ -229,7 +229,7 @@ def test_multi_hybrid_slice_matches_single(spark, sf_oracle):
         assert len(rows) == _TOPK, qid
 
 
-# -- r14: the term-bucketed postings layout (VERDICT r13 ask #1) --------------
+# -- r14: the term-bucketed postings layout -----------------------------------
 
 
 def test_postings_scores_equal_full_scan_twin(spark, sf_oracle):
@@ -544,7 +544,7 @@ def test_streamed_postings_fanout_rule_and_marker_probe(spark, tmp_path):
     caller's vocabulary estimate, pinned by the marker; the probe reads
     the fan-out FROM the marker (never a caller guess), answers
     identically to the one-shot scorer at the wider fan-out, and fails
-    fast on an unmarked index (ADVICE r14 / VERDICT r14 #2)."""
+    fast on an unmarked index."""
     import json
     import os
 
@@ -684,7 +684,7 @@ def test_qld_multi_slice_pins_to_single_and_filtered_sane(spark, sf_oracle):
 
 
 def test_streamed_postings_write_side_rebucket(spark, tmp_path):
-    """The write-side rebucket trigger (VERDICT r14 #3): an index whose
+    """The write-side rebucket trigger: an index whose
     fan-out is over-sized for its sustained batch bytes must (a) be
     detected by the rule from directory metadata alone, (b) be rebucketed
     AT the compaction point to the file-floor target with the marker

@@ -1,4 +1,4 @@
-"""Per-corpus serving-model resolution + repoint (VERDICT r14 ask #1).
+"""Per-corpus serving-model resolution + repoint.
 
 The repoint flips WHICH quantizer a corpus's serving queries resolve —
 it must be invisible to gate corpora (shipped constants, fixed-literal

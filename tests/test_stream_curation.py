@@ -270,7 +270,7 @@ def test_dedup_stream_index_reads_are_bucket_pruned(spark, tmp_path):
 
 
 def test_state_bucket_fanout_rule():
-    """The fan-out rule (VERDICT r12 ask #2): the returned prefix length
+    """The fan-out rule: the returned prefix length
     must clear the expected-touched-fraction bound 1-exp(-B/16^L) ≤ f,
     MINIMALLY (one level down violates it), across batch-size decades."""
     import math

@@ -855,7 +855,7 @@ def test_trained_quality_model_scores_stream_identically(spark, tmpdir, sf_smoke
 
 
 def test_compaction_lifecycle_under_growth(spark, tmpdir):
-    """The index lifecycle (VERDICT r12 ask #6): drain epochs → compact —
+    """The index lifecycle: drain epochs → compact —
     REBUCKETING to the next fan-out tier, the knob a growing index turns
     at compaction time since compact_index rebuilds bkt= from the key
     expressions — → drain more epochs at the new fan-out → compact again
@@ -1002,7 +1002,7 @@ def test_streaming_index_ingest_restart_idempotent(spark, tmpdir):
 
 
 def test_state_index_layout_marker_pins_fanout(spark, tmpdir):
-    """ADVICE r13: the bucket fan-out must stay fixed for the life of an
+    """The bucket fan-out must stay fixed for the life of an
     index. First open records the layout; a mismatched reopen fails fast
     (instead of silently mixing bucket layouts and missing duplicates);
     compaction — the legitimate rebucket — updates the marker."""
@@ -1036,7 +1036,7 @@ def test_state_index_layout_marker_pins_fanout(spark, tmpdir):
 
 
 def test_compaction_trigger_rule_fires_and_compacts(spark, tmpdir):
-    """VERDICT r13 #3: the compaction trigger is a RULE. Epoch appends
+    """The compaction trigger is a RULE. Epoch appends
     grow files-per-bucket; once past the threshold the rule fires,
     maybe_compact_index compacts (epochs collapse to the sentinel), the
     rule resets, and verified pairs are unaffected."""

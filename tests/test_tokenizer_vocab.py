@@ -1,4 +1,4 @@
-"""The BPE deploy path at real vocabulary sizes (VERDICT r12 ask #3).
+"""The BPE deploy path at real vocabulary sizes.
 
 The oracle-gated trainer/encoder (queries/tokenizer.py) proves 8 merges;
 the shipped artifact is trained to pair exhaustion (106 merges on this
@@ -159,7 +159,7 @@ def test_replace_chain_guard():
 
 
 def test_fixed_oracle_survives_quoted_symbols():
-    """ADVICE r12: a retrained vocab whose merges contain an apostrophe
+    """A retrained vocab whose merges contain an apostrophe
     must produce syntactically valid oracle SQL (quotes doubled)."""
     import duckdb
 

@@ -30,7 +30,7 @@ def _dedup_cached_plans(plan: str) -> str:
     Blocks are matched up to expression ids (#NNN), which differ per
     reference to the same relation.
 
-    Caveat (logged, ADVICE r9): the key is plan TEXT, so two DISTINCT
+    Caveat (logged): the key is plan TEXT, so two DISTINCT
     cached relations whose child plans are structurally identical would
     collapse into one and undercount. The printer gives no stable
     relation identity to key on, so every collapse is reported to stderr

@@ -42,7 +42,7 @@ OUT = os.path.join(
     REPO, "streaming_data_pipeline_capstone_spark", "queries", "bpe_vocab.py"
 )
 # Cross-check depth vs the distributed oracle-gated chain: FULL depth
-# (ADVICE r13 — the old 8-merge gate left the deeper merges relying on
+# (the old 8-merge gate left the deeper merges relying on
 # Python tuple comparison matching Spark/DuckDB string collation for the
 # (left ASC, right ASC) tie-break, which can diverge on non-ASCII symbols
 # in a retrained vocab; the chain is ~1 Spark job per merge, cheap at the
