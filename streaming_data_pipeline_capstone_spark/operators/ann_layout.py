@@ -18,7 +18,8 @@ This module owns that layout:
   (queries/codebooks.py) — the same one-exchange-on-cell write any
   partitioned ingest pays, amortized over every query thereafter. A marker
   file records the source mtime so a regenerated corpus invalidates the
-  layout.
+  layout (index_store.cached_build). Incremental epochs and their
+  compaction use index_store's epoch write and compaction.
 - :func:`probe_cells_py` ranks the k shipped centroids against the query
   vector driver-side. k is model metadata (8 here, ~2^16 at 100 TB) — this
   is arithmetic on constants, not a data job, and it is what makes the
@@ -39,6 +40,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from streaming_data_pipeline_capstone_spark.index_store import (
+    LAYOUT_MARKER,
+    cached_build,
+    source_mtime,
+    write_epoch_idempotent,
+)
 
 _REPO = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -209,7 +217,7 @@ def cell_layout_path(
     return os.path.join(_LAYOUT_ROOT, f"{base}-{slug}{tag}{sfx}")
 
 
-def _model_hash(
+def model_hash(
     centroids: list[list[float]],
     pq_books: list[list[list[float]]],
     pq_sub_dim: int,
@@ -225,16 +233,6 @@ def _model_hash(
         sort_keys=True,
     )
     return hashlib.sha256(payload.encode()).hexdigest()
-
-
-def _source_mtime(sf_dir: str) -> float:
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(src):  # chunked corpus: newest chunk
-        return max(
-            (os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)),
-            default=os.path.getmtime(src),
-        )
-    return os.path.getmtime(src)
 
 
 # Expression-based encode (assign_cells / pq_encode_cols as Column
@@ -324,49 +322,41 @@ def ensure_cell_layout(
     multi-assignment): each vector is stored in its ``spill`` nearest
     cells, so a probe that misses a neighbor's first cell can still find
     it in its second — the measured fix for the single-assignment recall
-    ceiling on isotropic corpora (ANN_RECALL_r11.json: ivf_exact 0.75 ->
-    0.915 at nprobe/k = 0.25). Costs ``spill`` x the code bytes; the
-    probed FRACTION of stored rows is unchanged. Spilled layouts live
+    ceiling on isotropic corpora (ivf_exact recall 0.75 -> 0.915 at
+    nprobe/k = 0.25 on the k=64 sf1 corpus; run in git history at
+    78bf83b). Costs ``spill`` x the code bytes; the probed FRACTION of
+    stored rows is unchanged. Spilled layouts live
     beside the spill-1 layout under a ``-spill{n}`` suffix."""
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        assign_cells,
-        assign_cells_topn,
-        pq_encode_cols,
-    )
-    from streaming_data_pipeline_capstone_spark.sources.readers import read_table
-
     out = cell_layout_path(sf_dir, spill, model_tag)
-    marker = os.path.join(out, "_LAYOUT_META.json")
-    src_mtime = _source_mtime(sf_dir)
-    model_hash = _model_hash(centroids, pq_books, pq_sub_dim)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            meta = json.load(fh)
-        if (
-            meta.get("source_mtime") == src_mtime
-            and meta.get("model_hash") == model_hash
-            and meta.get("spill", 1) == spill
-            and meta.get("schema_version") == _LAYOUT_SCHEMA_VERSION
-        ):
-            return out
-    # The coarse-assignment + PQ-encode projection runs in the SCAN
-    # stage, so its parallelism is the input SPLIT count — and the
-    # expression is k x dim x spill heavy (seconds/MB at k=128), not
-    # IO-bound. A compact corpus in a few parquet files would hand one
-    # task the whole encode (measured: a 51 MB file = 1 task = a
-    # 30-minute straggler at k=128/spill=2). Narrow splits re-match
-    # split size to COMPUTE density without adding an exchange; restored
-    # after the build. At production file counts this is moot — but the
-    # knob is scale-neutral (metadata only).
-    _prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
-    try:
-        return _build_cell_layout(
-            spark, sf_dir, centroids, pq_books, pq_sub_dim, spill, out,
-            marker, src_mtime, model_hash,
-        )
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", _prev_split)
+    key = {
+        "source_mtime": source_mtime(sf_dir, "embeddings"),
+        "model_hash": model_hash(centroids, pq_books, pq_sub_dim),
+        "spill": spill,
+        "schema_version": _LAYOUT_SCHEMA_VERSION,
+    }
+
+    def build() -> dict:
+        # The coarse-assignment + PQ-encode projection runs in the SCAN
+        # stage, so its parallelism is the input SPLIT count — and the
+        # expression is k x dim x spill heavy (seconds/MB at k=128), not
+        # IO-bound. A compact corpus in a few parquet files would hand one
+        # task the whole encode (measured: a 51 MB file = 1 task = a
+        # 30-minute straggler at k=128/spill=2). Narrow splits re-match
+        # split size to COMPUTE density without adding an exchange;
+        # restored after the build. At production file counts this is
+        # moot — but the knob is scale-neutral (metadata only).
+        _prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
+        try:
+            _build_cell_layout(
+                spark, sf_dir, centroids, pq_books, pq_sub_dim, spill, out
+            )
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", _prev_split)
+        return {"sf_dir": os.path.abspath(sf_dir)}
+
+    cached_build(out, LAYOUT_MARKER, key, build)
+    return out
 
 
 def _build_cell_layout(
@@ -377,10 +367,7 @@ def _build_cell_layout(
     pq_sub_dim: int,
     spill: int,
     out: str,
-    marker: str,
-    src_mtime: float,
-    model_hash: str,
-) -> str:
+) -> None:
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
         assign_cells,
         assign_cells_topn,
@@ -451,18 +438,6 @@ def _build_cell_layout(
         .partitionBy("cell")
         .parquet(out)
     )
-    with open(marker, "w") as fh:
-        json.dump(
-            {
-                "source_mtime": src_mtime,
-                "model_hash": model_hash,
-                "spill": spill,
-                "schema_version": _LAYOUT_SCHEMA_VERSION,
-                "sf_dir": os.path.abspath(sf_dir),
-            },
-            fh,
-        )
-    return out
 
 
 def read_cell_layout(
@@ -481,8 +456,8 @@ def read_cell_layout(
     partitioned by cell with an optional epoch sublevel (incremental /
     streamed indexes). Epoch presence is resolved with ONE Hadoop
     globStatus on the layout root's first level — the same bounded
-    listing convention as the streaming state indexes
-    (dedup_stream._existing_bucket_paths); remote schemes work.
+    listing convention as the streaming state indexes'
+    index_store.read_buckets; remote schemes work.
 
     Without ``subs`` this falls back to plain inference (schema-agnostic
     callers: compaction, file tools).
@@ -570,148 +545,20 @@ def append_cell_epoch(
     epoch_id: int,
 ) -> None:
     """Incremental ANN index maintenance: encode ONLY the new vectors and
-    land them under ``<path>/cell=<c>/epoch=<e>/`` with dynamic-partition
-    overwrite — the same idempotent-epoch recipe as the streaming state
-    indexes (streaming/dedup_stream.write_epoch_idempotent), applied to
-    the serving layout. A replayed batch overwrites exactly its own
+    land them under ``<path>/cell=<c>/epoch=<e>/`` through
+    index_store.write_epoch_idempotent, the streaming state indexes'
+    idempotent-epoch write. A replayed batch overwrites exactly its own
     (cell, epoch) partitions, so at-least-once delivery stays
     effectively-once storage; probes keep pruning on the LEADING cell
     level and simply see every epoch of the probed cells (the
     main-index + delta-segments refresh pattern — FAISS/Lucene style —
-    with rebuild-as-compaction: rewrite all epochs into a sentinel the
-    way compact_index does for the dedup indexes). Work is Θ(new
-    vectors): the existing index is never read or rewritten.
+    with rebuild-as-compaction: index_store.compact_epochs rewrites all
+    epochs into a sentinel once index_store.compaction_due fires). Work is
+    Θ(new vectors): the existing index is never read or rewritten.
     """
-    encoded = encode_for_layout(vecs_df, centroids, pq_books, pq_sub_dim)
-    (
-        encoded.withColumn("epoch", F.lit(int(epoch_id)))
-        .repartition("cell")  # one file per (cell, epoch)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "epoch")
-        .parquet(path)
+    write_epoch_idempotent(
+        encode_for_layout(vecs_df, centroids, pq_books, pq_sub_dim),
+        path,
+        epoch_id,
+        "cell",
     )
-
-
-# -- compaction trigger: a RULE, not a manual step -----------------------------
-# Every epoch append adds ~1 file per touched cell/bucket, so probe cost
-# gains a fixed per-file term (listing + footer + dictionary reads) on
-# top of the data. The data per (cell, epoch) file is ~batch/fanout rows;
-# once a cell holds more epoch-files than one batch's rows amortize, the
-# fixed term dominates (the measured fan-out-4096 cliff in
-# BENCH_stream_curation_scale_r13.json). The rule: compact when the
-# max epoch-file count per cell crosses MAX_EPOCH_FILES — the point
-# where per-file overhead ≈ the data read at gate file sizes, re-measured
-# in BENCH_stream_compaction_r14.json. Compaction collapses all epochs
-# into the sentinel epoch=-1 (no real micro-batch id collides), keeping
-# the layout shape so later appends stay idempotent. Run it from a
-# maintenance window (stream stopped / drain complete), like
-# dedup_stream.compact_index.
-
-MAX_EPOCH_FILES = 16
-
-
-def max_files_per_partition(path: str, prefix: str) -> int:
-    """Max parquet-file count under any one ``<prefix>=<v>`` partition
-    directory of ``path`` — the quantity the compaction rules threshold.
-    One listing of the layout tree, bounded by partitions x epochs
-    (directory metadata, not data).
-
-    Listed through the Hadoop FileSystem API when a SparkSession is
-    active (the read path deliberately globs through Hadoop
-    so remote schemes work — a trigger that walked the LOCAL filesystem
-    would silently read 0 files on a remote index and never fire);
-    without an active session it falls back to ``os.walk`` (local-only
-    callers, e.g. unit fixtures before Spark starts)."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        worst = 0
-        if not os.path.isdir(path):
-            return 0
-        for pdir in os.listdir(path):
-            full = os.path.join(path, pdir)
-            if not (pdir.startswith(prefix + "=") and os.path.isdir(full)):
-                continue
-            n = 0
-            for _root, _dirs, files in os.walk(full):
-                n += sum(f.endswith(".parquet") for f in files)
-            worst = max(worst, n)
-        return worst
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return 0
-    statuses = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(f"{path}/{prefix}=*")
-    )
-    worst = 0
-    for st in statuses or []:
-        if not st.isDirectory():
-            continue
-        n = 0
-        it = fs.listFiles(st.getPath(), True)  # recursive
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        worst = max(worst, n)
-    return worst
-
-
-def epoch_files_per_cell(path: str) -> int:
-    """Max parquet-file count under any one cell's epoch partitions —
-    the quantity the ANN compaction rule thresholds (see
-    :func:`max_files_per_partition` for the listing contract)."""
-    return max_files_per_partition(path, "cell")
-
-
-def ann_compaction_due(path: str, max_epoch_files: int = MAX_EPOCH_FILES) -> bool:
-    return epoch_files_per_cell(path) > max_epoch_files
-
-
-def compact_cell_epochs(
-    spark: SparkSession, path: str, partitions: int = 32
-) -> None:
-    """Collapse every epoch of an epoch-partitioned serving layout into
-    the sentinel ``epoch=-1`` — rebuild-as-compaction for the ANN index.
-    Probes are unchanged (they prune on the leading cell level and read
-    whatever epochs exist); a probe answers identically before and after
-    (pinned in tests). ONLY run with ingest stopped and its checkpoint
-    committed, same contract as dedup_stream.compact_index.
-
-    Any top-level ``_*.json`` marker files living inside the layout dir
-    (e.g. ``_INCR_META.json`` for the incremental layout, or the
-    ``_LAYOUT_META.json`` convention) are preserved across the rewrite:
-    the static overwrite deletes everything under ``path``, and a lost
-    marker would make the next ``_incr_layout`` open see an
-    unmarked layout and discard the just-compacted index with a full
-    rebuild — compaction undone, the work wasted."""
-    markers: dict[str, bytes] = {}
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            full = os.path.join(path, name)
-            if name.startswith("_") and name.endswith(".json") and os.path.isfile(full):
-                with open(full, "rb") as fh:
-                    markers[name] = fh.read()
-    df = spark.read.parquet(path).drop("epoch")
-    tmp = path + "__compacting"
-    (
-        df.repartition(partitions, "cell")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    (
-        spark.read.parquet(tmp)
-        .withColumn("epoch", F.lit(-1))
-        .repartition("cell")  # one file per cell after compaction
-        .write.mode("overwrite")
-        .partitionBy("cell", "epoch")
-        .parquet(path)
-    )
-    for name, blob in markers.items():
-        with open(os.path.join(path, name), "wb") as fh:
-            fh.write(blob)
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)

@@ -843,7 +843,8 @@ def assign_cells_topn(
     Single-assignment IVF caps probe recall at the coarse quantizer's
     quality: a true neighbor whose ONE cell is unprobed is gone before
     scoring. On an isotropic corpus that ceiling is severe (measured
-    ivf_exact recall 0.75 at nprobe/k = 0.25, ANN_RECALL_r11.json);
+    ivf_exact recall 0.75 at nprobe/k = 0.25; run in git history at
+    78bf83b);
     storing each vector in its ``n`` nearest cells lifts it (0.915 at
     n=2, same probed fraction) for n x the PQ-code bytes — 48 B/vector
     at the shipped 192-bit codes, far below the 256 B raw vector.

@@ -5,8 +5,9 @@ the documents scan's codegen span, so the only corpus-sized EXCHANGE
 carries query-term occurrences — but the SCAN still reads the full corpus
 text per serving batch. At 100 TB that is a full-corpus read per batch,
 while the dense arm reads nprobe/k of a cell-partitioned layout (the
-measured asymmetry: BENCH_sf10_ann_r13.json decade exponents −0.0 dense
-vs 0.42 hybrid — the 0.42 is entirely the sparse arm). This module is the
+measured asymmetry at sf10: per-decade cost exponents −0.0 dense vs 0.42
+hybrid, the 0.42 entirely the sparse arm; run in git history at
+78bf83b). This module is the
 ANN-layout move applied to text: tokenize ONCE,
 write an inverted-index-shaped postings table hive-partitioned by a hash
 bucket of the term, and serve every later query by listing ONLY the
@@ -52,12 +53,18 @@ SURVEY §2.11 X8 (BM25 family) with its serving layout.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from streaming_data_pipeline_capstone_spark.index_store import (
+    LAYOUT_MARKER,
+    cached_build,
+    read_buckets,
+    source_mtime,
+)
 
 _REPO = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -120,23 +127,13 @@ def postings_layout_path(sf_dir: str) -> str:
     return os.path.join(_TEXT_LAYOUT_ROOT, f"{base}-{slug}")
 
 
-def _source_mtime(sf_dir: str) -> float:
-    src = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(src):  # chunked corpus: newest chunk
-        return max(
-            (os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)),
-            default=os.path.getmtime(src),
-        )
-    return os.path.getmtime(src)
-
-
 def ensure_postings_layout(spark: SparkSession, sf_dir: str) -> dict:
     """Write (once) the postings layout for the documents at ``sf_dir``
     and return its marker dict ``{path, prefix_len, n_docs, sum_dl}``.
 
-    Idempotent behind a marker (the ensure_cell_layout convention): the
-    layout rebuilds only when missing, stale (source mtime moved), or
-    schema-versioned differently — a FULL overwrite, never a partial one.
+    Idempotent behind a marker (index_store.cached_build): the layout
+    rebuilds only when missing, stale (source mtime moved), or
+    schema-versioned differently — a FULL rebuild, never a partial one.
 
     Build cost, paid once and amortized over every query thereafter:
     tokenize → per-(doc, term) counts (1 exchange on the term-occurrence
@@ -145,21 +142,21 @@ def ensure_postings_layout(spark: SparkSession, sf_dir: str) -> dict:
     the driver only reads two integers (N, Σdl) and the distinct-term
     count for the fan-out rule.
     """
+    out = postings_layout_path(sf_dir)
+    key = {
+        "source_mtime": source_mtime(sf_dir, "documents"),
+        "schema_version": _SCHEMA_VERSION,
+    }
+    meta = cached_build(
+        out, LAYOUT_MARKER, key, lambda: _build_postings_layout(spark, sf_dir, out)
+    )
+    meta["path"] = out
+    return meta
+
+
+def _build_postings_layout(spark: SparkSession, sf_dir: str, out: str) -> dict:
     from streaming_data_pipeline_capstone_spark.operators.textstats import tokens
     from streaming_data_pipeline_capstone_spark.sources.readers import read_table
-
-    out = postings_layout_path(sf_dir)
-    marker = os.path.join(out, "_LAYOUT_META.json")
-    src_mtime = _source_mtime(sf_dir)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            meta = json.load(fh)
-        if (
-            meta.get("source_mtime") == src_mtime
-            and meta.get("schema_version") == _SCHEMA_VERSION
-        ):
-            meta["path"] = out
-            return meta
 
     docs_tbl = read_table(spark, sf_dir, "documents")
     # metadata column is optional in ad-hoc corpora (test fixtures, raw
@@ -209,19 +206,13 @@ def ensure_postings_layout(spark: SparkSession, sf_dir: str) -> dict:
         .partitionBy("bkt")
         .parquet(out)
     )
-    meta = {
-        "source_mtime": src_mtime,
-        "schema_version": _SCHEMA_VERSION,
+    return {
         "prefix_len": int(prefix_len),
         "n_docs": int(n_docs),
         "sum_dl": int(sum_dl),
         "n_terms": int(n_terms),
         "sf_dir": os.path.abspath(sf_dir),
     }
-    with open(marker, "w") as fh:
-        json.dump(meta, fh)
-    meta["path"] = out
-    return meta
 
 
 def read_postings(
@@ -232,32 +223,25 @@ def read_postings(
     then filter ``term IN (...)`` inside the scan for row-group pruning
     within a bucket. Returns (term, doc_id, tf, dl, df, lang); empty
     frame when no probed bucket exists (no query term in the corpus)."""
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        _existing_bucket_paths,  # one Hadoop globStatus of the layout root —
-        # remote schemes work, cost bounded by the fan-out constant
-    )
-
     path, prefix_len = meta["path"], meta["prefix_len"]
     buckets = sorted({term_bucket_py(t, prefix_len) for t in terms})
-    sub = _existing_bucket_paths(spark, path, buckets)
-    if not sub:
+    # explicit schema (the layout contract's columns + the bkt partition
+    # key): skips parquet-footer schema inference on every probe — a
+    # driver-side job the serving path pays per query otherwise (r15;
+    # same move as ann_layout.read_cell_layout)
+    post = read_buckets(
+        spark,
+        path,
+        buckets,
+        "term string, doc_id bigint, tf bigint, dl int, df bigint, "
+        "lang string, bkt string",
+    )
+    if post is None:
         return spark.createDataFrame(
             [],
             "term string, doc_id bigint, tf bigint, dl int, df bigint, "
             "lang string",
         )
-    # explicit schema (the layout contract's columns + the bkt partition
-    # key): skips parquet-footer schema inference on every probe — a
-    # driver-side job the serving path pays per query otherwise (r15;
-    # same move as ann_layout.read_cell_layout)
-    schema = (
-        "term string, doc_id bigint, tf bigint, dl int, df bigint, "
-        "lang string, bkt string"
-    )
-    return (
-        spark.read.schema(schema)
-        .option("basePath", path)
-        .parquet(*sub)
-        .filter(F.col("term").isin(terms))
-        .select("term", "doc_id", "tf", "dl", "df", "lang")
+    return post.filter(F.col("term").isin(terms)).select(
+        "term", "doc_id", "tf", "dl", "df", "lang"
     )

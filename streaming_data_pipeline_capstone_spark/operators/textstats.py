@@ -49,16 +49,6 @@ def shingles_from_tokens(t: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(t) < n, whole).otherwise(grams))
 
 
-def word_shingles(text: Column | str) -> Column:
-    """Distinct word 3-gram shingles; documents shorter than 3 tokens
-    contribute their whole text as a single shingle.
-
-    Prefer projecting :func:`tokens` into a column and calling
-    :func:`shingles_from_tokens` — see its docstring for why.
-    """
-    return shingles_from_tokens(tokens(text))
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Share of non-alphanumeric-non-space characters (quality signal)."""
     s = _c(text)

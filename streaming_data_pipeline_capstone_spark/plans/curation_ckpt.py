@@ -24,8 +24,8 @@ This module IS that execution shape:
   (pinned by tests/test_curation_pipeline.py), because every stage is
   the same query — only the execution boundaries moved.
 
-A round-9 side-by-side run of both shapes at sf0.1 (FUNNEL_CKPT_r09.json,
-in git history) measured the wall/IO comparison.
+A side-by-side run of both shapes at sf0.1 measured the wall/IO
+comparison; its numbers are in git history at 78bf83b.
 
 Parity note: extends SURVEY §2.11 — no reference twin; the reference has
 no corpus-curation stage. The checkpoint-between-jobs shape is the

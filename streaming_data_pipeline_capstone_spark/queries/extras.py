@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_capstone_spark.functions.geo import affine_coefficients, apply_affine
+from streaming_data_pipeline_capstone_spark.index_store import cached_build, source_mtime
 from streaming_data_pipeline_capstone_spark.operators.ann_layout import read_cell_layout
 from streaming_data_pipeline_capstone_spark.operators.similarity import cosine, lit_double_array
 from streaming_data_pipeline_capstone_spark.plans.predict import path_score
@@ -713,7 +714,7 @@ def multimodal_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gate stays tests/test_llm_ops.py::test_kmeans_ivf_recall_vs_bruteforce
 # (recall@10 >= 0.8 vs brute force).
 #
-# NPROBE is set off the recorded recall curve (ANN_RECALL_r09.json):
+# NPROBE is set off a recorded recall curve (git history at 78bf83b):
 # full-precision IVF recall@10 on this corpus is 0.385/0.56/0.68/0.785/
 # 0.845 at nprobe 1..5 of the k=8 coarse cells — 5 is the first value
 # whose COMPOSED IVF-PQ+rerank config clears 0.8. k=8 cells is
@@ -1443,7 +1444,7 @@ def sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ADC TOP-_RERANK shortlist and re-scores only those raw vectors exactly —
 # recall then depends on the shortlist CONTAINING the true neighbors, a far
 # weaker demand than the shortlist ORDERING them. The recorded curve
-# (ANN_RECALL_r09.json) reads 0.525 ADC-only -> 0.925 with rerank=100 at
+# (git history at 78bf83b) reads 0.525 ADC-only -> 0.925 with rerank=100 at
 # the shipped codebook, and the composed pruned probe reads 0.805. At
 # 100 TB the re-rank stage is _RERANK random fetches of raw vectors by id
 # — constant per query, independent of corpus size.
@@ -1656,12 +1657,12 @@ def sim_topk_ivfpq_rerank_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors fetched for the shortlist only (a second pruned scan joined
     against the broadcast shortlist; at serving, _RERANK keyed fetches)
     -> exact cosine top-10. Recorded composed recall 0.805
-    (ANN_RECALL_r09.json ivf_pq_rerank at the shipped config)."""
+    (ivf_pq_rerank at the shipped config; git history at 78bf83b)."""
     return _pruned_rerank_topk(spark, sf_dir, 10)
 
 
 # -- spilled-assignment serving probe -----------------------------------------
-# The realistic-cell-count recall measurement (ANN_RECALL_r11.json, k=64
+# The realistic-cell-count recall measurement (git history at 78bf83b; k=64
 # cells over the rotate-dup sf1 corpus) showed single-assignment IVF's
 # coarse quantizer IS the recall ceiling on an isotropic corpus: ivf_exact
 # 0.75 at nprobe/k = 0.25, below the 0.8 serving target no matter the PQ /
@@ -1726,8 +1727,8 @@ def sim_topk_ivfpq_rerank_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, and keeps the top _RERANK distinct ids — at serving this is
     in-memory arithmetic on a few hundred rows, never a corpus shuffle.
     Composed recall at the realistic k=64 coarse index: 0.85
-    (ANN_RECALL_r11.json ivf_pq_rerank, spill=2, nprobe=16, rerank=100
-    vs 0.71 unspilled)."""
+    (ivf_pq_rerank, spill=2, nprobe=16, rerank=100 vs 0.71 unspilled;
+    git history at 78bf83b)."""
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         probe_cells_py,
     )
@@ -1789,9 +1790,9 @@ def sim_topk_ivfpq_rerank_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB: dense candidates from the partition-pruned codes scan -> ADC
 # shortlist -> exact re-rank (reads nprobe/k of stored rows), fused with
 # the pre-filtered BM25 arm by the same integer reciprocal-rank terms.
-# Recall tradeoff is the certified one (ANN_RECALL_r12.json composed
-# 0.915) and only RANKS cross the fusion boundary, so the fused frame
-# stays <=2*_CAND rows regardless of corpus size.
+# Recall tradeoff is the certified one (composed recall 0.915; git
+# history at 78bf83b) and only RANKS cross the fusion boundary, so the
+# fused frame stays <=2*_CAND rows regardless of corpus size.
 
 
 def _rrf_ann_oracle() -> str:
@@ -2522,18 +2523,13 @@ def retrieval_hybrid_rrf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned-ANN dense top-50 and the batched BM25 sparse top-50 —
     (query_id, id, r_dense, r_sparse, rrf_micro, rank) for the standing
     3-query batch, through ONE dense pass + ONE sparse pass."""
-    from pyspark.sql import Window
-
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
         _CAND,
-        _MICRO,
         _MULTI_QUERIES,
-        _RRF_K,
-        _TOPK,
         _bm25_base,
         _c_micro,
         _multi_terms,
-        _rrf_fuse,
+        _rrf_fuse_multi,
     )
 
     dense = multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS, k=_CAND).select(
@@ -2555,33 +2551,7 @@ def retrieval_hybrid_rrf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c_micro").alias("score_micro"))
     )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    sparse = (
-        scores.withColumn("r_sparse", F.row_number().over(w_s).cast("bigint"))
-        .filter(F.col("r_sparse") <= _CAND)
-        .select("query_id", F.col("doc_id").alias("id"), "r_sparse")
-    )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
-    fused = _rrf_fuse(dense, sparse, ["query_id", "id"]).select(
-        "query_id",
-        "id",
-        "r_dense",
-        "r_sparse",
-        (
-            F.coalesce(rr(F.col("r_dense")), F.lit(0))
-            + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-        ).alias("rrf_micro"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.asc("id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w_f).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank")
-    )
+    return _rrf_fuse_multi(dense, scores)
 
 
 @register("retrieval_hybrid_rrf_multi_streamed", _rrf_multi_oracle())
@@ -2599,17 +2569,12 @@ def retrieval_hybrid_rrf_multi_streamed(
     streamed serving stack end to end (both index forms answer
     identically to their one-shot layouts, so the fused ranking must be
     identical too)."""
-    from pyspark.sql import Window
-
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
         _CAND,
-        _MICRO,
         _MULTI_QUERIES,
-        _RRF_K,
-        _TOPK,
         _c_micro,
         _multi_terms,
-        _rrf_fuse,
+        _rrf_fuse_multi,
         _streamed_text_index,
     )
     from streaming_data_pipeline_capstone_spark.streaming.text_index_stream import (
@@ -2640,33 +2605,7 @@ def retrieval_hybrid_rrf_multi_streamed(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c_micro").alias("score_micro"))
     )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    sparse = (
-        scores.withColumn("r_sparse", F.row_number().over(w_s).cast("bigint"))
-        .filter(F.col("r_sparse") <= _CAND)
-        .select("query_id", F.col("doc_id").alias("id"), "r_sparse")
-    )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
-    fused = _rrf_fuse(dense, sparse, ["query_id", "id"]).select(
-        "query_id",
-        "id",
-        "r_dense",
-        "r_sparse",
-        (
-            F.coalesce(rr(F.col("r_dense")), F.lit(0))
-            + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-        ).alias("rrf_micro"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.asc("id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w_f).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank")
-    )
+    return _rrf_fuse_multi(dense, scores)
 
 
 # -- incremental ANN index maintenance (r13) -----------------------------------
@@ -2683,48 +2622,43 @@ def retrieval_hybrid_rrf_multi_streamed(
 # to the one-shot layout.
 
 
-def _incr_layout(spark: SparkSession, sf_dir: str) -> str:
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
+def _ann_cache_key(sf_dir: str, m) -> dict:
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        _model_hash,
-        _source_mtime,
+        model_hash,
+    )
+
+    return {
+        "source_mtime": source_mtime(sf_dir, "embeddings"),
+        "model_hash": model_hash(m.centroids, m.pq_books, m.pq_sub_dim),
+    }
+
+
+def _incr_layout(spark: SparkSession, sf_dir: str) -> str:
+    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         append_cell_epoch,
         cell_layout_path,
     )
 
     m = _serving_model(sf_dir)
     path = cell_layout_path(sf_dir, model_tag=m.tag) + "-incr"
-    marker = _os.path.join(path, "_INCR_META.json")
-    src_mtime = _source_mtime(sf_dir)
-    model_hash = _model_hash(m.centroids, m.pq_books, m.pq_sub_dim)
-    if _os.path.exists(marker):
-        with open(marker) as fh:
-            meta = _json.load(fh)
-        if (
-            meta.get("source_mtime") == src_mtime
-            and meta.get("model_hash") == model_hash
-        ):
-            return path
-    # Stale or unmarked: FULL clear before rebuilding. The
-    # epoch appends below use dynamic partition overwrite, which only
-    # touches (cell, epoch) partitions present in the NEW data — a
-    # regenerated corpus/model that leaves some old partition unwritten
-    # would otherwise keep the previous build's rows in the index.
-    _shutil.rmtree(path, ignore_errors=True)
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) != 0)
-    delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
-    append_cell_epoch(
-        spark, base, path, m.centroids, m.pq_books, m.pq_sub_dim, 0
-    )
-    append_cell_epoch(
-        spark, delta, path, m.centroids, m.pq_books, m.pq_sub_dim, 1
-    )
-    with open(marker, "w") as fh:
-        _json.dump({"source_mtime": src_mtime, "model_hash": model_hash}, fh)
+
+    # cached_build clears the whole dir before a rebuild: the epoch
+    # appends use dynamic partition overwrite, which only touches
+    # (cell, epoch) partitions present in the NEW data — a regenerated
+    # corpus/model that leaves some old partition unwritten would
+    # otherwise keep the previous build's rows in the index.
+    def build() -> None:
+        emb = read_table(spark, sf_dir, "embeddings")
+        base = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) != 0)
+        delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
+        append_cell_epoch(
+            spark, base, path, m.centroids, m.pq_books, m.pq_sub_dim, 0
+        )
+        append_cell_epoch(
+            spark, delta, path, m.centroids, m.pq_books, m.pq_sub_dim, 1
+        )
+
+    cached_build(path, "_INCR_META.json", _ann_cache_key(sf_dir, m), build)
     return path
 
 
@@ -2752,17 +2686,8 @@ def sim_topk_ivfpq_rerank_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streamed_index(spark: SparkSession, sf_dir: str) -> str:
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        _model_hash,
-        _source_mtime,
         cell_layout_path,
-    )
-    from streaming_data_pipeline_capstone_spark.sources.readers import (
-        read_table as _read_table,
     )
     from streaming_data_pipeline_capstone_spark.sources.replay import (
         replay_to_files,
@@ -2780,32 +2705,21 @@ def _streamed_index(spark: SparkSession, sf_dir: str) -> str:
     m = _serving_model(sf_dir)
     work = cell_layout_path(sf_dir, model_tag=m.tag) + "-streamed"
     index_path = f"{work}/index"
-    marker = _os.path.join(work, "_STREAMED_META.json")
-    src_mtime = _source_mtime(sf_dir)
-    model_hash = _model_hash(m.centroids, m.pq_books, m.pq_sub_dim)
-    if _os.path.exists(marker):
-        with open(marker) as fh:
-            meta = _json.load(fh)
-        if (
-            meta.get("source_mtime") == src_mtime
-            and meta.get("model_hash") == model_hash
-        ):
-            return index_path
-    _shutil.rmtree(work, ignore_errors=True)  # stale: full clear, then rebuild
-    vecs = _read_table(spark, sf_dir, "embeddings")
-    replay_dir = f"{work}/replay"
-    schema = replay_to_files(vecs, replay_dir, 3, order_col="vec_id")
-    q = streaming_index_ingest(
-        stream_from_replay(spark, replay_dir, schema),
-        index_path,
-        f"{work}/ckpt",
-        m.centroids,
-        m.pq_books,
-        m.pq_sub_dim,
-    )
-    q.awaitTermination()
-    with open(marker, "w") as fh:
-        _json.dump({"source_mtime": src_mtime, "model_hash": model_hash}, fh)
+
+    def build() -> None:
+        vecs = read_table(spark, sf_dir, "embeddings")
+        replay_dir = f"{work}/replay"
+        schema = replay_to_files(vecs, replay_dir, 3, order_col="vec_id")
+        streaming_index_ingest(
+            stream_from_replay(spark, replay_dir, schema),
+            index_path,
+            f"{work}/ckpt",
+            m.centroids,
+            m.pq_books,
+            m.pq_sub_dim,
+        ).awaitTermination()
+
+    cached_build(work, "_STREAMED_META.json", _ann_cache_key(sf_dir, m), build)
     return index_path
 
 
@@ -2965,18 +2879,13 @@ def retrieval_hybrid_rrf_multi_filtered(
     each query's dense arm is label-filtered ({0: 3, 1: 7, 2: 5}) and its
     sparse arm lang-filtered ({0: de, 1: en, 2: es}) — both predicates
     inside their arm's pruned scan, one dense pass + one sparse pass."""
-    from pyspark.sql import Window
-
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
         _CAND,
-        _MICRO,
         _MULTI_QUERIES,
-        _RRF_K,
-        _TOPK,
         _bm25_base,
         _c_micro,
         _multi_terms,
-        _rrf_fuse,
+        _rrf_fuse_multi,
     )
 
     dense = multi_topk_ivfpq(
@@ -3002,30 +2911,4 @@ def retrieval_hybrid_rrf_multi_filtered(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c_micro").alias("score_micro"))
     )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    sparse = (
-        scores.withColumn("r_sparse", F.row_number().over(w_s).cast("bigint"))
-        .filter(F.col("r_sparse") <= _CAND)
-        .select("query_id", F.col("doc_id").alias("id"), "r_sparse")
-    )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
-    fused = _rrf_fuse(dense, sparse, ["query_id", "id"]).select(
-        "query_id",
-        "id",
-        "r_dense",
-        "r_sparse",
-        (
-            F.coalesce(rr(F.col("r_dense")), F.lit(0))
-            + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-        ).alias("rrf_micro"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.asc("id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w_f).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank")
-    )
+    return _rrf_fuse_multi(dense, scores)

@@ -259,6 +259,43 @@ def _rrf_fuse(dense, sparse, keys: list[str]):
     )
 
 
+def _rrf_fuse_multi(dense: DataFrame, scores: DataFrame) -> DataFrame:
+    """The batched RRF tail: rank each query's sparse ``scores``
+    (query_id, doc_id, score_micro) into its top-_CAND ``r_sparse``,
+    align them with the dense (query_id, id, r_dense) list, fuse into
+    integer ``rrf_micro`` and keep each query's top-_TOPK ->
+    (query_id, id, r_dense, r_sparse, rrf_micro, rank)."""
+    from pyspark.sql import Window
+
+    w_s = Window.partitionBy("query_id").orderBy(
+        F.desc("score_micro"), F.asc("doc_id")
+    )
+    sparse = (
+        scores.withColumn("r_sparse", F.row_number().over(w_s).cast("bigint"))
+        .filter(F.col("r_sparse") <= _CAND)
+        .select("query_id", F.col("doc_id").alias("id"), "r_sparse")
+    )
+    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
+    fused = _rrf_fuse(dense, sparse, ["query_id", "id"]).select(
+        "query_id",
+        "id",
+        "r_dense",
+        "r_sparse",
+        (
+            F.coalesce(rr(F.col("r_dense")), F.lit(0))
+            + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
+        ).alias("rrf_micro"),
+    )
+    w_f = Window.partitionBy("query_id").orderBy(
+        F.desc("rrf_micro"), F.asc("id")
+    )
+    return (
+        fused.withColumn("rank", F.row_number().over(w_f).cast("bigint"))
+        .filter(F.col("rank") <= _TOPK)
+        .select("query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank")
+    )
+
+
 def _rrf_oracle() -> str:
     return f"""
     WITH {_bm25_ctes(_QUERY_TERMS)},
@@ -784,12 +821,11 @@ def text_qld_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streamed_text_index(spark: SparkSession, sf_dir: str) -> str:
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
+    from streaming_data_pipeline_capstone_spark.index_store import (
+        cached_build,
+        source_mtime,
+    )
     from streaming_data_pipeline_capstone_spark.operators.text_layout import (
-        _source_mtime,
         postings_layout_path,
     )
     from streaming_data_pipeline_capstone_spark.sources.replay import (
@@ -802,27 +838,21 @@ def _streamed_text_index(spark: SparkSession, sf_dir: str) -> str:
 
     work = postings_layout_path(sf_dir) + "-streamed"
     index_dir = f"{work}/index"
-    marker = _os.path.join(work, "_STREAMED_META.json")
-    src_mtime = _source_mtime(sf_dir)
-    if _os.path.exists(marker):
-        with open(marker) as fh:
-            meta = _json.load(fh)
-        if meta.get("source_mtime") == src_mtime:
-            return index_dir
-    _shutil.rmtree(work, ignore_errors=True)
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    replay_dir = f"{work}/replay"
-    schema = replay_to_files(docs, replay_dir, 3, order_col="doc_id")
-    q = streaming_postings_ingest(
-        stream_from_replay(spark, replay_dir, schema),
-        index_dir,
-        f"{work}/ckpt",
-    )
-    q.awaitTermination()
-    with open(marker, "w") as fh:
-        _json.dump({"source_mtime": src_mtime}, fh)
+
+    def build() -> None:
+        docs = read_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "text"
+        )
+        replay_dir = f"{work}/replay"
+        schema = replay_to_files(docs, replay_dir, 3, order_col="doc_id")
+        streaming_postings_ingest(
+            stream_from_replay(spark, replay_dir, schema),
+            index_dir,
+            f"{work}/ckpt",
+        ).awaitTermination()
+
+    key = {"source_mtime": source_mtime(sf_dir, "documents")}
+    cached_build(work, "_STREAMED_META.json", key, build)
     return index_dir
 
 

@@ -87,7 +87,7 @@ def serving_model(sf_dir: str) -> ServingModel:
         with open(path) as fh:
             meta = json.load(fh)
         from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-            _model_hash,
+            model_hash,
         )
 
         model = ServingModel(
@@ -97,7 +97,7 @@ def serving_model(sf_dir: str) -> ServingModel:
             nprobe=int(meta["nprobe"]),
             spill=int(meta["spill"]),
             tag="m"
-            + _model_hash(
+            + model_hash(
                 meta["kmeans_centroids"], meta["pq_books"], meta["pq_sub_dim"]
             )[:8],
             source=path,

@@ -10,8 +10,8 @@ arrives. This module runs that as the reference's own two-job architecture
 
 - ``keep_dedup``   — exact-duplicate verdict with STORAGE-BACKED bounded
   state: a fingerprint→min-doc index maintained as epoch-partitioned
-  parquet (the same idempotent-write recipe as
-  :mod:`streaming_data_pipeline_capstone_spark.streaming.dedup_stream`), so
+  parquet (the idempotent epoch write of
+  :mod:`streaming_data_pipeline_capstone_spark.index_store`), so
   re-deliveries of a document already ingested are flagged without any
   driver-resident state;
 - ``keep_q``       — the composite quality rules
@@ -54,6 +54,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from streaming_data_pipeline_capstone_spark.index_store import (
+    pin_index_layout,
+    read_index,
+    read_index_or_none,
+    write_epoch_idempotent,
+)
 from streaming_data_pipeline_capstone_spark.operators.textstats import (
     fingerprint,
     tokens,
@@ -71,11 +77,6 @@ from streaming_data_pipeline_capstone_spark.queries.curation import (
 from streaming_data_pipeline_capstone_spark.queries.quality import (
     _STOPWORDS,
     score_quality,
-)
-from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-    read_index,
-    read_index_or_none,
-    write_epoch_idempotent,
 )
 from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
@@ -202,7 +203,7 @@ def _verdict_batch(
     """One micro-batch: dedup verdict against the persistent fingerprint
     index + the stateless columns; append this epoch's verdicts and the
     batch's (fp, min_doc) state rows idempotently (a replayed epoch
-    overwrites exactly its own partitions — the dedup_stream recipe)."""
+    overwrites exactly its own partitions — index_store.write_epoch_idempotent)."""
     from pyspark.sql import Window
 
     spark = batch.sparkSession
@@ -264,10 +265,12 @@ def _verdict_batch(
         fut_v = pool.submit(write_epoch_idempotent, verdicts, out_dir, epoch_id)
         fut_s = pool.submit(
             write_epoch_idempotent,
-            base.groupBy("fp").agg(F.min("doc_id").alias("min_doc")),
+            base.groupBy("fp")
+            .agg(F.min("doc_id").alias("min_doc"))
+            .withColumn("bkt", _fp_bucket(F.col("fp"), fp_prefix_len)),
             fp_path,
             epoch_id,
-            bucket=_fp_bucket(F.col("fp"), fp_prefix_len),
+            "bkt",
         )
         fut_v.result()
         fut_s.result()
@@ -292,7 +295,6 @@ def start_verdict_stream(
     Keep it fixed across restarts of the same ``state_dir``; the layout
     marker fails fast if not."""
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        check_or_write_index_layout,
         state_bucket_prefix_len,
     )
 
@@ -304,7 +306,7 @@ def start_verdict_stream(
     # a key's bucket is its address: pin the fan-out for the life of the
     # state dir, fail fast on a mismatched restart (the
     # fp-index has one bucketed table, so doc_fanout mirrors prefix_len)
-    check_or_write_index_layout(state_dir, fp_prefix_len, 16 ** fp_prefix_len)
+    pin_index_layout(state_dir, fp_prefix_len, 16 ** fp_prefix_len)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         _verdict_batch(

@@ -19,15 +19,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from streaming_data_pipeline_capstone_spark.index_store import (
+    read_index_or_none,
+    write_epoch_idempotent,
+)
 from streaming_data_pipeline_capstone_spark.operators.similarity import (
     _as_double,
     cosine,
     hyperplane_signature,
     materialize_planes,
-)
-from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-    read_index_or_none,
-    write_epoch_idempotent,
 )
 from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
@@ -90,7 +90,7 @@ def _merge_batch(
     verified = cands.filter(F.col("cosine_sim") >= threshold).dropDuplicates(["id1", "id2"])
     write_epoch_idempotent(verified, pairs_dir, epoch_id)
     write_epoch_idempotent(
-        tagged_new, index_dir, epoch_id, bucket=F.col("sig")
+        tagged_new.withColumn("bkt", F.col("sig")), index_dir, epoch_id, "bkt"
     )
     tagged_new.unpersist()
 

@@ -13,8 +13,9 @@ splits them out:
 
 - ``postings/bkt=<h>/epoch=<e>`` rows (term, doc_id, tf, dl, lang) —
   per-batch tokenize + per-(doc, term) count, Θ(batch) work, landed via
-  the idempotent dynamic-overwrite recipe (write_epoch_idempotent), so
-  at-least-once replay stays effectively-once storage;
+  the idempotent dynamic-overwrite recipe
+  (index_store.write_epoch_idempotent), so at-least-once replay stays
+  effectively-once storage;
 - ``stats/epoch=<e>`` ONE ROW per batch (n_docs, sum_dl as exact
   integers) — the additive sufficient statistics of the corpus
   constants.
@@ -28,9 +29,9 @@ the streamed index is therefore HASH-IDENTICAL to the one-shot layout's
 certifies both index forms, the dense family's one-probe convention).
 
 The bucket fan-out is pinned for the life of the index by the state-
-index layout marker (dedup_stream.check_or_write_index_layout), and the
-compaction rule applies unchanged: compact_epoch_table collapses epochs
-per bucket when files-per-bucket crosses the threshold.
+index layout marker (index_store.pin_index_layout), and the compaction
+rule applies unchanged: index_store.compact_epochs collapses epochs per
+bucket when files-per-bucket crosses the threshold.
 """
 
 from __future__ import annotations
@@ -41,15 +42,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from streaming_data_pipeline_capstone_spark.index_store import (
+    compact_epochs,
+    compaction_due,
+    pin_index_layout,
+    read_buckets,
+    read_index_layout,
+    rebucket_decision,
+    write_epoch_idempotent,
+)
 from streaming_data_pipeline_capstone_spark.operators.text_layout import (
     postings_prefix_len,
     term_bucket_py,
 )
 from streaming_data_pipeline_capstone_spark.operators.textstats import tokens
-from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-    check_or_write_index_layout,
-    write_epoch_idempotent,
-)
 from streaming_data_pipeline_capstone_spark.streaming.sinks import for_each_batch
 
 # Fan-out is a RULE of the expected vocabulary, never a constant
@@ -116,10 +122,6 @@ def streaming_postings_ingest(
     the identical source from the start — the idempotent overwrite then
     rewrites each epoch with its own content (pinned in tests); any
     other content at colliding epoch ids would replace history."""
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        read_index_layout,
-    )
-
     try:
         # an EXISTING index's marker is the authority (the restart and
         # restart-after-rebucket path — the vocabulary estimate only
@@ -128,15 +130,15 @@ def streaming_postings_ingest(
         prefix_len = int(read_index_layout(index_dir)["bh_prefix_len"])
     except FileNotFoundError:
         prefix_len = postings_prefix_len(expected_vocab)
-        check_or_write_index_layout(index_dir, prefix_len, 16 ** prefix_len)
+        pin_index_layout(index_dir, prefix_len, 16 ** prefix_len)
 
     def ingest(batch: DataFrame, epoch_id: int) -> None:
         post, stats = _batch_postings(batch)
         write_epoch_idempotent(
-            post,
+            post.withColumn("bkt", _term_bucket(prefix_len)),
             os.path.join(index_dir, "postings"),
             epoch_id,
-            bucket=_term_bucket(prefix_len),
+            "bkt",
         )
         write_epoch_idempotent(
             stats, os.path.join(index_dir, "stats"), epoch_id
@@ -150,35 +152,26 @@ def maybe_compact_postings_index(spark: SparkSession, index_dir: str) -> bool:
 
     - write-side rebucket: when the sustained batch
       write shape says the fan-out is over-sized for the batch bytes
-      (dedup_stream.rebucket_decision), the compaction rewrite ALSO
+      (index_store.rebucket_decision), the compaction rewrite ALSO
       moves every posting to the target fan-out and re-pins the marker —
       probes read the fan-out from the marker, so serving follows the
       rebucket with no code change;
     - files-per-bucket (read amplification): otherwise collapse epochs at
-      the current fan-out when any bucket crosses MAX_BUCKET_FILES.
+      the current fan-out when index_store.compaction_due fires.
 
     Returns whether a rewrite ran. Only call with ingest stopped and its
-    checkpoint committed (compact_epoch_table's contract)."""
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        MAX_BUCKET_FILES,
-        compact_epoch_table,
-        _write_index_layout,
-        files_per_bucket_table,
-        read_index_layout,
-        rebucket_decision,
-    )
-
+    checkpoint committed (index_store.compact_epochs's contract)."""
     prefix_len = int(read_index_layout(index_dir)["bh_prefix_len"])
     post = os.path.join(index_dir, "postings")
     decision = rebucket_decision(post, 16 ** prefix_len)
     if decision["rebucket_due"]:
         target = decision["target_prefix_len"]
-        compact_epoch_table(spark, post, _term_bucket(target))
-        _write_index_layout(index_dir, target, 16 ** target)
+        compact_epochs(spark, post, "bkt", _term_bucket(target))
+        pin_index_layout(index_dir, target, 16 ** target, repin=True)
         return True
-    if files_per_bucket_table(post) <= MAX_BUCKET_FILES:
+    if not compaction_due(post, "bkt"):
         return False
-    compact_epoch_table(spark, post, _term_bucket(prefix_len))
+    compact_epochs(spark, post, "bkt")
     return True
 
 
@@ -231,11 +224,6 @@ def bm25_base_from_stream_index(
     serving entries, so formula/tokenization can never drift between
     index forms. ``None`` when none of the probed buckets exist (empty
     index / absent terms)."""
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        _existing_bucket_paths,
-        read_index_layout,
-    )
-
     prefix_len = int(read_index_layout(index_dir)["bh_prefix_len"])
 
     # explicit schemas on both reads (r15): parquet-footer schema
@@ -253,18 +241,17 @@ def bm25_base_from_stream_index(
 
     post_root = os.path.join(index_dir, "postings")
     buckets = sorted({term_bucket_py(t, prefix_len) for t in terms})
-    sub = _existing_bucket_paths(spark, post_root, buckets)
-    if not sub:
+    post = read_buckets(
+        spark,
+        post_root,
+        buckets,
+        "term string, doc_id bigint, tf bigint, dl int, lang string, "
+        "bkt string, epoch int",
+    )
+    if post is None:
         return None
-    post = (
-        spark.read.schema(
-            "term string, doc_id bigint, tf bigint, dl int, lang string, "
-            "bkt string, epoch int"
-        )
-        .option("basePath", post_root)
-        .parquet(*sub)
-        .filter(F.col("term").isin(terms))
-        .select("term", "doc_id", "tf", "dl", "lang")
+    post = post.filter(F.col("term").isin(terms)).select(
+        "term", "doc_id", "tf", "dl", "lang"
     )
     dfreq = post.groupBy("term").agg(
         F.count("*").cast("double").alias("df")

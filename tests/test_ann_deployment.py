@@ -349,7 +349,7 @@ def test_rerank_recall_vs_exact(spark, sf_oracle):
 
 
 def test_spilled_layout_and_probe(spark, sf_oracle):
-    """Round-11 spilled serving (ANN_RECALL_r11.json): the spilled layout
+    """Spilled serving (recall run in git history at 78bf83b): the spilled layout
     must store every vector in exactly SPILL distinct cells, the first of
     them bit-identical to the single-assignment choice (spilling ADDS
     copies, never moves the primary), and the composed probe at the
@@ -696,10 +696,10 @@ def test_ann_epoch_compaction_rule_and_identity(spark, sf_oracle, tmp_path):
     import os
     import shutil
 
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        ann_compaction_due,
-        compact_cell_epochs,
-        epoch_files_per_cell,
+    from streaming_data_pipeline_capstone_spark.index_store import (
+        compact_epochs,
+        compaction_due,
+        max_files_per_partition,
     )
     from streaming_data_pipeline_capstone_spark.queries.extras import (
         _incr_layout,
@@ -716,15 +716,15 @@ def test_ann_epoch_compaction_rule_and_identity(spark, sf_oracle, tmp_path):
     assert before
     # the 2-epoch gate layout is under every sane threshold; the rule
     # fires at threshold 1 (any cell holding >1 epoch file)
-    assert not ann_compaction_due(work, max_epoch_files=16)
-    assert ann_compaction_due(work, max_epoch_files=1)
+    assert not compaction_due(work, "cell", max_files=16)
+    assert compaction_due(work, "cell", max_files=1)
 
-    compact_cell_epochs(spark, work, partitions=4)
+    compact_epochs(spark, work, "cell", partitions=4)
     cells = [d for d in os.listdir(work) if d.startswith("cell=")]
     assert cells
     for c in cells:
         assert os.listdir(os.path.join(work, c)) == ["epoch=-1"], c
-    assert epoch_files_per_cell(work) == 1
+    assert max_files_per_partition(work, "cell") == 1
     after = [tuple(r) for r in _pruned_rerank_topk_at(spark, sf_oracle, work, 10).collect()]
     assert after == before
     # marker files inside the layout survive the rewrite (a

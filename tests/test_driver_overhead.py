@@ -115,16 +115,16 @@ class TestSchemaMemos:
         assert ra == rb
 
     def test_read_index_memo_returns_identical_frames(self, spark, tmp_path):
-        from streaming_data_pipeline_capstone_spark.streaming import dedup_stream
+        from streaming_data_pipeline_capstone_spark import index_store
 
         path = str(tmp_path / "idx")
         df = spark.createDataFrame(
             [(1, "a", 0), (2, "b", 0), (3, "c", 1)], ["doc", "bh", "epoch"]
         )
         df.write.partitionBy("epoch").parquet(path)
-        dedup_stream._INDEX_SCHEMA_CACHE.pop(path, None)
-        a = dedup_stream.read_index(spark, path)
-        assert path in dedup_stream._INDEX_SCHEMA_CACHE
-        b = dedup_stream.read_index(spark, path, exclude_epoch=1)
+        index_store._INDEX_SCHEMA_CACHE.pop(path, None)
+        a = index_store.read_index(spark, path)
+        assert path in index_store._INDEX_SCHEMA_CACHE
+        b = index_store.read_index(spark, path, exclude_epoch=1)
         assert sorted(r["doc"] for r in a.collect()) == [1, 2, 3]
         assert sorted(r["doc"] for r in b.collect()) == [1, 2]

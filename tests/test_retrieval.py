@@ -438,9 +438,9 @@ def test_streamed_postings_index_matches_one_shot_and_compacts(spark, tmp_path):
         replay_to_files,
         stream_from_replay,
     )
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        compact_epoch_table,
-        files_per_bucket_table,
+    from streaming_data_pipeline_capstone_spark.index_store import (
+        compact_epochs,
+        max_files_per_partition,
     )
     from streaming_data_pipeline_capstone_spark.streaming.text_index_stream import (
         _term_bucket,
@@ -500,11 +500,11 @@ def test_streamed_postings_index_matches_one_shot_and_compacts(spark, tmp_path):
     ] == streamed
 
     # compaction: collapse epochs, identical answer
-    assert files_per_bucket_table(index_dir + "/postings") >= 3
-    compact_epoch_table(
-        spark, index_dir + "/postings", _term_bucket(1), partitions_per_table=2
+    assert max_files_per_partition(index_dir + "/postings", "bkt") >= 3
+    compact_epochs(
+        spark, index_dir + "/postings", "bkt", _term_bucket(1), partitions=2
     )
-    assert files_per_bucket_table(index_dir + "/postings") == 1
+    assert max_files_per_partition(index_dir + "/postings", "bkt") == 1
     assert [
         tuple(r)
         for r in bm25_topk_from_stream_index(
@@ -700,7 +700,7 @@ def test_streamed_postings_write_side_rebucket(spark, tmp_path):
         replay_to_files,
         stream_from_replay,
     )
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
+    from streaming_data_pipeline_capstone_spark.index_store import (
         epoch_write_stats,
         rebucket_decision,
     )

@@ -178,9 +178,7 @@ def test_state_index_reads_are_bucket_pruned(spark, sf_smoke, tmp_path):
     from streaming_data_pipeline_capstone_spark.streaming.curation_stream import (
         run_stream_curation_verdicts,
     )
-    from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        read_index,
-    )
+    from streaming_data_pipeline_capstone_spark.index_store import read_index
 
     docs, beta = _gate_fixture(spark, sf_smoke)
     work = str(tmp_path / "work")
@@ -234,10 +232,10 @@ def test_dedup_stream_index_reads_are_bucket_pruned(spark, tmp_path):
         replay_to_files,
         stream_from_replay,
     )
+    from streaming_data_pipeline_capstone_spark.index_store import read_index
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
         _bh_bucket,
         _doc_bucket,
-        read_index,
         streaming_minhash_dedup,
     )
 

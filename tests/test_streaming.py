@@ -862,10 +862,10 @@ def test_compaction_lifecycle_under_growth(spark, tmpdir):
     → drain more. Verified pairs must equal an uncompacted control run
     over the same batches, and bucket pruning must still list only
     probed directories after compaction."""
+    from streaming_data_pipeline_capstone_spark.index_store import read_index
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
         _merge_batch,
         compact_index,
-        read_index,
     )
 
     words = (
@@ -1008,17 +1008,17 @@ def test_state_index_layout_marker_pins_fanout(spark, tmpdir):
     compaction — the legitimate rebucket — updates the marker."""
     import pytest as _pytest
 
+    from streaming_data_pipeline_capstone_spark.index_store import pin_index_layout
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
         _merge_batch,
-        check_or_write_index_layout,
         compact_index,
     )
 
     idx = tmpdir + "/idx"
-    check_or_write_index_layout(idx, 1, 16)
-    check_or_write_index_layout(idx, 1, 16)  # same layout: fine
+    pin_index_layout(idx, 1, 16)
+    pin_index_layout(idx, 1, 16)  # same layout: fine
     with _pytest.raises(ValueError, match="layout mismatch"):
-        check_or_write_index_layout(idx, 2, 256)
+        pin_index_layout(idx, 2, 256)
 
     # compaction rebuilds every bkt= with the new fan-outs and re-pins
     df = spark.createDataFrame(
@@ -1030,9 +1030,9 @@ def test_state_index_layout_marker_pins_fanout(spark, tmpdir):
         bh_prefix_len=1, doc_fanout=16,
     )
     compact_index(spark, idx, partitions_per_table=2, bh_prefix_len=2, doc_fanout=256)
-    check_or_write_index_layout(idx, 2, 256)  # new layout now pinned
+    pin_index_layout(idx, 2, 256)  # new layout now pinned
     with _pytest.raises(ValueError, match="layout mismatch"):
-        check_or_write_index_layout(idx, 1, 16)
+        pin_index_layout(idx, 1, 16)
 
 
 def test_compaction_trigger_rule_fires_and_compacts(spark, tmpdir):
@@ -1040,14 +1040,17 @@ def test_compaction_trigger_rule_fires_and_compacts(spark, tmpdir):
     grow files-per-bucket; once past the threshold the rule fires,
     maybe_compact_index compacts (epochs collapse to the sentinel), the
     rule resets, and verified pairs are unaffected."""
+    from streaming_data_pipeline_capstone_spark.index_store import (
+        compaction_due,
+        max_files_per_partition,
+    )
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
         _merge_batch,
-        files_per_bucket,
-        index_compaction_due,
         maybe_compact_index,
     )
 
     idx, pairs = tmpdir + "/idx", tmpdir + "/pairs"
+    tables = [idx + "/bands", idx + "/sets"]
     words = "alpha beta gamma delta epsilon zeta eta theta".split()
     for epoch in range(4):
         rows = [
@@ -1059,17 +1062,17 @@ def test_compaction_trigger_rule_fires_and_compacts(spark, tmpdir):
             df, epoch, idx, pairs, "doc_id", "text", 0.5, 12, 4,
             bh_prefix_len=1, doc_fanout=16,
         )
-    grown = files_per_bucket(idx)
+    grown = max(max_files_per_partition(t, "bkt") for t in tables)
     assert grown >= 4, grown  # every epoch adds a file to its hot buckets
     before = {
         (r["doc1"], r["doc2"])
         for r in spark.read.parquet(pairs).collect()
     }
-    assert not index_compaction_due(idx, max_bucket_files=16)
-    assert index_compaction_due(idx, max_bucket_files=3)
+    assert not any(compaction_due(t, "bkt", max_files=16) for t in tables)
+    assert any(compaction_due(t, "bkt", max_files=3) for t in tables)
     assert maybe_compact_index(spark, idx, partitions_per_table=2, max_bucket_files=3)
-    assert files_per_bucket(idx) < grown
-    assert not index_compaction_due(idx, max_bucket_files=3)
+    assert max(max_files_per_partition(t, "bkt") for t in tables) < grown
+    assert not any(compaction_due(t, "bkt", max_files=3) for t in tables)
     assert not maybe_compact_index(spark, idx, partitions_per_table=2, max_bucket_files=3)
     # post-compaction the index still answers: one more epoch finds its
     # cross-batch near-dup against compacted state

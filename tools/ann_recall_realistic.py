@@ -1,6 +1,6 @@
 """ANN recall at a REALISTIC cell count.
 
-The r9 curve (`ANN_RECALL_r09.json`) certified the shipped 16x4/k=64
+The r9 recall curve (git history at 78bf83b) certified the shipped 16x4/k=64
 codebook at the fixture scale's coarse index: KMEANS_K=8 cells, nprobe=5
 — i.e. the "pruned" probe still read 62% of storage. That regime says
 nothing about the 100 TB serving claim, where the whole point of IVF is

@@ -12,7 +12,8 @@ repo's machinery):
 
 - NOT DUE: keep appending epochs (`append_cell_epoch` /
   `streaming/ann_index_stream.py`); compact when the files-per-cell
-  rule fires (`ann_compaction_due` → `compact_cell_epochs`).
+  rule fires (`index_store.compaction_due(path, "cell")` →
+  `index_store.compact_epochs(spark, path, "cell")`).
 - DUE (corpus growth doubled the rule's k): the old probe set is
   meaningless under new centroids, so the swap must be atomic —
   1. retrain centroids + PQ books on a fresh sample of the GROWN
@@ -115,7 +116,8 @@ def main() -> None:
                     if due
                     else [
                         "keep appending epochs (append_cell_epoch / streaming ingest)",
-                        "compact when ann_compaction_due fires (compact_cell_epochs)",
+                        "compact when index_store.compaction_due(path, 'cell') fires "
+                        "(index_store.compact_epochs(spark, path, 'cell'))",
                     ]
                 ),
             }

@@ -96,13 +96,13 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from streaming_data_pipeline_capstone_spark.index_store import source_mtime
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        _model_hash,
-        _source_mtime,
         cell_layout_path,
         coarse_cells,
         coarse_retrain_due,
         ensure_cell_layout,
+        model_hash,
     )
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
         lloyd_kmeans_centroids,
@@ -181,10 +181,10 @@ def main() -> None:
         "n_train": int(n_train),
         "train_sample": f"vec_id % {args.train_mod} == 0",
         "nprobe_frac": args.nprobe_frac,
-        "source_mtime": _source_mtime(args.sf_dir),
+        "source_mtime": source_mtime(args.sf_dir, "embeddings"),
         "trained_by": "tools/ann_retrain_exec.py",
     }
-    tag = "m" + _model_hash(cents, books, PQ_SUB_DIM)[:8]
+    tag = "m" + model_hash(cents, books, PQ_SUB_DIM)[:8]
     step(
         "retrain",
         rule_k=rule_k,
