@@ -536,7 +536,6 @@ def encode_for_layout(
 
 
 def append_cell_epoch(
-    spark: SparkSession,
     vecs_df: DataFrame,
     path: str,
     centroids: list[list[float]],

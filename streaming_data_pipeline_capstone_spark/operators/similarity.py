@@ -268,9 +268,6 @@ def _pairs_within(pdf, threshold: float):
     but O(block×m) memory, so a hot bucket degrades smoothly instead of
     stalling the stage. Pair set and 6-dp scores are unchanged: same
     round-then-compare, same global j>i triangle."""
-    import numpy as np
-    import pandas as pd
-
     return _blocked_pairs(pdf, threshold, prefixes=None)
 
 

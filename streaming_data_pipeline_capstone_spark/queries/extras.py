@@ -15,7 +15,9 @@ partitioned by ``ivf_cell`` so the probe is a partition-pruned scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import replace
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_capstone_spark.functions.geo import affine_coefficients, apply_affine
@@ -735,6 +737,10 @@ from streaming_data_pipeline_capstone_spark.queries.ann_config import (  # noqa:
     SPILL as _SPILL,
     SPILL_NPROBE as _SPILL_NPROBE,
 )
+from streaming_data_pipeline_capstone_spark.queries.codebooks import (  # noqa: E402
+    KMEANS_CENTROIDS,
+    PQ_BOOKS,
+)
 
 
 def _lloyd_sq(dim: int) -> str:
@@ -745,21 +751,24 @@ def _lloyd_sq(dim: int) -> str:
     ).format(d=dim)
 
 
-def _lloyd_assign_cte(name: str, src: str, cents: str, dim: int) -> str:
-    """CTE assigning each vector of ``src`` to its nearest ``cents`` centroid
-    (first-min tie-break, matching Spark's array_position-of-array_min).
+def _lloyd_assign_cte(
+    name: str, src: str, cents: str, dim: int, spill: int = 1
+) -> str:
+    """CTE assigning each vector of ``src`` to its ``spill`` nearest
+    ``cents`` centroids (first-min tie-break, matching Spark's
+    array_position-of-array_min).
 
-    MATERIALIZED (r12): the PQ oracles join _PQ_SUBS of these on vec_id;
+    MATERIALIZED: the PQ oracles join _PQ_SUBS of these on vec_id;
     inlined, DuckDB's planner faces a 32-way join of window subqueries
-    and the fixed-encode oracle went from seconds to unbounded when the
-    r12 codebook doubled the sub-quantizer count. Materializing pins
-    each assignment to one evaluation and the join to 32 tiny tables
-    (measured: >400 s → 5.8 s, values unchanged)."""
+    and the fixed-encode oracle went from seconds to unbounded at the
+    32-subspace codebook. Materializing pins each assignment to one
+    evaluation and the join to 32 tiny tables (measured: >400 s → 5.8 s,
+    values unchanged)."""
     return f"""{name} AS MATERIALIZED (SELECT vec_id, v, cell FROM (
         SELECT e.vec_id, e.v, c.cell,
                row_number() OVER (PARTITION BY e.vec_id
                                   ORDER BY {_lloyd_sq(dim)} ASC, c.cell ASC) AS rn
-        FROM {src} e, {cents} c) WHERE rn = 1)"""
+        FROM {src} e, {cents} c) WHERE rn <= {spill})"""
 
 
 def _lloyd_ctes(src: str, pfx: str, dim: int, k: int, iters: int) -> tuple[list[str], str]:
@@ -792,28 +801,121 @@ def _lloyd_ctes(src: str, pfx: str, dim: int, k: int, iters: int) -> tuple[list[
     return ctes, f"{pfx}c{iters}"
 
 
-def _kmeans_ivf_oracle() -> str:
-    """Unrolled deterministic-Lloyd oracle: c0 → (assign, mean)×ITERS → probe."""
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
-    train, last = _lloyd_ctes("e", "", _EMB_DIM, _KMEANS_K, _KMEANS_ITERS)
-    ctes += train
-    ctes.append(_lloyd_assign_cte("af", "e", last, _EMB_DIM))
-    ctes.append("q AS (SELECT v AS qv FROM e WHERE vec_id = 0)")
-    ctes.append(
-        f"""probe AS (SELECT cell FROM {last}, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})"""
+def _values_cents_cte(name: str, mat: list[list[float]]) -> str:
+    """CTE of literal centroids: ``name(cell, cv)``."""
+    rows = ", ".join(
+        f"({i}, [{', '.join(repr(float(x)) for x in row)}]::DOUBLE[])"
+        for i, row in enumerate(mat)
     )
-    return (
-        "WITH " + ",\n".join(ctes) + """
-    SELECT af.vec_id, round(list_cosine_similarity(af.v, q.qv), 6) AS cosine_sim
-    FROM af JOIN probe USING (cell), q
+    return f"{name}(cell, cv) AS (SELECT * FROM (VALUES {rows}) t(cell, cv))"
+
+
+_E_CTE = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)"
+
+
+def _pq_assign_ctes(trained: bool = False) -> list[str]:
+    """Per PQ subspace s of ``e``: the slice ``e{s}``, its codebook
+    ``b{s}`` (the shipped literals, or unrolled Lloyd training when
+    ``trained``) and each vector's code ``s{s}_af``."""
+    ctes = []
+    for s in range(_PQ_SUBS):
+        lo = s * _PQ_SUB_DIM + 1
+        ctes.append(
+            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
+        )
+        if trained:
+            train, last = _lloyd_ctes(f"e{s}", f"s{s}_", _PQ_SUB_DIM, _PQ_K, _PQ_ITERS)
+            ctes += train + [f"b{s} AS (SELECT * FROM {last})"]
+        else:
+            ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
+        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
+    return ctes
+
+
+def _coarse_ctes(spill: int = 1, trained: bool = False) -> list[str]:
+    """``e``, the coarse centroids ``cb`` (the shipped literals, or
+    unrolled Lloyd training when ``trained``) and each vector's
+    ``spill`` nearest cells ``af``."""
+    if trained:
+        train, last = _lloyd_ctes("e", "", _EMB_DIM, _KMEANS_K, _KMEANS_ITERS)
+        cents = train + [f"cb AS (SELECT * FROM {last})"]
+    else:
+        cents = [_values_cents_cte("cb", KMEANS_CENTROIDS)]
+    return [_E_CTE, *cents, _lloyd_assign_cte("af", "e", "cb", _EMB_DIM, spill)]
+
+
+def _probe_ctes(qid: int, nprobe: int | None, label: int | None) -> list[str]:
+    """Query ``qid``'s vector ``q_{qid}``; with ``nprobe``, also its
+    nprobe nearest cells ``probe_{qid}`` and the distinct ids stored
+    there ``surv_{qid}`` (only those with ``label`` when given)."""
+    ctes = [f"q_{qid} AS (SELECT v AS qv FROM e WHERE vec_id = {qid})"]
+    if nprobe is None:
+        return ctes
+    flt = "" if label is None else f" JOIN e USING (vec_id) WHERE e.label = {label}"
+    return ctes + [
+        f"""probe_{qid} AS (SELECT cell FROM cb, q_{qid} q
+            ORDER BY list_cosine_similarity(cv, q.qv) DESC, cell ASC LIMIT {nprobe})""",
+        f"""surv_{qid} AS (SELECT DISTINCT vec_id
+            FROM af JOIN probe_{qid} USING (cell){flt})""",
+    ]
+
+
+def _ann_ctes(
+    qid: int, k: int, label: int | None = None, nprobe: int | None = _NPROBE
+) -> list[str]:
+    """The oracle twin of one single-query serving probe, as CTEs
+    suffixed ``_{qid}``: :func:`_probe_ctes`, the ADC distance tables
+    ``dt``, the _RERANK-id ADC shortlist ``short`` (of the survivors, or
+    of the whole corpus without ``nprobe``) and ``top``, the
+    exact-cosine top-``k`` (vec_id, [label,] cosine_sim, rank)."""
+    sfx = f"_{qid}"
+    ctes = _probe_ctes(qid, nprobe, label)
+    joins = " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
+    if nprobe is not None:
+        joins += f" JOIN surv{sfx} USING (vec_id)"
+    for s in range(_PQ_SUBS):
+        lo = s * _PQ_SUB_DIM
+        ctes.append(
+            f"""dt{sfx}_{s} AS (SELECT c.cell,
+                list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
+                    i -> (q.qv[{lo} + i] - c.cv[i]) * (q.qv[{lo} + i] - c.cv[i]))) AS d
+                FROM b{s} c, q{sfx} q)"""
+        )
+        joins += f" JOIN dt{sfx}_{s} ON a{s}.cell = dt{sfx}_{s}.cell"
+    total = " + ".join(f"dt{sfx}_{s}.d" for s in range(_PQ_SUBS))
+    lbl = "" if label is None else " CAST(e.label AS INT) AS label,"
+    return ctes + [
+        f"""short{sfx} AS MATERIALIZED (
+            SELECT a0.vec_id, round({total}, 6) AS adc_dist
+            FROM s0_af a0 {joins}
+            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})""",
+        f"""top{sfx} AS (SELECT * FROM (
+            SELECT e.vec_id,{lbl}
+                   round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim,
+                   CAST(row_number() OVER (
+                     ORDER BY round(list_cosine_similarity(e.v, q.qv), 6) DESC,
+                              e.vec_id ASC) AS BIGINT) AS rank
+            FROM e JOIN short{sfx} USING (vec_id), q{sfx} q) WHERE rank <= {k})""",
+    ]
+
+
+def _ann_oracle(ctes: list[str], select: str) -> str:
+    return "WITH " + ",\n".join(ctes) + "\n" + select
+
+
+def _kmeans_ivf_oracle(trained: bool = False) -> str:
+    """Full-precision IVF probe: exact cosine top-10 over the query's
+    _NPROBE nearest cells."""
+    return _ann_oracle(
+        _coarse_ctes(trained=trained) + _probe_ctes(0, _NPROBE, None),
+        """SELECT af.vec_id, round(list_cosine_similarity(af.v, q.qv), 6) AS cosine_sim
+    FROM af JOIN surv_0 USING (vec_id), q_0 q
     ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
+    LIMIT 10""",
     )
 
 
-@register("sim_topk_kmeans_ivf", _kmeans_ivf_oracle())
+@register("sim_topk_kmeans_ivf", _kmeans_ivf_oracle(trained=True))
 def sim_topk_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
         assign_cells,
@@ -897,61 +999,19 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by construction). (Constants imported from queries/ann_config.py.)
 
 
-def _pq_base_ctes() -> list[str]:
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
-    assigns = []
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        train, last = _lloyd_ctes(f"e{s}", f"s{s}_", _PQ_SUB_DIM, _PQ_K, _PQ_ITERS)
-        ctes += train
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", last, _PQ_SUB_DIM))
-        assigns.append(f"s{s}_af")
-    return ctes
-
-
-def _pq_encode_oracle() -> str:
-    ctes = _pq_base_ctes()
-    joins = " ".join(
-        f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS)
-    )
+def _pq_encode_oracle(trained: bool = False) -> str:
+    joins = " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
     cols = ", ".join(f"a{s}.cell AS c{s}" for s in range(_PQ_SUBS))
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT a0.vec_id, {cols} FROM s0_af a0 {joins}"
+    return _ann_oracle(
+        [_E_CTE] + _pq_assign_ctes(trained),
+        f"SELECT a0.vec_id, {cols} FROM s0_af a0 {joins}",
     )
 
 
-def _pq_topk_oracle() -> str:
-    ctes = _pq_base_ctes()
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"q{s} AS (SELECT list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS qv "
-            "FROM e WHERE vec_id = 0)"
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT c.cell,
-                list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                    i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                FROM s{s}_c{_PQ_ITERS} c, q{s} q)"""
-        )
-    joins = " ".join(
-        f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS)
-    ) + " " + " ".join(
-        f"JOIN dt{s} ON a{s}.cell = dt{s}.cell" for s in range(_PQ_SUBS)
-    )
-    total = " + ".join(f"dt{s}.d" for s in range(_PQ_SUBS))
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-    SELECT a0.vec_id, round({total}, 6) AS adc_dist
-    FROM s0_af a0 {joins}
-    ORDER BY adc_dist ASC, vec_id ASC
-    LIMIT 10
-    """
+def _pq_topk_oracle(trained: bool = False) -> str:
+    return _ann_oracle(
+        [_E_CTE] + _pq_assign_ctes(trained) + _ann_ctes(0, 10, nprobe=None),
+        "SELECT vec_id, adc_dist FROM short_0 ORDER BY adc_dist, vec_id LIMIT 10",
     )
 
 
@@ -964,7 +1024,7 @@ def _pq_books(spark: SparkSession, sf_dir: str):
     return vecs, pq_train(vecs, _PQ_SUBS, _PQ_SUB_DIM, _PQ_K, _PQ_ITERS)
 
 
-@register("emb_pq_encode", _pq_encode_oracle())
+@register("emb_pq_encode", _pq_encode_oracle(trained=True))
 def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_pipeline_capstone_spark.operators.similarity import pq_encode_cols
 
@@ -975,7 +1035,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vecs.select("vec_id", *pq_encode_cols(F.col("v"), books, _PQ_SUB_DIM))
 
 
-@register("sim_pq_topk", _pq_topk_oracle())
+@register("sim_pq_topk", _pq_topk_oracle(trained=True))
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
         pq_adc_score,
@@ -1008,86 +1068,6 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTEs, so the value-hash check covers the shipped artifact too (training
 # is 6-dp-rounded, so every literal's repr round-trips exactly into both
 # engines).
-from streaming_data_pipeline_capstone_spark.queries.codebooks import (  # noqa: E402
-    KMEANS_CENTROIDS,
-    PQ_BOOKS,
-)
-
-
-def _values_cents_cte(name: str, mat: list[list[float]]) -> str:
-    """CTE of literal centroids: ``name(cell, cv)``."""
-    rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in row)}]::DOUBLE[])"
-        for i, row in enumerate(mat)
-    )
-    return f"{name}(cell, cv) AS (SELECT * FROM (VALUES {rows}) t(cell, cv))"
-
-
-def _pq_fixed_base_ctes() -> list[str]:
-    ctes = ["e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    return ctes
-
-
-def _pq_encode_fixed_oracle() -> str:
-    ctes = _pq_fixed_base_ctes()
-    joins = " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-    cols = ", ".join(f"a{s}.cell AS c{s}" for s in range(_PQ_SUBS))
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT a0.vec_id, {cols} FROM s0_af a0 {joins}"
-
-
-def _pq_topk_fixed_oracle() -> str:
-    ctes = _pq_fixed_base_ctes()
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"q{s} AS (SELECT list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS qv "
-            "FROM e WHERE vec_id = 0)"
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT c.cell,
-                list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                    i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                FROM b{s} c, q{s} q)"""
-        )
-    joins = " ".join(
-        f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS)
-    ) + " " + " ".join(f"JOIN dt{s} ON a{s}.cell = dt{s}.cell" for s in range(_PQ_SUBS))
-    total = " + ".join(f"dt{s}.d" for s in range(_PQ_SUBS))
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-    SELECT a0.vec_id, round({total}, 6) AS adc_dist
-    FROM s0_af a0 {joins}
-    ORDER BY adc_dist ASC, vec_id ASC
-    LIMIT 10
-    """
-    )
-
-
-def _kmeans_ivf_fixed_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})""",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes) + """
-    SELECT af.vec_id, round(list_cosine_similarity(af.v, q.qv), 6) AS cosine_sim
-    FROM af JOIN probe USING (cell), q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
-    )
 
 
 def _double_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,7 +1077,7 @@ def _double_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("emb_pq_encode_fixed", _pq_encode_fixed_oracle())
+@register("emb_pq_encode_fixed", _pq_encode_oracle())
 def emb_pq_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode against the shipped codebook: zero training jobs, zero
     shuffles — the exact plan that compresses a 100 TB embedding corpus."""
@@ -1107,7 +1087,7 @@ def emb_pq_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vecs.select("vec_id", *pq_encode_cols(F.col("v"), PQ_BOOKS, _PQ_SUB_DIM))
 
 
-@register("sim_pq_topk_fixed", _pq_topk_fixed_oracle())
+@register("sim_pq_topk_fixed", _pq_topk_oracle())
 def sim_pq_topk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-k against the shipped codebook: one-row query fetch, one
     corpus scan, TakeOrderedAndProject — no training, no shuffles."""
@@ -1129,7 +1109,7 @@ def sim_pq_topk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(10)
 
 
-@register("sim_topk_kmeans_ivf_fixed", _kmeans_ivf_fixed_oracle())
+@register("sim_topk_kmeans_ivf_fixed", _kmeans_ivf_oracle())
 def sim_topk_kmeans_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe against shipped centroids: assignment + cell-pruned scan,
     no Lloyd jobs — the probe-side plan of a trained-once deployment."""
@@ -1160,45 +1140,9 @@ def sim_topk_kmeans_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_fixed_oracle() -> str:
     """IVF coarse probe + PQ ADC refine, both against shipped artifacts."""
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})""",
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-        ctes.append(
-            f"q{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1}) AS qv FROM q)"
-        )
-        ctes.append(
-            f"""dt{s} AS (SELECT c.cell,
-                list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                    i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                FROM b{s} c, q{s} q)"""
-        )
-    joins = (
-        " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-        + " "
-        + " ".join(f"JOIN dt{s} ON a{s}.cell = dt{s}.cell" for s in range(_PQ_SUBS))
-        + " JOIN af USING (vec_id) JOIN probe ON af.cell = probe.cell"
-    )
-    total = " + ".join(f"dt{s}.d" for s in range(_PQ_SUBS))
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-    SELECT a0.vec_id, round({total}, 6) AS adc_dist
-    FROM s0_af a0 {joins}
-    ORDER BY adc_dist ASC, vec_id ASC
-    LIMIT 10
-    """
+    return _ann_oracle(
+        _coarse_ctes() + _pq_assign_ctes() + _ann_ctes(0, 10),
+        "SELECT vec_id, adc_dist FROM short_0 ORDER BY adc_dist, vec_id LIMIT 10",
     )
 
 
@@ -1252,22 +1196,13 @@ def sim_topk_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_cells_oracle() -> str:
-    return (
-        "WITH "
-        + ",\n".join(
-            [
-                "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-                _values_cents_cte("cb", KMEANS_CENTROIDS),
-                _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-            ]
-        )
-        + """
-    SELECT * FROM (
+    return _ann_oracle(
+        _coarse_ctes(),
+        """SELECT * FROM (
       SELECT a.vec_id AS id1, b.vec_id AS id2,
              round(list_cosine_similarity(a.v, b.v), 6) AS cosine_sim
       FROM af a JOIN af b ON a.cell = b.cell AND a.vec_id < b.vec_id
-    ) WHERE cosine_sim >= 0.45
-    """
+    ) WHERE cosine_sim >= 0.45""",
     )
 
 
@@ -1330,12 +1265,14 @@ def _serving_model(sf_dir: str):
     return serving_model(sf_dir)
 
 
-def _serving_layout(spark: SparkSession, sf_dir: str) -> str:
+def _serving_layout(spark: SparkSession, sf_dir: str, m=None) -> str:
+    """The cell-partitioned layout of serving model ``m``, by default
+    the corpus's current one."""
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         ensure_cell_layout,
     )
 
-    m = _serving_model(sf_dir)
+    m = m or _serving_model(sf_dir)
     return ensure_cell_layout(
         spark,
         sf_dir,
@@ -1347,19 +1284,17 @@ def _serving_layout(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _serving_layout_spill(spark: SparkSession, sf_dir: str) -> str:
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        ensure_cell_layout,
-    )
-
+def _spill_model(sf_dir: str):
+    """The spill gate's model. The shipped codebooks are served from a
+    _SPILL-assigned layout probed at _SPILL_NPROBE cells, which keeps the
+    certified nprobe/k = 0.25 ratio at the fixture's k=8; a repointed
+    model's own spill and nprobe already encode that ratio at its k."""
     m = _serving_model(sf_dir)
-    if m.tag is not None:
-        # a repointed model's main layout already carries its certified
-        # spill — the spill gate query probes the same layout
-        return _serving_layout(spark, sf_dir)
-    return ensure_cell_layout(
-        spark, sf_dir, m.centroids, m.pq_books, m.pq_sub_dim, spill=_SPILL
-    )
+    return m if m.tag is not None else replace(m, nprobe=_SPILL_NPROBE, spill=_SPILL)
+
+
+def _serving_layout_spill(spark: SparkSession, sf_dir: str) -> str:
+    return _serving_layout(spark, sf_dir, _spill_model(sf_dir))
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -1368,38 +1303,66 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     return [float(x) for x in row[0]]
 
 
-@register("sim_topk_ivf_pruned", _kmeans_ivf_fixed_oracle())
-def sim_topk_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-precision IVF probe over the cell-partitioned layout: literal
-    ``cell IN (probes)`` -> partition-pruned scan of nprobe/k of storage,
-    then exact cosine + TakeOrderedAndProject over the survivors only."""
+def _pruned_probe(
+    spark: SparkSession, sf_dir: str, layout: str, m, label: int | None = None
+) -> tuple[list[float], DataFrame]:
+    """The query vector and the probe's scan of ``layout``: the literal
+    ``cell IN (probes)`` prunes it to the m.nprobe partition directories
+    nearest the query, and ``label`` (schema v2 keeps it in the layout
+    rows) becomes a parquet predicate under that prune."""
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         probe_cells_py,
     )
 
-    m = _serving_model(sf_dir)
-    layout = _serving_layout(spark, sf_dir)
     query = _query_vec(spark, sf_dir)
     probes = probe_cells_py(query, m.centroids, m.nprobe)
-    qcol = lit_double_array(query)
-    survivors = read_cell_layout(spark, layout, len(m.pq_books)).filter(F.col("cell").isin(probes))
-    scored = survivors.select(
-        "vec_id",
-        F.round(
-            cosine(F.transform("embedding", lambda x: x.cast("double")), qcol), 6
-        ).alias("cosine_sim"),
+    scan = read_cell_layout(spark, layout, len(m.pq_books)).filter(
+        F.col("cell").isin(probes)
     )
-    top = scored.orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    if m.spill > 1:
-        # spilled layout: copies of a vector in two probed cells carry
-        # identical (cosine_sim, vec_id) — take spill x the rows ordered,
-        # dedup the tiny frame, keep the top distinct ids
-        top = (
-            top.limit(10 * m.spill)
-            .dropDuplicates(["vec_id"])
-            .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        )
-    return top.limit(10)
+    if label is not None:
+        scan = scan.filter(F.col("label") == label)
+    return query, scan
+
+
+def _adc_dist(m, query: list[float]) -> Column:
+    """ADC distance of the code columns to ``query`` — the scan reads no
+    raw vectors."""
+    from streaming_data_pipeline_capstone_spark.operators.similarity import (
+        pq_adc_score,
+    )
+
+    codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
+    return F.round(pq_adc_score(codes, query, m.pq_books, m.pq_sub_dim), 6).alias(
+        "adc_dist"
+    )
+
+
+def _cosine_sim(query: list[float]) -> Column:
+    as_double = F.transform("embedding", lambda x: x.cast("double"))
+    return F.round(cosine(as_double, lit_double_array(query)), 6).alias("cosine_sim")
+
+
+def _distinct_top(scored: DataFrame, score: Column, n: int, spill: int) -> DataFrame:
+    """Top ``n`` distinct vec_ids of ``scored`` in ``score`` order, ties
+    by vec_id. A spilled layout stores a vector in ``spill`` cells, and
+    copies probed together score identically, so they sit next to each
+    other in that order: n·spill ordered rows hold the top n distinct
+    ids, and the dedup runs on that tiny frame, never on the scan."""
+    top = scored.orderBy(score, F.asc("vec_id"))
+    if spill > 1:
+        top = top.limit(n * spill).dropDuplicates(["vec_id"]).orderBy(score, F.asc("vec_id"))
+    return top.limit(n)
+
+
+@register("sim_topk_ivf_pruned", _kmeans_ivf_oracle())
+def sim_topk_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full-precision IVF probe over the cell-partitioned layout: literal
+    ``cell IN (probes)`` -> partition-pruned scan of nprobe/k of storage,
+    then exact cosine + TakeOrderedAndProject over the survivors only."""
+    m = _serving_model(sf_dir)
+    query, scan = _pruned_probe(spark, sf_dir, _serving_layout(spark, sf_dir), m)
+    scored = scan.select("vec_id", _cosine_sim(query))
+    return _distinct_top(scored, F.desc("cosine_sim"), 10, m.spill)
 
 
 @register("sim_topk_ivfpq_pruned", _ivfpq_fixed_oracle())
@@ -1410,33 +1373,10 @@ def sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC against the shipped codebook, TakeOrderedAndProject. Per-query
     cost at 100 TB: list nprobe directories, read (nprobe/k) x n rows of
     4 small ints each, k x 256 table lookups per row."""
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        probe_cells_py,
-    )
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        pq_adc_score,
-    )
-
     m = _serving_model(sf_dir)
-    layout = _serving_layout(spark, sf_dir)
-    query = _query_vec(spark, sf_dir)
-    probes = probe_cells_py(query, m.centroids, m.nprobe)
-    codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
-    survivors = read_cell_layout(spark, layout, len(m.pq_books)).filter(F.col("cell").isin(probes))
-    scored = survivors.select(
-        "vec_id",
-        F.round(pq_adc_score(codes, query, m.pq_books, m.pq_sub_dim), 6).alias(
-            "adc_dist"
-        ),
-    )
-    top = scored.orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-    if m.spill > 1:
-        top = (
-            top.limit(10 * m.spill)
-            .dropDuplicates(["vec_id"])
-            .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        )
-    return top.limit(10)
+    query, scan = _pruned_probe(spark, sf_dir, _serving_layout(spark, sf_dir), m)
+    scored = scan.select("vec_id", _adc_dist(m, query))
+    return _distinct_top(scored, F.asc("adc_dist"), 10, m.spill)
 
 
 # -- exact re-rank stage ------------------------------------------------------
@@ -1450,84 +1390,17 @@ def sim_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — constant per query, independent of corpus size.
 
 
-def _adc_short_ctes(
-    base_ctes: list[str], src_alias_filter: str = ""
-) -> tuple[str, str]:
-    """Append per-subspace query slices + distance tables to ``base_ctes``
-    and return the joined ADC expression pieces (joins, total)."""
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        base_ctes.append(
-            f"q{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1}) AS qv FROM q)"
-        )
-        base_ctes.append(
-            f"""dt{s} AS (SELECT c.cell,
-                list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                    i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                FROM b{s} c, q{s} q)"""
-        )
-    joins = (
-        " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-        + " "
-        + " ".join(f"JOIN dt{s} ON a{s}.cell = dt{s}.cell" for s in range(_PQ_SUBS))
-        + src_alias_filter
-    )
-    total = " + ".join(f"dt{s}.d" for s in range(_PQ_SUBS))
-    return joins, total
-
-
 def _pq_rerank_fixed_oracle() -> str:
-    ctes = _pq_fixed_base_ctes()
-    ctes.append("q AS (SELECT v AS qv FROM e WHERE vec_id = 0)")
-    joins, total = _adc_short_ctes(ctes)
-    ctes.append(
-        f"""short AS (SELECT a0.vec_id, round({total}, 6) AS adc_dist
-            FROM s0_af a0 {joins}
-            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + """
-    SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim
-    FROM e JOIN short USING (vec_id), q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
+    return _ann_oracle(
+        [_E_CTE] + _pq_assign_ctes() + _ann_ctes(0, 10, nprobe=None),
+        "SELECT vec_id, cosine_sim FROM top_0",
     )
 
 
 def _ivfpq_rerank_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})""",
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    joins, total = _adc_short_ctes(
-        ctes, " JOIN af USING (vec_id) JOIN probe ON af.cell = probe.cell"
-    )
-    ctes.append(
-        f"""short AS (SELECT a0.vec_id, round({total}, 6) AS adc_dist
-            FROM s0_af a0 {joins}
-            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + """
-    SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim
-    FROM e JOIN short USING (vec_id), q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
+    return _ann_oracle(
+        _coarse_ctes() + _pq_assign_ctes() + _ann_ctes(0, 10),
+        "SELECT vec_id, cosine_sim FROM top_0",
     )
 
 
@@ -1571,94 +1444,42 @@ def sim_pq_topk_rerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pruned_rerank_topk(
-    spark: SparkSession, sf_dir: str, limit: int
-) -> DataFrame:
-    """The partition-pruned serving probe, parameterized only by the
-    final depth: pruned codes-only scan of nprobe/k of storage -> ADC
-    shortlist of _RERANK ids -> raw vectors fetched for the shortlist
-    only -> exact-cosine top-``limit`` as (vec_id, cosine_sim). ONE
-    implementation serves the gate query (limit 10) and the hybrid-RRF
-    dense arm (limit _CAND), so a probe retune cannot desynchronize
-    them."""
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        probe_cells_py,
-    )
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        pq_adc_score,
-    )
-
-    return _pruned_rerank_topk_at(
-        spark, sf_dir, _serving_layout(spark, sf_dir), limit
-    )
-
-
 def _pruned_rerank_topk_at(
-    spark: SparkSession, sf_dir: str, layout: str, limit: int
+    spark: SparkSession,
+    sf_dir: str,
+    layout: str,
+    limit: int,
+    m=None,
+    label: int | None = None,
 ) -> DataFrame:
-    """The same probe over an EXPLICIT layout path — shared by the
-    one-shot layout, the epoch-appended incremental index, and the
-    stream-ingested index (their layouts differ only in how rows
-    arrived; the serving plan is identical)."""
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        probe_cells_py,
-    )
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        pq_adc_score,
-    )
-
-    m = _serving_model(sf_dir)
-    query = _query_vec(spark, sf_dir)
-    probes = probe_cells_py(query, m.centroids, m.nprobe)
-    codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
-    surv_codes = read_cell_layout(spark, layout, len(m.pq_books)).filter(F.col("cell").isin(probes))
-    short = (
-        surv_codes.select(
-            "vec_id",
-            F.round(pq_adc_score(codes, query, m.pq_books, m.pq_sub_dim), 6).alias(
-                "adc_dist"
-            ),
-        )
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(_RERANK * m.spill)
-    )
+    """The single-query serving probe over ``layout``: pruned codes-only
+    scan -> ADC shortlist of _RERANK distinct ids -> raw vectors fetched
+    for the shortlist only (a second pruned scan joined against the
+    broadcast shortlist; at serving, _RERANK keyed fetches) -> exact-cosine
+    top-``limit`` (vec_id, [label,] cosine_sim). ``m`` replaces the
+    corpus's serving model (the spill gate's), ``label`` filters both
+    scans. The one-shot, epoch-appended and stream-ingested layouts all
+    serve through it: they differ only in how their rows arrived."""
+    m = m or _serving_model(sf_dir)
+    query, scan = _pruned_probe(spark, sf_dir, layout, m, label)
+    scored = scan.select("vec_id", _adc_dist(m, query))
+    short = _distinct_top(scored, F.asc("adc_dist"), _RERANK, m.spill)
+    cols = ["vec_id"] + ([] if label is None else ["label"])
+    raw = scan.select(*cols, "embedding").join(F.broadcast(short.select("vec_id")), "vec_id")
     if m.spill > 1:
-        # spilled layout (repointed model): copies in two probed cells
-        # are adjacent in the ordered shortlist — dedup the tiny frame
-        short = short.dropDuplicates(["vec_id"]).orderBy(
-            F.asc("adc_dist"), F.asc("vec_id")
-        ).limit(_RERANK)
-    qcol = lit_double_array(query)
-    raw = (
-        read_cell_layout(spark, layout, len(m.pq_books))
-        .filter(F.col("cell").isin(probes))
-        .select("vec_id", "embedding")
-    )
-    if m.spill > 1:
+        # dedup after the broadcast join: it shuffles at most _RERANK rows
         raw = raw.dropDuplicates(["vec_id"])
-    rer = raw.join(F.broadcast(short.select("vec_id")), "vec_id")
-    return (
-        rer.select(
-            "vec_id",
-            F.round(
-                cosine(F.transform("embedding", lambda x: x.cast("double")), qcol),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(limit)
-    )
+    return _distinct_top(raw.select(*cols, _cosine_sim(query)), F.desc("cosine_sim"), limit, 1)
 
 
 @register("sim_topk_ivfpq_rerank_pruned", _ivfpq_rerank_oracle())
 def sim_topk_ivfpq_rerank_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE serving probe at 100 TB: partition-pruned codes-only
     scan of nprobe/k of storage -> ADC shortlist of _RERANK ids -> raw
-    vectors fetched for the shortlist only (a second pruned scan joined
-    against the broadcast shortlist; at serving, _RERANK keyed fetches)
-    -> exact cosine top-10. Recorded composed recall 0.805
-    (ivf_pq_rerank at the shipped config; git history at 78bf83b)."""
-    return _pruned_rerank_topk(spark, sf_dir, 10)
+    vectors fetched for the shortlist only -> exact cosine top-10.
+    Recorded composed recall 0.805 (ivf_pq_rerank at the shipped config;
+    git history at 78bf83b)."""
+    return _pruned_rerank_topk_at(spark, sf_dir, _serving_layout(spark, sf_dir), 10)
 
 
 # -- spilled-assignment serving probe -----------------------------------------
@@ -1669,117 +1490,31 @@ def sim_topk_ivfpq_rerank_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rerank budget downstream. The shipped fix is ScaNN-style spilling
 # (multi-assignment): the layout stores each vector in its _SPILL nearest
 # cells, lifting the ceiling to 0.915 and the composed IVF-PQ+rerank probe
-# to 0.915 (rerank=100, r12 codebook) at the SAME probed fraction of
-# stored rows, for 2 x the per-vector code bytes. This gate query runs that exact plan at the
-# fixture's KMEANS_K=8 with _SPILL_NPROBE=2 — the certified nprobe/k =
-# 0.25 ratio — against a DuckDB oracle with the identical spilled
-# assignment, DISTINCT-survivor dedup, shortlist, and re-rank.
+# to 0.915 (rerank=100, shipped codebook) at the SAME probed fraction of
+# stored rows, for 2 x the per-vector code bytes. This gate query runs
+# that exact plan at the fixture's KMEANS_K=8 with _SPILL_NPROBE=2 — the
+# certified nprobe/k = 0.25 ratio — against a DuckDB oracle with the
+# identical spilled assignment, DISTINCT-survivor dedup, shortlist, and
+# re-rank.
 
 
 def _ivfpq_rerank_spill_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        # spilled assignment: each vector's _SPILL nearest cells
-        f"""af AS (SELECT vec_id, v, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY {_lloyd_sq(_EMB_DIM)} ASC, c.cell ASC) AS rn
-            FROM e, cb c) WHERE rn <= {_SPILL})""",
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_SPILL_NPROBE})""",
-        # a vector whose two cells are BOTH probed must score once, not twice
-        "surv AS (SELECT DISTINCT vec_id FROM af JOIN probe USING (cell))",
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    joins, total = _adc_short_ctes(ctes, " JOIN surv USING (vec_id)")
-    ctes.append(
-        f"""short AS (SELECT a0.vec_id, round({total}, 6) AS adc_dist
-            FROM s0_af a0 {joins}
-            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + """
-    SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim
-    FROM e JOIN short USING (vec_id), q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
+    return _ann_oracle(
+        _coarse_ctes(_SPILL) + _pq_assign_ctes() + _ann_ctes(0, 10, nprobe=_SPILL_NPROBE),
+        "SELECT vec_id, cosine_sim FROM top_0",
     )
 
 
 @register("sim_topk_ivfpq_rerank_spill", _ivfpq_rerank_spill_oracle())
 def sim_topk_ivfpq_rerank_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The spilled serving probe at the certified nprobe/k = 0.25 ratio:
-    partition-pruned codes-only scan of the SPILLED layout (each vector
-    stored in its _SPILL=2 nearest cells; probed fraction of stored rows
-    unchanged) -> ADC shortlist -> exact re-rank. Copies of a vector
-    whose cells are both probed carry identical (adc_dist, vec_id), so
-    the shortlist takes _RERANK x _SPILL rows ordered, dedups the tiny
-    frame, and keeps the top _RERANK distinct ids — at serving this is
-    in-memory arithmetic on a few hundred rows, never a corpus shuffle.
+    the rerank probe over the SPILLED layout (each vector stored in its
+    _SPILL=2 nearest cells; probed fraction of stored rows unchanged).
     Composed recall at the realistic k=64 coarse index: 0.85
     (ivf_pq_rerank, spill=2, nprobe=16, rerank=100 vs 0.71 unspilled;
     git history at 78bf83b)."""
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        probe_cells_py,
-    )
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        pq_adc_score,
-    )
-
-    m = _serving_model(sf_dir)
-    layout = _serving_layout_spill(spark, sf_dir)
-    query = _query_vec(spark, sf_dir)
-    # shipped model: the dedicated _SPILL_NPROBE keeps the certified
-    # nprobe/k = 0.25 ratio against the fixture k=8; a repointed model's
-    # own nprobe already encodes that ratio at its rule k
-    spill = m.spill if m.tag is not None else _SPILL
-    nprobe = m.nprobe if m.tag is not None else _SPILL_NPROBE
-    probes = probe_cells_py(query, m.centroids, nprobe)
-    codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
-    surv_codes = read_cell_layout(spark, layout, len(m.pq_books)).filter(F.col("cell").isin(probes))
-    scored = surv_codes.select(
-        "vec_id",
-        F.round(pq_adc_score(codes, query, m.pq_books, m.pq_sub_dim), 6).alias(
-            "adc_dist"
-        ),
-    )
-    # top _RERANK DISTINCT ids by (adc, vec_id): duplicates are adjacent
-    # (identical sort key), so _RERANK * spill ordered rows are enough
-    short = (
-        scored.orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(_RERANK * spill)
-        .dropDuplicates(["vec_id"])
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(_RERANK)
-    )
-    qcol = lit_double_array(query)
-    raw = (
-        read_cell_layout(spark, layout, len(m.pq_books))
-        .filter(F.col("cell").isin(probes))
-        .select("vec_id", "embedding")
-        .join(F.broadcast(short.select("vec_id")), "vec_id")
-        .dropDuplicates(["vec_id"])
-    )
-    return (
-        raw.select(
-            "vec_id",
-            F.round(
-                cosine(F.transform("embedding", lambda x: x.cast("double")), qcol),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(10)
+    return _pruned_rerank_topk_at(
+        spark, sf_dir, _serving_layout_spill(spark, sf_dir), 10, _spill_model(sf_dir)
     )
 
 
@@ -1796,123 +1531,23 @@ def sim_topk_ivfpq_rerank_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rrf_ann_oracle() -> str:
-    from streaming_data_pipeline_capstone_spark.queries.retrieval import (
-        _CAND,
-        _MICRO,
-        _QUERY_TERMS,
-        _RRF_K,
-        _TOPK,
-        _bm25_ctes,
-        _rrf_fuse,
-    )
+    from streaming_data_pipeline_capstone_spark.queries.retrieval import _CAND, _rrf_oracle
 
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})""",
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    joins, total = _adc_short_ctes(
-        ctes, " JOIN af USING (vec_id) JOIN probe ON af.cell = probe.cell"
-    )
-    ctes.append(
-        f"""short AS (SELECT a0.vec_id, round({total}, 6) AS adc_dist
-            FROM s0_af a0 {joins}
-            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-    )
-    ctes.append(
-        """rer AS (SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS sim
-            FROM e JOIN short USING (vec_id), q)"""
-    )
-    ctes.append(
-        f"""dense AS (SELECT id, r_dense FROM (
-            SELECT vec_id AS id,
-                   row_number() OVER (ORDER BY sim DESC, vec_id ASC) AS r_dense
-            FROM rer) WHERE r_dense <= {_CAND})"""
-    )
-    ctes.append(_bm25_ctes(_QUERY_TERMS))
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    sall AS (
-      SELECT doc_id AS id,
-             row_number() OVER (ORDER BY score_micro DESC, doc_id ASC) AS r_sparse
-      FROM bm
-    ),
-    sparse AS (SELECT id, r_sparse FROM sall WHERE r_sparse <= {_CAND})
-    SELECT id, CAST(r_dense AS BIGINT) AS r_dense,
-           CAST(r_sparse AS BIGINT) AS r_sparse,
-           CAST(coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_dense)) AS BIGINT), 0)
-              + coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_sparse)) AS BIGINT), 0)
-             AS BIGINT) AS rrf_micro
-    FROM dense FULL OUTER JOIN sparse USING (id)
-    ORDER BY rrf_micro DESC, id ASC
-    LIMIT {_TOPK}
-    """
-    )
+    ctes = _coarse_ctes() + _pq_assign_ctes() + _ann_ctes(0, _CAND)
+    ctes.append("dense AS (SELECT vec_id AS id, rank AS r_dense FROM top_0)")
+    return _rrf_oracle(",\n".join(ctes))
 
 
 @register("retrieval_hybrid_rrf_ann", _rrf_ann_oracle())
 def retrieval_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 by RRF of the partition-pruned IVF-PQ+rerank dense top-50
     and BM25 top-50 — retrieval_hybrid_rrf with the scale-path dense arm."""
-    from pyspark.sql import Window
+    from streaming_data_pipeline_capstone_spark.queries.retrieval import _CAND, _rrf_top
 
-    from streaming_data_pipeline_capstone_spark.queries.retrieval import (
-        _CAND,
-        _MICRO,
-        _QUERY_TERMS,
-        _RRF_K,
-        _TOPK,
-        _bm25_scores,
-        _rrf_fuse,
-    )
-
-    dense_cand = _pruned_rerank_topk(spark, sf_dir, _CAND).withColumnRenamed(
-        "cosine_sim", "sim"
-    )
-    w_d = Window.partitionBy(F.lit(1)).orderBy(F.desc("sim"), F.asc("vec_id"))
-    dense = dense_cand.select(
-        F.col("vec_id").alias("id"),
-        F.row_number().over(w_d).cast("bigint").alias("r_dense"),
-    )
-    sparse_cand = (
-        _bm25_scores(spark, sf_dir, _QUERY_TERMS)
-        .orderBy(F.desc("score_micro"), F.asc("doc_id"))
-        .limit(_CAND)
-    )
-    w_s = Window.partitionBy(F.lit(1)).orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    sparse = sparse_cand.select(
-        F.col("doc_id").alias("id"),
-        F.row_number().over(w_s).cast("bigint").alias("r_sparse"),
-    )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
-    return (
-        _rrf_fuse(dense, sparse, ["id"])
-        .select(
-            "id",
-            "r_dense",
-            "r_sparse",
-            (
-                F.coalesce(rr(F.col("r_dense")), F.lit(0))
-                + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-            ).alias("rrf_micro"),
-        )
-        .orderBy(F.desc("rrf_micro"), F.asc("id"))
-        .limit(_TOPK)
-    )
+    dense_cand = _pruned_rerank_topk_at(
+        spark, sf_dir, _serving_layout(spark, sf_dir), _CAND
+    ).withColumnRenamed("cosine_sim", "sim")
+    return _rrf_top(spark, sf_dir, dense_cand)
 
 
 # -- batched multi-query ANN serving ------------------------------------------
@@ -1947,69 +1582,20 @@ def _query_vecs_multi(
     return {int(r.vec_id): [float(x) for x in r.v] for r in rows}
 
 
-def _ivfpq_multi_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    tops = []
+def _ivfpq_multi_oracle(labels: dict[int, int] | None = None) -> str:
+    """Per query of the batch, the single-query probe's CTEs (label
+    filtered by ``labels[qid]`` when given), unioned."""
+    ctes = _coarse_ctes() + _pq_assign_ctes()
     for qid in _MULTI_QIDS:
-        ctes.append(
-            f"q_{qid} AS (SELECT v AS qv FROM e WHERE vec_id = {qid})"
-        )
-        ctes.append(
-            f"""probe_{qid} AS (SELECT cell FROM cb, q_{qid} q
-                ORDER BY list_cosine_similarity(cv, q.qv) DESC, cell ASC
-                LIMIT {_NPROBE})"""
-        )
-        for s in range(_PQ_SUBS):
-            lo = s * _PQ_SUB_DIM + 1
-            ctes.append(
-                f"qs{qid}_{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1})"
-                f" AS qv FROM q_{qid})"
-            )
-            ctes.append(
-                f"""dt{qid}_{s} AS (SELECT c.cell,
-                    list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                        i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                    FROM b{s} c, qs{qid}_{s} q)"""
-            )
-        joins = (
-            " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-            + " "
-            + " ".join(
-                f"JOIN dt{qid}_{s} ON a{s}.cell = dt{qid}_{s}.cell"
-                for s in range(_PQ_SUBS)
-            )
-            + f" JOIN af USING (vec_id) JOIN probe_{qid} ON af.cell = probe_{qid}.cell"
-        )
-        total = " + ".join(f"dt{qid}_{s}.d" for s in range(_PQ_SUBS))
-        ctes.append(
-            f"""short_{qid} AS MATERIALIZED (
-                SELECT a0.vec_id, round({total}, 6) AS adc_dist
-                FROM s0_af a0 {joins}
-                ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-        )
-        ctes.append(
-            f"""top_{qid} AS (SELECT query_id, vec_id, cosine_sim, rank FROM (
-                SELECT {qid} AS query_id, e.vec_id,
-                       round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim,
-                       CAST(row_number() OVER (
-                         ORDER BY round(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                  e.vec_id ASC) AS BIGINT) AS rank
-                FROM e JOIN short_{qid} USING (vec_id), q_{qid} q)
-                WHERE rank <= 10)"""
-        )
-        tops.append(f"SELECT * FROM top_{qid}")
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(tops)
+        ctes += _ann_ctes(qid, 10, labels[qid] if labels else None)
+    lbl = " label," if labels else ""
+    return _ann_oracle(
+        ctes,
+        "\nUNION ALL ".join(
+            f"SELECT {qid} AS query_id, vec_id,{lbl} cosine_sim, rank FROM top_{qid}"
+            for qid in _MULTI_QIDS
+        ),
+    )
 
 
 def multi_topk_ivfpq(
@@ -2042,6 +1628,7 @@ def multi_topk_ivfpq(
     from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
         probe_cells_batch,
     )
+    from streaming_data_pipeline_capstone_spark.queries.retrieval import _rank_per_query
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
         pq_adc_score_tables_col,
         pq_adc_tables,
@@ -2051,7 +1638,7 @@ def multi_topk_ivfpq(
     if layout is None:
         layout = _serving_layout(spark, sf_dir)
     qvecs = _query_vecs_multi(spark, sf_dir, qids)
-    # vectorized batch ranking (r14): bit-identical to per-query
+    # vectorized batch ranking: bit-identical to per-query
     # probe_cells_py (pinned in tests), numpy-speed at serving Q x large k
     probes = dict(
         zip(
@@ -2138,34 +1725,19 @@ def multi_topk_ivfpq(
     if m.spill > 1:
         # only a spilled layout stores a vector in several cells; a
         # spill-1 layout is vec_id-unique by construction, so the dedup
-        # exchange would shuffle the raw fetch for nothing (r15: one
-        # Exchange removed from every spill-1 batched probe)
+        # exchange would shuffle the raw fetch for nothing
         raw = raw.dropDuplicates(["vec_id"])
     rer = (
         raw.join(F.broadcast(short), "vec_id")
         .join(F.broadcast(qmeta.select("query_id", "qv")), "query_id")
         .select(
             "query_id",
-            "vec_id",
-            *(
-                [F.col("label").cast("int").alias("label")]
-                if filtering
-                else []
-            ),
+            *raw_cols,
             F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cosine_sim"),
         )
     )
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("vec_id")
-    )
-    out_cols = ["query_id", "vec_id"] + (["label"] if filtering else []) + [
-        "cosine_sim",
-        "rank",
-    ]
-    return (
-        rer.withColumn("rank", F.row_number().over(w_top).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
+    return _rank_per_query(rer, "cosine_sim", "vec_id", k).select(
+        "query_id", *raw_cols, "cosine_sim", "rank"
     )
 
 
@@ -2177,7 +1749,7 @@ def sim_topk_ivfpq_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS)
 
 
-# -- predicate-filtered ANN serving (r13) --------------------------------------
+# -- predicate-filtered ANN serving --------------------------------------------
 # The other axis a vector store must serve: "nearest neighbors of q AMONG
 # rows satisfying a metadata predicate" (per-tenant search, lang-scoped
 # retrieval, license-filtered training data). The scale-correct plan
@@ -2194,41 +1766,9 @@ _FILTER_LABEL = 3
 
 
 def _ivfpq_filtered_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"""probe AS (SELECT cell FROM cb, q
-            ORDER BY list_cosine_similarity(cv, qv) DESC, cell ASC LIMIT {_NPROBE})""",
-        f"flt AS (SELECT vec_id FROM e WHERE label = {_FILTER_LABEL})",
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    joins, total = _adc_short_ctes(
-        ctes,
-        " JOIN af USING (vec_id) JOIN probe ON af.cell = probe.cell"
-        " JOIN flt USING (vec_id)",
-    )
-    ctes.append(
-        f"""short AS (SELECT a0.vec_id, round({total}, 6) AS adc_dist
-            FROM s0_af a0 {joins}
-            ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-    SELECT e.vec_id, CAST(e.label AS INT) AS label,
-           round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim
-    FROM e JOIN short USING (vec_id), q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
+    return _ann_oracle(
+        _coarse_ctes() + _pq_assign_ctes() + _ann_ctes(0, 10, _FILTER_LABEL),
+        "SELECT vec_id, label, cosine_sim FROM top_0",
     )
 
 
@@ -2238,64 +1778,12 @@ def sim_topk_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, through the partition-pruned IVF-PQ + rerank plan with the
     label predicate evaluated inside the pruned codes scan —
     (vec_id, label, cosine_sim).""".format(lbl=_FILTER_LABEL)
-    from streaming_data_pipeline_capstone_spark.operators.ann_layout import (
-        probe_cells_py,
-    )
-    from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        pq_adc_score,
-    )
-
-    m = _serving_model(sf_dir)
-    layout = _serving_layout(spark, sf_dir)
-    query = _query_vec(spark, sf_dir)
-    probes = probe_cells_py(query, m.centroids, m.nprobe)
-    codes = [F.col(f"c{s}") for s in range(len(m.pq_books))]
-    surv = (
-        read_cell_layout(spark, layout, len(m.pq_books))
-        .filter(F.col("cell").isin(probes))
-        .filter(F.col("label") == _FILTER_LABEL)
-    )
-    short = (
-        surv.select(
-            "vec_id",
-            F.round(pq_adc_score(codes, query, m.pq_books, m.pq_sub_dim), 6).alias(
-                "adc_dist"
-            ),
-        )
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(_RERANK * m.spill)
-    )
-    if m.spill > 1:
-        short = (
-            short.dropDuplicates(["vec_id"])
-            .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-            .limit(_RERANK)
-        )
-    qcol = lit_double_array(query)
-    raw = (
-        read_cell_layout(spark, layout, len(m.pq_books))
-        .filter(F.col("cell").isin(probes))
-        .filter(F.col("label") == _FILTER_LABEL)
-        .select("vec_id", "label", "embedding")
-        .join(F.broadcast(short.select("vec_id")), "vec_id")
-    )
-    if m.spill > 1:
-        raw = raw.dropDuplicates(["vec_id"])
-    return (
-        raw.select(
-            "vec_id",
-            F.col("label").cast("int").alias("label"),
-            F.round(
-                cosine(F.transform("embedding", lambda x: x.cast("double")), qcol),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(10)
+    return _pruned_rerank_topk_at(
+        spark, sf_dir, _serving_layout(spark, sf_dir), 10, label=_FILTER_LABEL
     )
 
 
-# -- filtered x batched ANN serving (r14) --------------------------------------
+# -- filtered x batched ANN serving --------------------------------------------
 # Real serving batches carry PER-QUERY predicates
 # (tenant A's query must only see tenant A's vectors). The composition
 # multiplies correctly: ONE pruned codes scan over the union probe cells,
@@ -2307,79 +1795,10 @@ def sim_topk_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_topk_ivfpq_filtered in tests.
 
 _FILTER_LABELS_MULTI = {0: _FILTER_LABEL, 1: 7, 2: 5}
+_FILTER_LANGS_MULTI = {0: "de", 1: "en", 2: "es"}  # the hybrids' sparse-arm filter
 
 
-def _ivfpq_multi_filtered_oracle() -> str:
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    tops = []
-    for qid, lbl in sorted(_FILTER_LABELS_MULTI.items()):
-        ctes.append(
-            f"q_{qid} AS (SELECT v AS qv FROM e WHERE vec_id = {qid})"
-        )
-        ctes.append(
-            f"""probe_{qid} AS (SELECT cell FROM cb, q_{qid} q
-                ORDER BY list_cosine_similarity(cv, q.qv) DESC, cell ASC
-                LIMIT {_NPROBE})"""
-        )
-        ctes.append(
-            f"flt_{qid} AS (SELECT vec_id FROM e WHERE label = {lbl})"
-        )
-        for s in range(_PQ_SUBS):
-            lo = s * _PQ_SUB_DIM + 1
-            ctes.append(
-                f"qs{qid}_{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1})"
-                f" AS qv FROM q_{qid})"
-            )
-            ctes.append(
-                f"""dt{qid}_{s} AS (SELECT c.cell,
-                    list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                        i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                    FROM b{s} c, qs{qid}_{s} q)"""
-            )
-        joins = (
-            " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-            + " "
-            + " ".join(
-                f"JOIN dt{qid}_{s} ON a{s}.cell = dt{qid}_{s}.cell"
-                for s in range(_PQ_SUBS)
-            )
-            + f" JOIN af USING (vec_id) JOIN probe_{qid} ON af.cell = probe_{qid}.cell"
-            + f" JOIN flt_{qid} USING (vec_id)"
-        )
-        total = " + ".join(f"dt{qid}_{s}.d" for s in range(_PQ_SUBS))
-        ctes.append(
-            f"""short_{qid} AS MATERIALIZED (
-                SELECT a0.vec_id, round({total}, 6) AS adc_dist
-                FROM s0_af a0 {joins}
-                ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-        )
-        ctes.append(
-            f"""top_{qid} AS (SELECT query_id, vec_id, label, cosine_sim, rank FROM (
-                SELECT {qid} AS query_id, e.vec_id,
-                       CAST(e.label AS INT) AS label,
-                       round(list_cosine_similarity(e.v, q.qv), 6) AS cosine_sim,
-                       CAST(row_number() OVER (
-                         ORDER BY round(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                  e.vec_id ASC) AS BIGINT) AS rank
-                FROM e JOIN short_{qid} USING (vec_id), q_{qid} q)
-                WHERE rank <= 10)"""
-        )
-        tops.append(f"SELECT * FROM top_{qid}")
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(tops)
-
-
-@register("sim_topk_ivfpq_multi_filtered", _ivfpq_multi_filtered_oracle())
+@register("sim_topk_ivfpq_multi_filtered", _ivfpq_multi_oracle(_FILTER_LABELS_MULTI))
 def sim_topk_ivfpq_multi_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered batched ANN serving: exact-cosine top-10 per query AMONG
     each query's own label slice, for the standing 3-query batch with
@@ -2391,7 +1810,7 @@ def sim_topk_ivfpq_multi_filtered(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# -- batched hybrid retrieval: multi-query RRF (r13) ---------------------------
+# -- batched hybrid retrieval: multi-query RRF ---------------------------------
 # The serving-tier composition: the batched ANN pass (ONE pruned codes
 # scan for all queries' dense arms) fused per-query with the batched
 # BM25 pass (ONE prefiltered corpus exchange for all queries' sparse
@@ -2402,92 +1821,28 @@ def sim_topk_ivfpq_multi_filtered(spark: SparkSession, sf_dir: str) -> DataFrame
 # The qid=0 slice is pinned to retrieval_hybrid_rrf_ann in tests.
 
 
-def _rrf_multi_oracle() -> str:
+def _rrf_multi_oracle(filtered: bool = False) -> str:
+    """Per query: the single-query probe's top-_CAND as the dense list
+    and the batched BM25 top-_CAND as the sparse list, RRF-fused. With
+    ``filtered``, each query's dense arm keeps only its
+    _FILTER_LABELS_MULTI label and its sparse arm only its
+    _FILTER_LANGS_MULTI language."""
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
-        _B,
         _CAND,
-        _K1,
         _MICRO,
         _MULTI_QUERIES,
         _QUERY_TERMS,
         _RRF_K,
         _TOPK,
-        _bm25_ctes,
-        _multi_terms,
-        _rrf_fuse,
+        _multi_bm25_ctes,
     )
 
     assert _MULTI_QUERIES[0] == _QUERY_TERMS  # qid=0 is the standing query
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
+    ctes = _coarse_ctes() + _pq_assign_ctes()
     for qid in _MULTI_QIDS:
-        ctes.append(f"qv_{qid} AS (SELECT v AS qv FROM e WHERE vec_id = {qid})")
-        ctes.append(
-            f"""probe_{qid} AS (SELECT cell FROM cb, qv_{qid} q
-                ORDER BY list_cosine_similarity(cv, q.qv) DESC, cell ASC
-                LIMIT {_NPROBE})"""
-        )
-        for s in range(_PQ_SUBS):
-            lo = s * _PQ_SUB_DIM + 1
-            ctes.append(
-                f"qs{qid}_{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1})"
-                f" AS qv FROM qv_{qid})"
-            )
-            ctes.append(
-                f"""dt{qid}_{s} AS (SELECT c.cell,
-                    list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                        i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                    FROM b{s} c, qs{qid}_{s} q)"""
-            )
-        joins = (
-            " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-            + " "
-            + " ".join(
-                f"JOIN dt{qid}_{s} ON a{s}.cell = dt{qid}_{s}.cell"
-                for s in range(_PQ_SUBS)
-            )
-            + f" JOIN af USING (vec_id) JOIN probe_{qid} ON af.cell = probe_{qid}.cell"
-        )
-        total = " + ".join(f"dt{qid}_{s}.d" for s in range(_PQ_SUBS))
-        ctes.append(
-            f"""short_{qid} AS MATERIALIZED (
-                SELECT a0.vec_id, round({total}, 6) AS adc_dist
-                FROM s0_af a0 {joins}
-                ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-        )
-        ctes.append(
-            f"""dense_{qid} AS (SELECT id, r_dense FROM (
-                SELECT e.vec_id AS id,
-                       row_number() OVER (
-                         ORDER BY round(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                  e.vec_id ASC) AS r_dense
-                FROM e JOIN short_{qid} USING (vec_id), qv_{qid} q)
-                WHERE r_dense <= {_CAND})"""
-        )
-    ctes.append(_bm25_ctes(_multi_terms()))
-    qrows = ", ".join(
-        f"({qid}, '{t}')" for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts
-    )
-    ctes.append(f"qt(query_id, term) AS (VALUES {qrows})")
-    ctes.append(
-        f"""qbm AS (
-        SELECT qt.query_id, tf.doc_id, CAST(SUM(
-          CAST(round(idf.idf * (tf.tf * {_K1 + 1.0})
-               / (tf.tf + {_K1} * (1.0 - {_B} + {_B} * CAST(lens.dl AS DOUBLE) / idf.avgdl))
-               * {_MICRO}.0, 0) AS BIGINT)) AS BIGINT) AS score_micro
-        FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN lens USING (doc_id)
-        GROUP BY qt.query_id, tf.doc_id)"""
-    )
+        ctes += _ann_ctes(qid, _CAND, _FILTER_LABELS_MULTI[qid] if filtered else None)
+        ctes.append(f"dense_{qid} AS (SELECT vec_id AS id, rank AS r_dense FROM top_{qid})")
+    ctes.append(_multi_bm25_ctes(_FILTER_LANGS_MULTI if filtered else None))
     fused = []
     for qid in _MULTI_QIDS:
         ctes.append(
@@ -2514,7 +1869,7 @@ def _rrf_multi_oracle() -> str:
                     ORDER BY rrf_micro DESC, id ASC) AS BIGINT) AS rank
                 FROM fused_{qid}) WHERE rank <= {_TOPK}"""
         )
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(fused)
+    return _ann_oracle(ctes, "\nUNION ALL ".join(fused))
 
 
 @register("retrieval_hybrid_rrf_multi", _rrf_multi_oracle())
@@ -2522,36 +1877,24 @@ def retrieval_hybrid_rrf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched hybrid retrieval: per-query top-20 by RRF of the batched
     pruned-ANN dense top-50 and the batched BM25 sparse top-50 —
     (query_id, id, r_dense, r_sparse, rrf_micro, rank) for the standing
-    3-query batch, through ONE dense pass + ONE sparse pass."""
+    3-query batch, through ONE dense pass + ONE sparse pass. The sparse
+    arm reads only the union terms' postings buckets; the corpus text is
+    never scanned at serving time."""
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
         _CAND,
-        _MULTI_QUERIES,
         _bm25_base,
-        _c_micro,
+        _multi_bm25_scores,
+        _multi_query_terms,
         _multi_terms,
         _rrf_fuse_multi,
     )
 
-    dense = multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS, k=_CAND).select(
-        "query_id",
-        F.col("vec_id").alias("id"),
-        F.col("rank").alias("r_dense"),
+    return _rrf_fuse_multi(
+        multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS, k=_CAND),
+        _multi_bm25_scores(
+            _bm25_base(spark, sf_dir, _multi_terms()), _multi_query_terms(spark)
+        ),
     )
-    qt = spark.createDataFrame(
-        [(qid, t) for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts],
-        "query_id int, term string",
-    )
-    # sparse arm through the term-bucketed postings layout (r14): the
-    # batch reads only the union terms' buckets — the corpus text is
-    # never scanned at serving time
-    scores = (
-        _bm25_base(spark, sf_dir, _multi_terms())
-        .join(F.broadcast(qt), "term")
-        .select("query_id", "doc_id", _c_micro())
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c_micro").alias("score_micro"))
-    )
-    return _rrf_fuse_multi(dense, scores)
 
 
 @register("retrieval_hybrid_rrf_multi_streamed", _rrf_multi_oracle())
@@ -2571,8 +1914,8 @@ def retrieval_hybrid_rrf_multi_streamed(
     identical too)."""
     from streaming_data_pipeline_capstone_spark.queries.retrieval import (
         _CAND,
-        _MULTI_QUERIES,
-        _c_micro,
+        _multi_bm25_scores,
+        _multi_query_terms,
         _multi_terms,
         _rrf_fuse_multi,
         _streamed_text_index,
@@ -2582,33 +1925,15 @@ def retrieval_hybrid_rrf_multi_streamed(
     )
 
     dense = multi_topk_ivfpq(
-        spark,
-        sf_dir,
-        _MULTI_QIDS,
-        k=_CAND,
-        layout=_streamed_index(spark, sf_dir),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("id"),
-        F.col("rank").alias("r_dense"),
-    )
-    qt = spark.createDataFrame(
-        [(qid, t) for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts],
-        "query_id int, term string",
+        spark, sf_dir, _MULTI_QIDS, k=_CAND, layout=_streamed_index(spark, sf_dir)
     )
     base = bm25_base_from_stream_index(
         spark, _streamed_text_index(spark, sf_dir), _multi_terms()
     )
-    scores = (
-        base.join(F.broadcast(qt), "term")
-        .select("query_id", "doc_id", _c_micro())
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c_micro").alias("score_micro"))
-    )
-    return _rrf_fuse_multi(dense, scores)
+    return _rrf_fuse_multi(dense, _multi_bm25_scores(base, _multi_query_terms(spark)))
 
 
-# -- incremental ANN index maintenance (r13) -----------------------------------
+# -- incremental ANN index maintenance -----------------------------------------
 # A serving index must absorb NEW vectors without a rebuild. The layout
 # gains an epoch sublevel under cell (cell=<c>/epoch=<e>), appends run
 # Θ(new vectors) through the idempotent dynamic-overwrite recipe the
@@ -2651,12 +1976,8 @@ def _incr_layout(spark: SparkSession, sf_dir: str) -> str:
         emb = read_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) != 0)
         delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
-        append_cell_epoch(
-            spark, base, path, m.centroids, m.pq_books, m.pq_sub_dim, 0
-        )
-        append_cell_epoch(
-            spark, delta, path, m.centroids, m.pq_books, m.pq_sub_dim, 1
-        )
+        append_cell_epoch(base, path, m.centroids, m.pq_books, m.pq_sub_dim, 0)
+        append_cell_epoch(delta, path, m.centroids, m.pq_books, m.pq_sub_dim, 1)
 
     cached_build(path, "_INCR_META.json", _ann_cache_key(sf_dir, m), build)
     return path
@@ -2673,7 +1994,7 @@ def sim_topk_ivfpq_rerank_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- streaming ANN index ingestion (r13) ---------------------------------------
+# -- streaming ANN index ingestion ---------------------------------------------
 # The TRUE streaming form of index freshness: vectors arrive on a
 # stream, each micro-batch lands as one epoch under the cell layout
 # (streaming/ann_index_stream.py), and a vector is searchable the
@@ -2735,7 +2056,7 @@ def stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- filtered batched hybrid retrieval (r14) ------------------------------------
+# -- filtered batched hybrid retrieval ------------------------------------------
 # The full composition of the serving axes: a query BATCH where each
 # query carries a predicate on EACH arm's metadata — the dense arm
 # filtered by the vector-store label (per-tenant embeddings), the sparse
@@ -2745,133 +2066,8 @@ def stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast frames the batch axes already ship, and fusion still sees
 # only ranks. Zero new passes vs the unfiltered batched hybrid.
 
-_FILTER_LANGS_MULTI = {0: "de", 1: "en", 2: "es"}
 
-
-def _rrf_multi_filtered_oracle() -> str:
-    from streaming_data_pipeline_capstone_spark.queries.retrieval import (
-        _B,
-        _CAND,
-        _K1,
-        _MICRO,
-        _MULTI_QUERIES,
-        _RRF_K,
-        _TOPK,
-        _bm25_ctes,
-        _multi_terms,
-        _rrf_fuse,
-    )
-
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)",
-        _values_cents_cte("cb", KMEANS_CENTROIDS),
-        _lloyd_assign_cte("af", "e", "cb", _EMB_DIM),
-    ]
-    for s in range(_PQ_SUBS):
-        lo = s * _PQ_SUB_DIM + 1
-        ctes.append(
-            f"e{s} AS (SELECT vec_id, list_slice(v, {lo}, {lo + _PQ_SUB_DIM - 1}) AS v FROM e)"
-        )
-        ctes.append(_values_cents_cte(f"b{s}", PQ_BOOKS[s]))
-        ctes.append(_lloyd_assign_cte(f"s{s}_af", f"e{s}", f"b{s}", _PQ_SUB_DIM))
-    for qid in _MULTI_QIDS:
-        lbl = _FILTER_LABELS_MULTI[qid]
-        ctes.append(f"q_{qid} AS (SELECT v AS qv FROM e WHERE vec_id = {qid})")
-        ctes.append(
-            f"""probe_{qid} AS (SELECT cell FROM cb, q_{qid} q
-                ORDER BY list_cosine_similarity(cv, q.qv) DESC, cell ASC
-                LIMIT {_NPROBE})"""
-        )
-        ctes.append(f"flt_{qid} AS (SELECT vec_id FROM e WHERE label = {lbl})")
-        for s in range(_PQ_SUBS):
-            lo = s * _PQ_SUB_DIM + 1
-            ctes.append(
-                f"qs{qid}_{s} AS (SELECT list_slice(qv, {lo}, {lo + _PQ_SUB_DIM - 1})"
-                f" AS qv FROM q_{qid})"
-            )
-            ctes.append(
-                f"""dt{qid}_{s} AS (SELECT c.cell,
-                    list_sum(list_transform(range(1, {_PQ_SUB_DIM}+1),
-                        i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS d
-                    FROM b{s} c, qs{qid}_{s} q)"""
-            )
-        joins = (
-            " ".join(f"JOIN s{s}_af a{s} USING (vec_id)" for s in range(1, _PQ_SUBS))
-            + " "
-            + " ".join(
-                f"JOIN dt{qid}_{s} ON a{s}.cell = dt{qid}_{s}.cell"
-                for s in range(_PQ_SUBS)
-            )
-            + f" JOIN af USING (vec_id) JOIN probe_{qid} ON af.cell = probe_{qid}.cell"
-            + f" JOIN flt_{qid} USING (vec_id)"
-        )
-        total = " + ".join(f"dt{qid}_{s}.d" for s in range(_PQ_SUBS))
-        ctes.append(
-            f"""short_{qid} AS MATERIALIZED (
-                SELECT a0.vec_id, round({total}, 6) AS adc_dist
-                FROM s0_af a0 {joins}
-                ORDER BY adc_dist ASC, vec_id ASC LIMIT {_RERANK})"""
-        )
-        ctes.append(
-            f"""dense_{qid} AS (SELECT id, r_dense FROM (
-                SELECT e.vec_id AS id,
-                       row_number() OVER (
-                         ORDER BY round(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                  e.vec_id ASC) AS r_dense
-                FROM e JOIN short_{qid} USING (vec_id), q_{qid} q)
-                WHERE r_dense <= {_CAND})"""
-        )
-    ctes.append(_bm25_ctes(_multi_terms()))
-    qrows = ", ".join(
-        f"({qid}, '{t}')" for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts
-    )
-    lrows = ", ".join(
-        f"({qid}, '{lang}')" for qid, lang in sorted(_FILTER_LANGS_MULTI.items())
-    )
-    ctes.append(f"qt(query_id, term) AS (VALUES {qrows})")
-    ctes.append(f"qlv(query_id, qlang) AS (VALUES {lrows})")
-    ctes.append("dlang AS (SELECT doc_id, lang FROM documents)")
-    ctes.append(
-        f"""qbm AS (
-        SELECT qt.query_id, tf.doc_id, CAST(SUM(
-          CAST(round(idf.idf * (tf.tf * {_K1 + 1.0})
-               / (tf.tf + {_K1} * (1.0 - {_B} + {_B} * CAST(lens.dl AS DOUBLE) / idf.avgdl))
-               * {_MICRO}.0, 0) AS BIGINT)) AS BIGINT) AS score_micro
-        FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN lens USING (doc_id)
-             JOIN dlang USING (doc_id)
-             JOIN qlv ON qlv.query_id = qt.query_id AND dlang.lang = qlv.qlang
-        GROUP BY qt.query_id, tf.doc_id)"""
-    )
-    fused = []
-    for qid in _MULTI_QIDS:
-        ctes.append(
-            f"""sparse_{qid} AS (SELECT id, r_sparse FROM (
-                SELECT doc_id AS id,
-                       row_number() OVER (
-                         ORDER BY score_micro DESC, doc_id ASC) AS r_sparse
-                FROM qbm WHERE query_id = {qid})
-                WHERE r_sparse <= {_CAND})"""
-        )
-        ctes.append(
-            f"""fused_{qid} AS (
-                SELECT {qid} AS query_id, id,
-                       CAST(r_dense AS BIGINT) AS r_dense,
-                       CAST(r_sparse AS BIGINT) AS r_sparse,
-                       CAST(coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_dense)) AS BIGINT), 0)
-                          + coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_sparse)) AS BIGINT), 0)
-                         AS BIGINT) AS rrf_micro
-                FROM dense_{qid} FULL OUTER JOIN sparse_{qid} USING (id))"""
-        )
-        fused.append(
-            f"""SELECT query_id, id, r_dense, r_sparse, rrf_micro, rank FROM (
-                SELECT *, CAST(row_number() OVER (
-                    ORDER BY rrf_micro DESC, id ASC) AS BIGINT) AS rank
-                FROM fused_{qid}) WHERE rank <= {_TOPK}"""
-        )
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(fused)
-
-
-@register("retrieval_hybrid_rrf_multi_filtered", _rrf_multi_filtered_oracle())
+@register("retrieval_hybrid_rrf_multi_filtered", _rrf_multi_oracle(filtered=True))
 def retrieval_hybrid_rrf_multi_filtered(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2883,18 +2079,11 @@ def retrieval_hybrid_rrf_multi_filtered(
         _CAND,
         _MULTI_QUERIES,
         _bm25_base,
-        _c_micro,
+        _multi_bm25_scores,
         _multi_terms,
         _rrf_fuse_multi,
     )
 
-    dense = multi_topk_ivfpq(
-        spark, sf_dir, _MULTI_QIDS, k=_CAND, labels=_FILTER_LABELS_MULTI
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("id"),
-        F.col("rank").alias("r_dense"),
-    )
     qt = spark.createDataFrame(
         [
             (qid, t, _FILTER_LANGS_MULTI[qid])
@@ -2903,12 +2092,7 @@ def retrieval_hybrid_rrf_multi_filtered(
         ],
         "query_id int, term string, qlang string",
     )
-    scores = (
-        _bm25_base(spark, sf_dir, _multi_terms())
-        .join(F.broadcast(qt), "term")
-        .filter(F.col("lang") == F.col("qlang"))
-        .select("query_id", "doc_id", _c_micro())
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c_micro").alias("score_micro"))
+    return _rrf_fuse_multi(
+        multi_topk_ivfpq(spark, sf_dir, _MULTI_QIDS, k=_CAND, labels=_FILTER_LABELS_MULTI),
+        _multi_bm25_scores(_bm25_base(spark, sf_dir, _multi_terms()), qt),
     )
-    return _rrf_fuse_multi(dense, scores)

@@ -148,33 +148,57 @@ def _c_micro() -> Column:
 
 
 def _bm25_scores(
-    spark: SparkSession, sf_dir: str, terms: list[str]
+    spark: SparkSession, sf_dir: str, terms: list[str], lang: str | None = None
 ) -> DataFrame:
     """(doc_id, score_micro): integer micro-unit BM25 score of every doc
-    matching ≥1 query term — bucket-pruned postings scan, per-row
-    contribution, ONE exchange (the per-doc sum)."""
-    contrib = _bm25_base(spark, sf_dir, terms).select("doc_id", _c_micro())
-    return contrib.groupBy("doc_id").agg(
+    matching ≥1 query term, only docs in ``lang`` when given (the
+    predicate runs inside the postings scan) — bucket-pruned postings
+    scan, per-row contribution, ONE exchange (the per-doc sum)."""
+    base = _bm25_base(spark, sf_dir, terms)
+    if lang is not None:
+        base = base.filter(F.col("lang") == lang)
+    return base.select("doc_id", _c_micro()).groupBy("doc_id").agg(
         F.sum("c_micro").alias("score_micro")
     )
 
 
-def _bm25_ctes(terms: list[str]) -> str:
-    """The shared oracle CTE chain ending in ``bm(doc_id, score_micro)``."""
+def _multi_bm25_scores(base: DataFrame, qt: DataFrame) -> DataFrame:
+    """(query_id, doc_id, score_micro) of a query batch: the broadcast
+    (query_id, term) frame ``qt`` fans each posting of ``base`` out to
+    the queries holding its term; a ``qlang`` column in ``qt`` keeps
+    only the postings of docs in that query's language."""
+    fan = base.join(F.broadcast(qt), "term")
+    if "qlang" in qt.columns:
+        fan = fan.filter(F.col("lang") == F.col("qlang"))
+    return (
+        fan.select("query_id", "doc_id", _c_micro())
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("c_micro").alias("score_micro"))
+    )
+
+
+def _tf_ctes(terms: list[str]) -> str:
+    """The oracles' tokenization: ``d`` (doc_id, tokens), ``lens``
+    (doc_id, dl) and ``tf`` (doc_id, term, tf) over ``terms``."""
     tl = ", ".join(f"'{t}'" for t in terms)
     return f"""d AS (
       SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
       FROM documents
     ),
     lens AS (SELECT doc_id, len(t) AS dl FROM d),
-    stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-                     AVG(dl) AS avgdl FROM lens),
     tf AS (
       SELECT doc_id, term, count(*) AS tf
       FROM (SELECT doc_id, unnest(t) AS term FROM d)
       WHERE term IN ({tl})
       GROUP BY doc_id, term
-    ),
+    )"""
+
+
+def _bm25_ctes(terms: list[str]) -> str:
+    """The shared oracle CTE chain ending in ``bm(doc_id, score_micro)``."""
+    return f"""{_tf_ctes(terms)},
+    stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
+                     AVG(dl) AS avgdl FROM lens),
     idf AS (
       SELECT term, avgdl,
              ln(1.0 + (n_docs - CAST(count(*) AS DOUBLE) + 0.5)
@@ -234,20 +258,23 @@ _RRF_K = 60      # Cormack et al.'s published constant
 _CAND = 50       # per-list candidate depth feeding the fusion
 
 
-def _rrf_fuse(dense, sparse, keys: list[str]):
-    """Align the two ranked lists on ``keys`` -> (*keys, r_dense,
-    r_sparse) with nulls where a list lacks the id — the RRF fusion's
-    alignment step, as a union + one-exchange group-by instead of a
-    full-outer join (r15: a full outer cannot broadcast, so it cost TWO
-    exchanges plus two sorts for ≤ 2·_CAND rows per query; ids are
+def _rrf_fuse(dense: DataFrame, sparse: DataFrame, keys: list[str]) -> DataFrame:
+    """Align the two ranked lists on ``keys`` and fuse them ->
+    (*keys, r_dense, r_sparse, rrf_micro), with a null rank where a list
+    lacks the id and ``rrf_micro`` the sum of the integer reciprocal-rank
+    terms. The alignment is a union + one-exchange group-by instead of a
+    full-outer join: a full outer join cannot broadcast, so it costs two
+    exchanges plus two sorts for ≤ 2·_CAND rows per query. Ids are
     unique within each list, so max() over the union recovers exactly
-    the outer join's row set — same rows, same nulls, pinned by the
-    unchanged oracles)."""
+    the outer join's row set, same rows and same nulls."""
     d = dense.select(
         *keys, "r_dense", F.lit(None).cast("bigint").alias("r_sparse")
     )
     s = sparse.select(
         *keys, F.lit(None).cast("bigint").alias("r_dense"), "r_sparse"
+    )
+    rr = lambda r: F.coalesce(  # noqa: E731
+        F.round(F.lit(float(_MICRO)) / (_RRF_K + F.col(r))).cast("bigint"), F.lit(0)
     )
     return (
         d.unionByName(s)
@@ -256,95 +283,17 @@ def _rrf_fuse(dense, sparse, keys: list[str]):
             F.max("r_dense").alias("r_dense"),
             F.max("r_sparse").alias("r_sparse"),
         )
+        .select(*keys, "r_dense", "r_sparse", (rr("r_dense") + rr("r_sparse")).alias("rrf_micro"))
     )
 
 
-def _rrf_fuse_multi(dense: DataFrame, scores: DataFrame) -> DataFrame:
-    """The batched RRF tail: rank each query's sparse ``scores``
-    (query_id, doc_id, score_micro) into its top-_CAND ``r_sparse``,
-    align them with the dense (query_id, id, r_dense) list, fuse into
-    integer ``rrf_micro`` and keep each query's top-_TOPK ->
-    (query_id, id, r_dense, r_sparse, rrf_micro, rank)."""
+def _rrf_top(spark: SparkSession, sf_dir: str, dense_cand: DataFrame) -> DataFrame:
+    """The single-query RRF tail: number the ≤_CAND dense candidates
+    (vec_id, sim) and the standing query's BM25 top-_CAND, fuse them and
+    keep the top-_TOPK (id, r_dense, r_sparse, rrf_micro). The numbering
+    windows run on those ≤_CAND-row frames, never on the corpus."""
     from pyspark.sql import Window
 
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    sparse = (
-        scores.withColumn("r_sparse", F.row_number().over(w_s).cast("bigint"))
-        .filter(F.col("r_sparse") <= _CAND)
-        .select("query_id", F.col("doc_id").alias("id"), "r_sparse")
-    )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
-    fused = _rrf_fuse(dense, sparse, ["query_id", "id"]).select(
-        "query_id",
-        "id",
-        "r_dense",
-        "r_sparse",
-        (
-            F.coalesce(rr(F.col("r_dense")), F.lit(0))
-            + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-        ).alias("rrf_micro"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.asc("id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w_f).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank")
-    )
-
-
-def _rrf_oracle() -> str:
-    return f"""
-    WITH {_bm25_ctes(_QUERY_TERMS)},
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    dall AS (
-      SELECT vec_id AS id,
-             row_number() OVER (
-               ORDER BY round(list_cosine_similarity(v, qv), 6) DESC,
-                        vec_id ASC) AS r_dense
-      FROM e CROSS JOIN q
-    ),
-    dense AS (SELECT id, r_dense FROM dall WHERE r_dense <= {_CAND}),
-    sall AS (
-      SELECT doc_id AS id,
-             row_number() OVER (ORDER BY score_micro DESC, doc_id ASC) AS r_sparse
-      FROM bm
-    ),
-    sparse AS (SELECT id, r_sparse FROM sall WHERE r_sparse <= {_CAND})
-    SELECT id, r_dense, r_sparse,
-           CAST(coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_dense)) AS BIGINT), 0)
-              + coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_sparse)) AS BIGINT), 0)
-             AS BIGINT) AS rrf_micro
-    FROM dense FULL OUTER JOIN sparse USING (id)
-    ORDER BY rrf_micro DESC, id ASC
-    LIMIT {_TOPK}
-    """
-
-
-@register("retrieval_hybrid_rrf", _rrf_oracle())
-def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 by reciprocal rank fusion of dense cosine top-50 and BM25
-    top-50 (ranks BIGINT, null where the doc is in one list only)."""
-    from pyspark.sql import Window
-
-    from streaming_data_pipeline_capstone_spark.operators.similarity import cosine
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    as_double = F.transform("embedding", lambda x: x.cast("double"))
-    qv = emb.filter(F.col("vec_id") == 0).select(as_double.alias("qv"))
-    # candidate generation: TakeOrderedAndProject over the corpus; the
-    # row_number below runs on the ≤_CAND-row result, not the corpus
-    dense_cand = (
-        emb.select("vec_id", as_double.alias("v"))
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(_CAND)
-    )
     w_d = Window.partitionBy(F.lit(1)).orderBy(F.desc("sim"), F.asc("vec_id"))
     dense = dense_cand.select(
         F.col("vec_id").alias("id"),
@@ -362,21 +311,100 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         F.row_number().over(w_s).cast("bigint").alias("r_sparse"),
     )
-    rr = lambda r: F.round(F.lit(float(_MICRO)) / (_RRF_K + r)).cast("bigint")  # noqa: E731
     return (
         _rrf_fuse(dense, sparse, ["id"])
-        .select(
-            "id",
-            "r_dense",
-            "r_sparse",
-            (
-                F.coalesce(rr(F.col("r_dense")), F.lit(0))
-                + F.coalesce(rr(F.col("r_sparse")), F.lit(0))
-            ).alias("rrf_micro"),
-        )
         .orderBy(F.desc("rrf_micro"), F.asc("id"))
         .limit(_TOPK)
     )
+
+
+def _rank_per_query(
+    df: DataFrame, score: str, id_col: str, k: int, name: str = "rank"
+) -> DataFrame:
+    """Keep each query's top ``k`` rows of ``df`` by descending
+    ``score``, ties by ascending ``id_col``, numbered 1..k in the bigint
+    column ``name`` — a window partitioned by query_id, so more queries
+    add partitions, not passes."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(id_col))
+    return df.withColumn(name, F.row_number().over(w).cast("bigint")).filter(
+        F.col(name) <= k
+    )
+
+
+def _rrf_fuse_multi(dense: DataFrame, scores: DataFrame) -> DataFrame:
+    """The batched RRF tail: rank each query's sparse ``scores``
+    (query_id, doc_id, score_micro) into its top-_CAND ``r_sparse``,
+    align them with the dense list, fuse into
+    integer ``rrf_micro`` and keep each query's top-_TOPK ->
+    (query_id, id, r_dense, r_sparse, rrf_micro, rank). ``dense`` is the
+    batched ANN pass's (query_id, vec_id, ..., rank)."""
+    dense = dense.select(
+        "query_id", F.col("vec_id").alias("id"), F.col("rank").alias("r_dense")
+    )
+    sparse = _rank_per_query(scores, "score_micro", "doc_id", _CAND, "r_sparse").select(
+        "query_id", F.col("doc_id").alias("id"), "r_sparse"
+    )
+    fused = _rrf_fuse(dense, sparse, ["query_id", "id"])
+    return _rank_per_query(fused, "rrf_micro", "id", _TOPK).select(
+        "query_id", "id", "r_dense", "r_sparse", "rrf_micro", "rank"
+    )
+
+
+_EXACT_DENSE_CTES = f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+    dall AS (
+      SELECT vec_id AS id,
+             row_number() OVER (
+               ORDER BY round(list_cosine_similarity(v, qv), 6) DESC,
+                        vec_id ASC) AS r_dense
+      FROM e CROSS JOIN q
+    ),
+    dense AS (SELECT id, r_dense FROM dall WHERE r_dense <= {_CAND})"""
+
+
+def _rrf_oracle(dense_ctes: str) -> str:
+    """RRF top-_TOPK of the standing query's BM25 top-_CAND and the
+    dense list ``dense(id, r_dense)`` that ``dense_ctes`` defines."""
+    return f"""
+    WITH {dense_ctes},
+    {_bm25_ctes(_QUERY_TERMS)},
+    sall AS (
+      SELECT doc_id AS id,
+             row_number() OVER (ORDER BY score_micro DESC, doc_id ASC) AS r_sparse
+      FROM bm
+    ),
+    sparse AS (SELECT id, r_sparse FROM sall WHERE r_sparse <= {_CAND})
+    SELECT id, CAST(r_dense AS BIGINT) AS r_dense,
+           CAST(r_sparse AS BIGINT) AS r_sparse,
+           CAST(coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_dense)) AS BIGINT), 0)
+              + coalesce(CAST(round({_MICRO}.0 / ({_RRF_K} + r_sparse)) AS BIGINT), 0)
+             AS BIGINT) AS rrf_micro
+    FROM dense FULL OUTER JOIN sparse USING (id)
+    ORDER BY rrf_micro DESC, id ASC
+    LIMIT {_TOPK}
+    """
+
+
+@register("retrieval_hybrid_rrf", _rrf_oracle(_EXACT_DENSE_CTES))
+def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 by reciprocal rank fusion of dense cosine top-50 and BM25
+    top-50 (ranks BIGINT, null where the doc is in one list only)."""
+    from streaming_data_pipeline_capstone_spark.operators.similarity import cosine
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    as_double = F.transform("embedding", lambda x: x.cast("double"))
+    qv = emb.filter(F.col("vec_id") == 0).select(as_double.alias("qv"))
+    # candidate generation: TakeOrderedAndProject over the corpus
+    dense_cand = (
+        emb.select("vec_id", as_double.alias("v"))
+        .crossJoin(F.broadcast(qv))
+        .select("vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim"))
+        .orderBy(F.desc("sim"), F.asc("vec_id"))
+        .limit(_CAND)
+    )
+    return _rrf_top(spark, sf_dir, dense_cand)
 
 
 # -- multi-query BM25: the production decontamination-lookup shape ----------
@@ -406,37 +434,56 @@ def _multi_terms() -> list[str]:
     return sorted({t for ts in _MULTI_QUERIES.values() for t in ts})
 
 
-def _bm25_multi_oracle(topk: int) -> str:
-    qrows = ", ".join(
+def _multi_query_terms(spark: SparkSession) -> DataFrame:
+    """The standing batch as a (query_id, term) frame."""
+    return spark.createDataFrame(
+        [(qid, t) for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts],
+        "query_id int, term string",
+    )
+
+
+def _query_terms_cte() -> str:
+    """The standing batch as the oracle CTE ``q(query_id, term)``."""
+    rows = ", ".join(
         f"({qid}, '{t}')" for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts
     )
-    return f"""
-    WITH {_bm25_ctes(_multi_terms())},
-    q(query_id, term) AS (VALUES {qrows}),
-    qcontrib AS (
-      SELECT q.query_id, tf.doc_id,
-             CAST(round(idf.idf * (tf.tf * {_K1 + 1.0})
-                  / (tf.tf + {_K1} * (1.0 - {_B} + {_B} * CAST(lens.dl AS DOUBLE) / idf.avgdl))
-                  * {_MICRO}.0, 0) AS BIGINT) AS c_micro
-      FROM tf JOIN q USING (term) JOIN idf USING (term) JOIN lens USING (doc_id)
-    ),
+    return f"q(query_id, term) AS (VALUES {rows})"
+
+
+def _multi_bm25_ctes(langs: dict[int, str] | None = None) -> str:
+    """Oracle CTEs ending in ``qbm(query_id, doc_id, score_micro)``: the
+    standing batch's per-query BM25 scores, only of docs in
+    ``langs[query_id]`` when given."""
+    lang_join = ""
+    if langs:
+        rows = ", ".join(f"({qid}, '{lang}')" for qid, lang in sorted(langs.items()))
+        lang_join = f"""
+        JOIN documents doc ON doc.doc_id = tf.doc_id
+        JOIN (VALUES {rows}) lq(query_id, qlang)
+          ON lq.query_id = q.query_id AND doc.lang = lq.qlang"""
+    return f"""{_bm25_ctes(_multi_terms())},
+    {_query_terms_cte()},
     qbm AS (
-      SELECT query_id, doc_id, CAST(SUM(c_micro) AS BIGINT) AS score_micro
-      FROM qcontrib GROUP BY query_id, doc_id
-    ),
-    ranked AS (
-      SELECT query_id, doc_id, score_micro,
-             CAST(row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY score_micro DESC, doc_id ASC) AS BIGINT) AS rank
-      FROM qbm
-    )
-    SELECT query_id, doc_id, score_micro, rank
-    FROM ranked WHERE rank <= {topk}
+      SELECT q.query_id, tf.doc_id, CAST(SUM(
+        CAST(round(idf.idf * (tf.tf * {_K1 + 1.0})
+             / (tf.tf + {_K1} * (1.0 - {_B} + {_B} * CAST(lens.dl AS DOUBLE) / idf.avgdl))
+             * {_MICRO}.0, 0) AS BIGINT)) AS BIGINT) AS score_micro
+      FROM tf JOIN q USING (term) JOIN idf USING (term) JOIN lens USING (doc_id){lang_join}
+      GROUP BY q.query_id, tf.doc_id
+    )"""
+
+
+def _bm25_multi_oracle() -> str:
+    return f"""
+    WITH {_multi_bm25_ctes()}
+    SELECT query_id, doc_id, score_micro, rank FROM (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY score_micro DESC, doc_id ASC) AS BIGINT) AS rank
+      FROM qbm) WHERE rank <= {_TOPK}
     """
 
 
-@register("text_bm25_multi_topk", _bm25_multi_oracle(_TOPK))
+@register("text_bm25_multi_topk", _bm25_multi_oracle())
 def text_bm25_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents per query for the standing 3-query batch (scores
     integer micro-units, per-query rank with doc_id tiebreak). The batch
@@ -444,31 +491,15 @@ def text_bm25_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast (query_id, term) frame fans each surviving posting out
     to the queries containing its term — more queries widen the bucket
     list and add rank-window partitions, never passes."""
-    from pyspark.sql import Window
-
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts],
-        "query_id int, term string",
+    scores = _multi_bm25_scores(
+        _bm25_base(spark, sf_dir, _multi_terms()), _multi_query_terms(spark)
     )
-    contrib = (
-        _bm25_base(spark, sf_dir, _multi_terms())
-        .join(F.broadcast(q), "term")
-        .select("query_id", "doc_id", _c_micro())
-    )
-    scores = contrib.groupBy("query_id", "doc_id").agg(
-        F.sum("c_micro").alias("score_micro")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "doc_id", "score_micro", "rank")
+    return _rank_per_query(scores, "score_micro", "doc_id", _TOPK).select(
+        "query_id", "doc_id", "score_micro", "rank"
     )
 
 
-# -- metadata-filtered BM25: the sparse filter axis (r14) ---------------------
+# -- metadata-filtered BM25: the sparse filter axis ---------------------------
 # The sparse twin of sim_topk_ivfpq_filtered: "top-k BM25 matches AMONG
 # documents satisfying a metadata predicate" (lang-scoped corpus search,
 # per-license retrieval). Scoring statistics stay CORPUS-GLOBAL (df, N,
@@ -497,14 +528,8 @@ def text_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 BM25 documents for the standing query AMONG lang='{lang}'
     documents only — corpus-global statistics, candidate set restricted
     by the in-layout metadata predicate.""".format(lang=_FILTER_LANG)
-    contrib = (
-        _bm25_base(spark, sf_dir, _QUERY_TERMS)
-        .filter(F.col("lang") == _FILTER_LANG)
-        .select("doc_id", _c_micro())
-    )
     return (
-        contrib.groupBy("doc_id")
-        .agg(F.sum("c_micro").alias("score_micro"))
+        _bm25_scores(spark, sf_dir, _QUERY_TERMS, _FILTER_LANG)
         .orderBy(F.desc("score_micro"), F.asc("doc_id"))
         .limit(_TOPK)
     )
@@ -530,38 +555,89 @@ def text_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QLD_MU = 10.0  # Dirichlet pseudo-count, ~ the gate corpus's avgdl
 
 
-def _qld_oracle() -> str:
-    tl = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
+def _qld_oracle(lang: str | None = None, multi: bool = False) -> str:
+    """QLD top-_TOPK of the standing query — only docs in ``lang`` when
+    given — or, with ``multi``, per query of the standing batch."""
+    if multi:
+        terms, keys, qcte = _multi_terms(), "query_id, doc_id", f"{_query_terms_cte()},"
+        cand = "q.query_id, tf.doc_id, lens.dl FROM tf JOIN q USING (term)"
+        grid = "JOIN q USING (query_id) JOIN cf USING (term)"
+        top = f"""SELECT query_id, doc_id, ql_micro, rank FROM (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY ql_micro DESC, doc_id ASC) AS BIGINT) AS rank
+      FROM ql) WHERE rank <= {_TOPK}"""
+    else:
+        terms, keys, qcte = _QUERY_TERMS, "doc_id", ""
+        cand, grid = "tf.doc_id, lens.dl FROM tf", "CROSS JOIN cf"
+        top = f"SELECT doc_id, ql_micro FROM ql ORDER BY ql_micro DESC, doc_id ASC LIMIT {_TOPK}"
+    cand += " JOIN lens USING (doc_id)"
+    if lang is not None:
+        cand += f" JOIN documents dd ON tf.doc_id = dd.doc_id AND dd.lang = '{lang}'"
     return f"""
-    WITH d AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    lens AS (SELECT doc_id, len(t) AS dl FROM d),
-    tf AS (
-      SELECT doc_id, term, count(*) AS tf
-      FROM (SELECT doc_id, unnest(t) AS term FROM d)
-      WHERE term IN ({tl})
-      GROUP BY doc_id, term
-    ),
+    WITH {_tf_ctes(terms)}, {qcte}
     cf AS (SELECT term, CAST(SUM(tf) AS DOUBLE) AS cf FROM tf GROUP BY term),
     c AS (SELECT CAST(SUM(dl) AS DOUBLE) AS c FROM lens),
-    cand AS (SELECT DISTINCT tf.doc_id, lens.dl FROM tf JOIN lens USING (doc_id)),
-    grid AS (SELECT cand.doc_id, cand.dl, cf.term, cf.cf FROM cand CROSS JOIN cf),
+    cand AS (SELECT DISTINCT {cand}),
+    grid AS (SELECT cand.*, cf.term, cf.cf FROM cand {grid}),
     contrib AS (
-      SELECT g.doc_id,
+      SELECT {", ".join("g." + k for k in keys.split(", "))},
              CAST(round(ln((COALESCE(tf.tf, 0) + {_QLD_MU} * g.cf / c.c)
                            / (g.dl + {_QLD_MU})) * {_MICRO}.0, 0) AS BIGINT) AS c_micro
       FROM grid g LEFT JOIN tf ON g.doc_id = tf.doc_id AND g.term = tf.term, c
     ),
     ql AS (
-      SELECT doc_id, CAST(SUM(c_micro) AS BIGINT) AS ql_micro
-      FROM contrib GROUP BY doc_id
+      SELECT {keys}, CAST(SUM(c_micro) AS BIGINT) AS ql_micro
+      FROM contrib GROUP BY {keys}
     )
-    SELECT doc_id, ql_micro FROM ql
-    ORDER BY ql_micro DESC, doc_id ASC
-    LIMIT {_TOPK}
+    {top}
     """
+
+
+def _qld_scores(
+    spark: SparkSession,
+    sf_dir: str,
+    terms: list[str],
+    lang: str | None = None,
+    qt: DataFrame | None = None,
+) -> DataFrame:
+    """Dirichlet query likelihood from the postings layout: (doc_id,
+    ql_micro) over the docs matching ≥1 of ``terms`` (only those in
+    ``lang`` when given; the predicate runs inside the postings scan),
+    or, with the (query_id, term) batch frame ``qt``, (query_id, doc_id,
+    ql_micro) per query."""
+    from streaming_data_pipeline_capstone_spark.operators.text_layout import (
+        ensure_postings_layout,
+        read_postings,
+    )
+
+    meta = ensure_postings_layout(spark, sf_dir)
+    post = read_postings(spark, meta, terms)
+    cf = post.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
+    cand = post if lang is None else post.filter(F.col("lang") == lang)
+    if qt is None:
+        keys = ["doc_id"]
+        grid = cand.select("doc_id", "dl").distinct().crossJoin(F.broadcast(cf))
+    else:
+        keys = ["query_id", "doc_id"]
+        cand = cand.join(F.broadcast(qt), "term").select("query_id", "doc_id", "dl")
+        grid = cand.distinct().join(F.broadcast(qt.join(cf, "term")), "query_id")
+    tfd = F.coalesce(F.col("tf"), F.lit(0)).cast("double")
+    contrib = grid.join(
+        post.select("doc_id", "term", "tf"), ["doc_id", "term"], "left"
+    ).select(
+        *keys,
+        F.round(
+            F.log(
+                (tfd + _QLD_MU * F.col("cf") / F.lit(float(meta["sum_dl"])))
+                / (F.col("dl").cast("double") + _QLD_MU)
+            )
+            * _MICRO,
+            0,
+        )
+        .cast("bigint")
+        .alias("c_micro"),
+    )
+    return contrib.groupBy(*keys).agg(F.sum("c_micro").alias("ql_micro"))
 
 
 @register("text_qld_topk", _qld_oracle())
@@ -569,39 +645,8 @@ def text_qld_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents by Dirichlet query likelihood (integer micro-nat
     scores) for the standing query, served from the postings layout —
     candidates x |Q| grid, zero corpus scans."""
-    from streaming_data_pipeline_capstone_spark.operators.text_layout import (
-        ensure_postings_layout,
-        read_postings,
-    )
-
-    meta = ensure_postings_layout(spark, sf_dir)
-    post = read_postings(spark, meta, _QUERY_TERMS)
-    c_total = float(meta["sum_dl"])
-    cf = post.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
-    cand = post.select("doc_id", "dl").distinct()
-    grid = cand.crossJoin(F.broadcast(cf))
-    tfd = F.coalesce(F.col("tf"), F.lit(0)).cast("double")
-    contrib = (
-        grid.join(
-            post.select("doc_id", "term", "tf"), ["doc_id", "term"], "left"
-        )
-        .select(
-            "doc_id",
-            F.round(
-                F.log(
-                    (tfd + _QLD_MU * F.col("cf") / F.lit(c_total))
-                    / (F.col("dl").cast("double") + _QLD_MU)
-                )
-                * _MICRO,
-                0,
-            )
-            .cast("bigint")
-            .alias("c_micro"),
-        )
-    )
     return (
-        contrib.groupBy("doc_id")
-        .agg(F.sum("c_micro").alias("ql_micro"))
+        _qld_scores(spark, sf_dir, _QUERY_TERMS)
         .orderBy(F.desc("ql_micro"), F.asc("doc_id"))
         .limit(_TOPK)
     )
@@ -620,199 +665,34 @@ def text_qld_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # evaluates inside the pruned postings scan (lang rides in the row).
 
 
-def _qld_multi_oracle() -> str:
-    tl = ", ".join(f"'{t}'" for t in _multi_terms())
-    qrows = ", ".join(
-        f"({qid}, '{t}')" for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts
-    )
-    return f"""
-    WITH d AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    lens AS (SELECT doc_id, len(t) AS dl FROM d),
-    tf AS (
-      SELECT doc_id, term, count(*) AS tf
-      FROM (SELECT doc_id, unnest(t) AS term FROM d)
-      WHERE term IN ({tl})
-      GROUP BY doc_id, term
-    ),
-    q(query_id, term) AS (VALUES {qrows}),
-    cf AS (SELECT term, CAST(SUM(tf) AS DOUBLE) AS cf FROM tf GROUP BY term),
-    c AS (SELECT CAST(SUM(dl) AS DOUBLE) AS c FROM lens),
-    cand AS (
-      SELECT DISTINCT q.query_id, tf.doc_id, lens.dl
-      FROM tf JOIN q USING (term) JOIN lens USING (doc_id)
-    ),
-    qcf AS (SELECT q.query_id, q.term, cf.cf FROM q JOIN cf USING (term)),
-    grid AS (
-      SELECT cand.query_id, cand.doc_id, cand.dl, qcf.term, qcf.cf
-      FROM cand JOIN qcf USING (query_id)
-    ),
-    contrib AS (
-      SELECT g.query_id, g.doc_id,
-             CAST(round(ln((COALESCE(tf.tf, 0) + {_QLD_MU} * g.cf / c.c)
-                           / (g.dl + {_QLD_MU})) * {_MICRO}.0, 0) AS BIGINT) AS c_micro
-      FROM grid g LEFT JOIN tf ON g.doc_id = tf.doc_id AND g.term = tf.term, c
-    ),
-    ql AS (
-      SELECT query_id, doc_id, CAST(SUM(c_micro) AS BIGINT) AS ql_micro
-      FROM contrib GROUP BY query_id, doc_id
-    ),
-    ranked AS (
-      SELECT query_id, doc_id, ql_micro,
-             CAST(row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY ql_micro DESC, doc_id ASC) AS BIGINT) AS rank
-      FROM ql
-    )
-    SELECT query_id, doc_id, ql_micro, rank
-    FROM ranked WHERE rank <= {_TOPK}
-    """
-
-
-@register("text_qld_multi_topk", _qld_multi_oracle())
+@register("text_qld_multi_topk", _qld_oracle(multi=True))
 def text_qld_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 per query by Dirichlet query likelihood for the standing
     3-query batch — (query_id, doc_id, ql_micro, rank) through ONE
     bucket-pruned probe of the union terms; the qid=0 slice is pinned
     identical to text_qld_topk in tests."""
-    from pyspark.sql import Window
-
-    from streaming_data_pipeline_capstone_spark.operators.text_layout import (
-        ensure_postings_layout,
-        read_postings,
+    scores = _qld_scores(
+        spark, sf_dir, _multi_terms(), qt=_multi_query_terms(spark)
     )
-
-    meta = ensure_postings_layout(spark, sf_dir)
-    post = read_postings(spark, meta, _multi_terms())
-    c_total = float(meta["sum_dl"])
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in sorted(_MULTI_QUERIES.items()) for t in ts],
-        "query_id int, term string",
-    )
-    cf = post.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
-    qcf = q.join(cf, "term")  # |Σ query terms| rows — broadcast below
-    cand = (
-        post.join(F.broadcast(q), "term")
-        .select("query_id", "doc_id", "dl")
-        .distinct()
-    )
-    grid = cand.join(F.broadcast(qcf), "query_id")
-    tfd = F.coalesce(F.col("tf"), F.lit(0)).cast("double")
-    contrib = grid.join(
-        post.select("doc_id", "term", "tf"), ["doc_id", "term"], "left"
-    ).select(
-        "query_id",
-        "doc_id",
-        F.round(
-            F.log(
-                (tfd + _QLD_MU * F.col("cf") / F.lit(c_total))
-                / (F.col("dl").cast("double") + _QLD_MU)
-            )
-            * _MICRO,
-            0,
-        )
-        .cast("bigint")
-        .alias("c_micro"),
-    )
-    scores = contrib.groupBy("query_id", "doc_id").agg(
-        F.sum("c_micro").alias("ql_micro")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("ql_micro"), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "doc_id", "ql_micro", "rank")
+    return _rank_per_query(scores, "ql_micro", "doc_id", _TOPK).select(
+        "query_id", "doc_id", "ql_micro", "rank"
     )
 
 
-def _qld_filtered_oracle() -> str:
-    tl = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
-    return f"""
-    WITH d AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-      FROM documents
-    ),
-    lens AS (SELECT doc_id, len(t) AS dl FROM d),
-    tf AS (
-      SELECT doc_id, term, count(*) AS tf
-      FROM (SELECT doc_id, unnest(t) AS term FROM d)
-      WHERE term IN ({tl})
-      GROUP BY doc_id, term
-    ),
-    cf AS (SELECT term, CAST(SUM(tf) AS DOUBLE) AS cf FROM tf GROUP BY term),
-    c AS (SELECT CAST(SUM(dl) AS DOUBLE) AS c FROM lens),
-    cand AS (
-      SELECT DISTINCT tf.doc_id, lens.dl
-      FROM tf JOIN lens USING (doc_id)
-      JOIN documents dd ON tf.doc_id = dd.doc_id AND dd.lang = '{_FILTER_LANG}'
-    ),
-    grid AS (SELECT cand.doc_id, cand.dl, cf.term, cf.cf FROM cand CROSS JOIN cf),
-    contrib AS (
-      SELECT g.doc_id,
-             CAST(round(ln((COALESCE(tf.tf, 0) + {_QLD_MU} * g.cf / c.c)
-                           / (g.dl + {_QLD_MU})) * {_MICRO}.0, 0) AS BIGINT) AS c_micro
-      FROM grid g LEFT JOIN tf ON g.doc_id = tf.doc_id AND g.term = tf.term, c
-    ),
-    ql AS (
-      SELECT doc_id, CAST(SUM(c_micro) AS BIGINT) AS ql_micro
-      FROM contrib GROUP BY doc_id
-    )
-    SELECT doc_id, ql_micro FROM ql
-    ORDER BY ql_micro DESC, doc_id ASC
-    LIMIT {_TOPK}
-    """
-
-
-@register("text_qld_filtered_topk", _qld_filtered_oracle())
+@register("text_qld_filtered_topk", _qld_oracle(_FILTER_LANG))
 def text_qld_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 by Dirichlet query likelihood AMONG lang='{lang}' documents
     only — collection statistics (cf, |C|) stay corpus-global, the
     candidate set is restricted by the in-layout metadata predicate
     evaluated inside the pruned postings scan.""".format(lang=_FILTER_LANG)
-    from streaming_data_pipeline_capstone_spark.operators.text_layout import (
-        ensure_postings_layout,
-        read_postings,
-    )
-
-    meta = ensure_postings_layout(spark, sf_dir)
-    post = read_postings(spark, meta, _QUERY_TERMS)
-    c_total = float(meta["sum_dl"])
-    cf = post.groupBy("term").agg(F.sum("tf").cast("double").alias("cf"))
-    cand = (
-        post.filter(F.col("lang") == _FILTER_LANG)
-        .select("doc_id", "dl")
-        .distinct()
-    )
-    grid = cand.crossJoin(F.broadcast(cf))
-    tfd = F.coalesce(F.col("tf"), F.lit(0)).cast("double")
-    contrib = grid.join(
-        post.select("doc_id", "term", "tf"), ["doc_id", "term"], "left"
-    ).select(
-        "doc_id",
-        F.round(
-            F.log(
-                (tfd + _QLD_MU * F.col("cf") / F.lit(c_total))
-                / (F.col("dl").cast("double") + _QLD_MU)
-            )
-            * _MICRO,
-            0,
-        )
-        .cast("bigint")
-        .alias("c_micro"),
-    )
     return (
-        contrib.groupBy("doc_id")
-        .agg(F.sum("c_micro").alias("ql_micro"))
+        _qld_scores(spark, sf_dir, _QUERY_TERMS, _FILTER_LANG)
         .orderBy(F.desc("ql_micro"), F.asc("doc_id"))
         .limit(_TOPK)
     )
 
 
-# -- streaming postings-index ingestion (r14) ---------------------------------
+# -- streaming postings-index ingestion ---------------------------------------
 # The sparse twin of stream_ann_index_ingest: documents replayed as a
 # real Structured Streaming job land per-batch postings epochs + additive
 # corpus-stat epochs; the standing BM25 query answered FROM the streamed

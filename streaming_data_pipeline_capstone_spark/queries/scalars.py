@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from streaming_data_pipeline_capstone_spark.functions.cleaning import null_sentinels, rot_decode
+from streaming_data_pipeline_capstone_spark.functions.cleaning import rot_decode
 from streaming_data_pipeline_capstone_spark.functions.geo import ecef_x, ecef_y, haversine_km, wkt_point_lonlat
 from streaming_data_pipeline_capstone_spark.registry import register
 from streaming_data_pipeline_capstone_spark.schemas import format_ts_z, parse_ts_z

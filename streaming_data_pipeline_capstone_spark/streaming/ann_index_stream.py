@@ -49,13 +49,7 @@ def streaming_index_ingest(
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         append_cell_epoch(
-            batch.sparkSession,
-            batch,
-            index_path,
-            centroids,
-            pq_books,
-            pq_sub_dim,
-            int(epoch_id),
+            batch, index_path, centroids, pq_books, pq_sub_dim, int(epoch_id)
         )
 
     return for_each_batch(stream_vecs, handle, checkpoint_dir, available_now=True)

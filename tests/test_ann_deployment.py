@@ -411,8 +411,6 @@ def test_multi_query_probe_slice_matches_single(spark, sf_oracle):
     """sim_topk_ivfpq_multi batches through one pruned pass; its qid=0
     slice must be exactly sim_topk_ivfpq_rerank_pruned's output, and every
     query in the batch must return a full non-degenerate top-10."""
-    from pyspark.sql import functions as F
-
     from streaming_data_pipeline_capstone_spark.queries.extras import (
         _MULTI_QIDS,
         sim_topk_ivfpq_multi,
@@ -447,7 +445,6 @@ def test_filtered_probe_respects_predicate_and_prunes(spark, sf_oracle):
 
     from streaming_data_pipeline_capstone_spark.queries.extras import (
         _FILTER_LABEL,
-        _double_vecs,
         sim_topk_ivfpq_filtered,
     )
     from streaming_data_pipeline_capstone_spark.sources.readers import read_table
@@ -523,7 +520,7 @@ def test_incremental_index_appends_idempotent_and_pruned(spark, sf_oracle):
     emb = read_table(spark, sf_oracle, "embeddings")
     delta = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
     append_cell_epoch(
-        spark, delta, path, KMEANS_CENTROIDS, _BOOKS, _PQ_SUB_DIM, 1
+        delta, path, KMEANS_CENTROIDS, _BOOKS, _PQ_SUB_DIM, 1
     )
     assert spark.read.parquet(path).count() == n_before
     assert [tuple(r) for r in sim_topk_ivfpq_rerank_incr(spark, sf_oracle).collect()] == want
@@ -782,7 +779,6 @@ def test_pandas_encode_bit_identical_to_expression_encode(spark):
         _encode_batches,
     )
     from streaming_data_pipeline_capstone_spark.operators.similarity import (
-        assign_cells,
         assign_cells_topn,
         pq_encode_cols,
     )

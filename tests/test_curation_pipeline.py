@@ -321,8 +321,6 @@ def test_unplanted_funnel_keeps_the_plant_carriers(spark, sf_oracle):
 def test_funnel_stage_membership_matches_stage_queries(spark, sf_oracle):
     """A document survives the funnel iff it passes every individual
     stage query — the composition adds no semantics of its own."""
-    from pyspark.sql import functions as F
-
     from streaming_data_pipeline_capstone_spark.queries.curation import (
         _EVAL_MOD,
         _survivors,

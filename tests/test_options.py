@@ -15,6 +15,10 @@ AST walk over those trees:
 Matching by name alone errs towards "passed", so a hit here is a real
 single-valued option. The only exempt ones are the Kafka broker address
 and start offsets: deployment settings whose defaults suit one machine.
+
+A second walk over the package, ``tools/`` and ``tests/`` finds imports
+that nothing reads, per module and per function; no linter runs on this
+tree, so this is the only check for them.
 """
 
 from __future__ import annotations
@@ -115,3 +119,62 @@ def test_every_optional_parameter_is_passed_somewhere():
 
 def test_deployment_settings_are_still_defaulted_and_unset():
     assert DEPLOYMENT_SETTINGS <= set(never_passed())
+
+
+def _scope_imports(scope: ast.AST) -> list[ast.Import | ast.ImportFrom]:
+    """Import statements of ``scope`` itself, not of nested defs."""
+    out, stack = [], list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)):
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            out.append(node)
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def unused_imports() -> list[str]:
+    """``path:line:scope:name`` for each name a module or function
+    imports and never reads (nested defs count as reads of their
+    enclosing scope). ``__all__`` entries count as reads; ``# noqa: F401``
+    on the statement marks a deliberate side-effect import."""
+    out = []
+    for root in [PKG, ROOT / "tools", ROOT / "tests", ROOT / "__spark_entry__.py"]:
+        for path in _py_files(root):
+            src = path.read_text()
+            lines = src.splitlines()
+            tree = ast.parse(src)
+            exported = {
+                elt.value
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+                for elt in node.value.elts
+            }
+            scopes = [tree] + [
+                n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for scope in scopes:
+                read = {
+                    n.id
+                    for n in ast.walk(scope)
+                    if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+                }
+                for imp in _scope_imports(scope):
+                    if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
+                        continue
+                    if any("noqa: F401" in ln for ln in lines[imp.lineno - 1 : imp.end_lineno]):
+                        continue
+                    for alias in imp.names:
+                        name = (alias.asname or alias.name).split(".")[0]
+                        if name not in read and name not in exported:
+                            where = getattr(scope, "name", "<module>")
+                            rel = path.relative_to(ROOT).as_posix()
+                            out.append(f"{rel}:{imp.lineno}:{where}:{name}")
+    return out
+
+
+def test_no_unused_imports():
+    hits = unused_imports()
+    assert not hits, f"{len(hits)} import(s) that nothing reads:\n  " + "\n  ".join(hits)

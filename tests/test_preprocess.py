@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from streaming_data_pipeline_capstone_spark.plans.preprocess import (
     kinematic_aggs,
     preprocess_from_envelope,

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from streaming_data_pipeline_capstone_spark.operators.joins import asof_join
 
 

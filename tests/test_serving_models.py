@@ -97,14 +97,18 @@ def toy_corpus(spark, tmp_path):
                 shutil.rmtree(os.path.join(_LAYOUT_ROOT, name), ignore_errors=True)
 
 
-def _brute_topk(spark, d, qid, k=10):
+def _brute_topk(spark, d, qid, k=10, label=None):
     from streaming_data_pipeline_capstone_spark.operators.similarity import cosine
 
     emb = spark.read.parquet(d + "/embeddings.parquet").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        "vec_id",
+        "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     q = [float(x) for x in emb.filter(F.col("vec_id") == qid).head()["v"]]
     qcol = F.array(*[F.lit(x) for x in q])
+    if label is not None:
+        emb = emb.filter(F.col("label") == label)
     return (
         emb.select(
             "vec_id", F.round(cosine(F.col("v"), qcol), 6).alias("cosine_sim")
@@ -119,12 +123,18 @@ def test_repointed_probe_exact_at_full_probe_breadth(spark, toy_corpus):
     """Repointed corpus: model resolves from the artifact, the layout is
     built at the model-tagged path with the model's spill, and the
     pruned rerank probe returns exact brute-force top-10 (all cells
-    probed, rerank >= corpus) with no duplicate ids from the spill."""
+    probed, rerank >= corpus) with no duplicate ids from the spill. The
+    spill gate query and the label-filtered probe serve through the same
+    spilled layout and are exact too, the filtered one among the 40
+    label-3 rows."""
     from streaming_data_pipeline_capstone_spark.queries.extras import (
+        _FILTER_LABEL,
         _serving_layout,
         _serving_model,
         sim_topk_ivf_pruned,
+        sim_topk_ivfpq_filtered,
         sim_topk_ivfpq_rerank_pruned,
+        sim_topk_ivfpq_rerank_spill,
     )
 
     m = _serving_model(toy_corpus)
@@ -142,6 +152,19 @@ def test_repointed_probe_exact_at_full_probe_breadth(spark, toy_corpus):
     # full-precision IVF probe at full breadth is exact too
     got_ivf = [tuple(r) for r in sim_topk_ivf_pruned(spark, toy_corpus).collect()]
     assert got_ivf == expect
+    got_spill = [
+        tuple(r) for r in sim_topk_ivfpq_rerank_spill(spark, toy_corpus).collect()
+    ]
+    assert got_spill == expect
+    assert _FILTER_LABEL == 3
+    expect_flt = [
+        (v, 3, c) for v, c in _brute_topk(spark, toy_corpus, 0, label=3)
+    ]
+    got_flt = [
+        tuple(r) for r in sim_topk_ivfpq_filtered(spark, toy_corpus).collect()
+    ]
+    assert got_flt == expect_flt
+    assert len({v for v, _, _ in got_flt}) == 10
 
 
 def test_repointed_batch_probe_exact_and_dedup(spark, toy_corpus):

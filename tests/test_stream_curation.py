@@ -234,8 +234,6 @@ def test_dedup_stream_index_reads_are_bucket_pruned(spark, tmp_path):
     )
     from streaming_data_pipeline_capstone_spark.index_store import read_index
     from streaming_data_pipeline_capstone_spark.streaming.dedup_stream import (
-        _bh_bucket,
-        _doc_bucket,
         streaming_minhash_dedup,
     )
 

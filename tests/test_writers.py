@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_capstone_spark.sources.readers import read_table
